@@ -25,25 +25,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from jobs.build_zip import build  # noqa: E402
+
 ZIP = os.path.join(REPO, "dist", "deduplicate_spark.zip")
-
-
-def build_zip() -> str:
-    """(Re)build the --py-files artifact from the WORKING TREE at startup —
-    a committed zip silently drifts from source (ADVICE r2: executors would
-    benchmark stale kernels)."""
-    import zipfile
-
-    os.makedirs(os.path.dirname(ZIP), exist_ok=True)
-    pkg_root = os.path.join(REPO, "deduplicate_spark")
-    with zipfile.ZipFile(ZIP, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            for fn in sorted(filenames):
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                zf.write(full, os.path.relpath(full, REPO))
-    return ZIP
 
 
 def materialize_input(sf_dir: str, replicate: int, out_path: str) -> int:
@@ -131,7 +115,7 @@ def main() -> None:
     ap.add_argument("--skip-materialize", action="store_true")
     args = ap.parse_args()
 
-    build_zip()  # always ship the working tree, never a stale artifact
+    build(ZIP)  # always ship the working tree, never a stale artifact
 
     if args.skip_materialize and os.path.exists(args.input_cache):
         from deduplicate_spark.session import get_spark

@@ -1,50 +1,85 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float|double>).
 
-Two paths:
-  * brute-force cosine top-k — exact baseline; broadcast the query set,
-    native zip_with/aggregate dot products, window top-k. O(N*Q) but fully
-    JVM-side and embarrassingly parallel: correct choice when Q is small.
+Every cosine here is computed by numpy kernels over whole Arrow batches
+(``mapInArrow``): a batch's vector column is read as one ``(n, dim)``
+float64 matrix (:func:`_vector_matrix`), never as per-row Python objects.
+Dot products and norms fold over index 0..d-1 left to right — the
+summation order of Spark's ``aggregate`` higher-order function — so each
+cosine is bit-identical to the expression the kernels replaced, and the
+DuckDB oracles see the same ranks and threshold decisions.
+
+Paths:
+  * brute-force cosine top-k — exact baseline; the small query set rides
+    in the kernel closure, each corpus batch is scored against all of it
+    and only its per-batch top-k reaches the final window. O(N*Q).
   * LSH-bucketed ANN (random hyperplane / SRP) — a scale path: docs and
     queries hash to sign-pattern buckets; candidates = bucket collisions
-    across any of ``n_tables`` hash tables; exact cosine re-rank on
-    candidates only. Sub-linear candidate volume at 100 TB scale, tunable
-    recall via (n_tables, n_bits).
+    across any of ``n_tables`` hash tables; exact cosine re-rank of the
+    candidate pairs only (:func:`_pair_cosine`). Tunable recall via
+    (n_tables, n_bits).
   * IVF-partitioned ANN — the other scale path: a tiny coarse-centroid
-    table partitions the corpus into inverted-file cells (zero-shuffle
-    literal projection, or a matmul kernel for large cell counts); each
-    query probes its ``nprobe`` nearest cells and re-ranks exactly only
-    inside them. Deterministic smallest-id quantizer for oracle-able
-    tests; k-means|| (Spark ML, sampled) for production.
+    table partitions the corpus into inverted-file cells; each query probes
+    its ``nprobe`` nearest cells and re-ranks exactly only inside them, all
+    in one narrow pass over the corpus. Deterministic smallest-id
+    quantizer for oracle-able tests; seeded k-means++ over a bounded
+    sample for production.
+  * embedding near-duplicate pairs — SRP buckets grouped once, pairs
+    scored by the same pair kernel and filtered on a cosine threshold.
 
-The hyperplane projection is a vectorized pandas UDF (numpy matmul over
-Arrow batches); everything relational stays native.
+Malformed vectors follow one rule everywhere: a null vector is dropped
+before hashing or scoring (no bucket, no pair, no neighbour); a vector
+whose length is not the expected dimension raises a ``ValueError`` that
+names its id.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+
+# brute_force_topk / ivf_topk collect the query set to the driver and ship
+# it in every task's kernel closure: the query side must be small. Above
+# this many rows they refuse with QuerySetTooLarge instead of exhausting
+# driver or executor memory.
+MAX_QUERIES = 50_000
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+class QuerySetTooLarge(ValueError):
+    """The query set of a driver-collected top-k exceeds ``MAX_QUERIES``."""
 
 
-def _norm(c: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    """Native cosine similarity between two array<double> columns."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _vector_matrix(batch, id_col: str, vec_col: str, dim: int | None = None):
+    """(batch, (n, dim) float64 matrix) of an Arrow RecordBatch or Table:
+    rows whose ``vec_col`` is null are dropped from both; a vector whose
+    length is not ``dim`` (default: the first vector's length) raises a
+    ValueError naming its ``id_col`` value. The matrix is read from the
+    flattened list values, with no per-row Python objects."""
+    vecs = batch[vec_col]
+    if vecs.null_count:
+        batch = batch.filter(pc.is_valid(vecs))
+        vecs = batch[vec_col]
+    lens = np.asarray(pc.list_value_length(vecs))
+    if dim is None:
+        dim = int(lens[0]) if len(lens) else 0
+    bad = np.flatnonzero(lens != dim)
+    if bad.size:
+        i = int(bad[0])
+        raise ValueError(
+            f"vector {id_col}={batch[id_col][i].as_py()!r} has length "
+            f"{lens[i]}, expected {dim}"
+        )
+    flat = np.asarray(pc.list_flatten(vecs), dtype=np.float64)
+    return batch, flat.reshape(len(lens), dim)
 
 
 def _foldorder_sq_norms(mat: np.ndarray) -> np.ndarray:
-    """sqrt of the LEFT-FOLD sum of squares per row — the exact summation
-    order of :func:`_norm` (``F.aggregate`` folds the array left-to-right),
-    so the result is bit-identical to the JVM expression."""
+    """sqrt of the LEFT-FOLD sum of squares per row — the summation order
+    of Spark's ``aggregate`` (it folds the array left-to-right), so the
+    result is bit-identical to the JVM expression."""
     acc = np.zeros(mat.shape[0])
     for i in range(mat.shape[1]):
         acc = acc + mat[:, i] * mat[:, i]
@@ -64,10 +99,10 @@ def _foldorder_cosine_matrix(
     mat: np.ndarray, qmat: np.ndarray, qnorm: np.ndarray | None = None
 ) -> np.ndarray:
     """(rows x queries) cosine matrix with the EXACT left-fold summation
-    order of :func:`cosine_sim` — dot folds products index 0..d-1, the
-    denominator is norm(q) * norm(v) — so every value is bit-identical to
-    the higher-order-function column this replaces (guide §4.2: same math,
-    vectorized in numpy instead of interpreted per array element)."""
+    order of Spark's fold-expression cosine — dot folds products index
+    0..d-1, the denominator is norm(q) * norm(v) — so every value is
+    bit-identical to it (same math, vectorized in numpy instead of
+    interpreted per array element)."""
     b, d = mat.shape
     q = qmat.shape[0]
     dot = np.empty((b, q))
@@ -88,6 +123,63 @@ def _foldorder_cosine_matrix(
         qnorm = _foldorder_sq_norms(qmat)
     with np.errstate(divide="ignore", invalid="ignore"):
         return dot / (qnorm[None, :] * vnorm[:, None])
+
+
+def _pair_cosine(
+    pairs: DataFrame, a: str, b: str, dim: int, threshold: float | None = None
+) -> DataFrame:
+    """(a, b, cosine) for each row of ``pairs`` (a, b, _va, _vb), scored in
+    one mapInArrow kernel: both vector columns are read as (n, dim)
+    matrices and dot, |a| and |b| fold over index 0..d-1, so each cosine
+    is bit-identical to Spark's fold-expression cosine. With a
+    ``threshold`` only rows with ``cosine >= threshold`` are emitted; a
+    NaN cosine (zero vector) never passes it."""
+
+    def kernel(batches):
+        for batch in batches:
+            va, vb = batch["_va"], batch["_vb"]
+            if va.null_count or vb.null_count:
+                batch = batch.filter(pc.and_(pc.is_valid(va), pc.is_valid(vb)))
+            batch, ma = _vector_matrix(batch, a, "_va", dim)
+            batch, mb = _vector_matrix(batch, b, "_vb", dim)
+            dot = np.zeros(batch.num_rows)
+            for i in range(dim):
+                dot += ma[:, i] * mb[:, i]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dot / (_foldorder_sq_norms(ma) * _foldorder_sq_norms(mb))
+            if threshold is not None:
+                keep = cos >= threshold
+                batch, cos = batch.filter(keep), cos[keep]
+            yield pa.RecordBatch.from_arrays(
+                [batch[a], batch[b], pa.array(cos)], names=[a, b, "cosine"]
+            )
+
+    a_t = pairs.schema[a].dataType.simpleString()
+    b_t = pairs.schema[b].dataType.simpleString()
+    return pairs.select(a, b, "_va", "_vb").mapInArrow(
+        kernel, f"{a} {a_t}, {b} {b_t}, cosine double"
+    )
+
+
+def _collect_queries(
+    queries: DataFrame, query_id_col: str, vec_col: str, dim: int | None = None
+):
+    """Driver-side (query ids, (Q, dim) float64 matrix) of a small query set
+    — at most ``MAX_QUERIES`` rows, else :class:`QuerySetTooLarge`. Null
+    query vectors are dropped; ragged ones raise (:func:`_vector_matrix`)."""
+    tbl = (
+        queries.select(F.col(query_id_col), F.col(vec_col).cast("array<double>"))
+        .limit(MAX_QUERIES + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > MAX_QUERIES:
+        raise QuerySetTooLarge(
+            f"query set has more than {MAX_QUERIES} rows; this top-k collects "
+            "its queries to the driver and needs a small query side"
+        )
+    tbl, qmat = _vector_matrix(tbl, query_id_col, vec_col, dim)
+    qids = tbl[query_id_col]
+    return np.asarray(qids), qids.type, qmat
 
 
 def _batch_topk_frames(
@@ -123,6 +215,55 @@ def _batch_topk_frames(
     return qids[qi], ids[ri], cos[ri, qi]
 
 
+def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
+    """rnk 1..k per q_id of (q_id, neighbor_id, cosine) rows, ordered by
+    cosine DESC, then neighbor_id ASC."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def _corpus_topk(
+    vectors: DataFrame, id_col: str, vec_col: str, queries: tuple, k: int, score
+) -> DataFrame:
+    """Shared pass of the driver-collected top-k paths: every corpus batch
+    is read as an (n, dim) matrix and ``score(ids, mat)`` returns its
+    (q_id, neighbor_id, cosine) candidates — at least each query's
+    batch-local top-k, ties included — in ONE narrow mapInArrow pass; the
+    final window ranks them. Every global top-k row is top-k within its
+    own batch, so the reduction is lossless. ``queries`` is the
+    (ids, arrow type, matrix) triple of :func:`_collect_queries`."""
+    qids, q_type, qmat = queries
+
+    def kernel(batches):
+        for batch in batches:
+            if not len(qids):
+                continue
+            batch, mat = _vector_matrix(batch, id_col, vec_col, qmat.shape[1])
+            if batch.num_rows == 0:
+                continue
+            q, nid, cos = score(np.asarray(batch[id_col]), mat)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q, q_type),
+                    pa.array(nid, batch[id_col].type),
+                    pa.array(cos, pa.float64()),
+                ],
+                names=["q_id", "neighbor_id", "cosine"],
+            )
+
+    q_t = from_arrow_type(q_type).simpleString()
+    v_t = vectors.schema[id_col].dataType.simpleString()
+    src = vectors.select(F.col(id_col), vec_col)
+    # parallelism floor: a bench-scale corpus is one parquet split, which
+    # would run the kernel on one core; at real scale the scan already has
+    # >= cores splits and takes no extra exchange
+    want = vectors.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < want:
+        src = src.repartition(want)
+    scored = src.mapInArrow(kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double")
+    return _ranked_topk(scored, k)
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -135,66 +276,29 @@ def brute_force_topk(
     """Exact top-k cosine neighbors for each query row.
 
     vectors(id_col, vec_col) x queries(query_id_col, vec_col) ->
-    (q_id, neighbor_id, cosine, rnk). The query set rides into a
-    mapInPandas kernel closure (it was broadcast before — same memory
-    class); the corpus side stays a narrow, shuffle-free scan. The kernel
-    scores a whole Arrow batch against all queries with fold-order-exact
-    numpy (bit-identical cosines to the former zip_with/aggregate column,
-    which was interpreted per array element — guide §4.1/§4.2) and emits
-    only each batch's top-k per query, so the final window ranks
-    ~(batches x Q x k) rows instead of N x Q. Every global top-k row is
-    top-k within its own batch, so the reduction is lossless.
+    (q_id, neighbor_id, cosine, rnk). Each corpus batch is scored against
+    all queries with fold-order-exact numpy and only its top-k per query
+    reaches the final window (:func:`_corpus_topk`), so the window ranks
+    ~(batches x Q x k) rows instead of N x Q; the corpus side stays a
+    narrow, shuffle-free scan.
 
     ``exclude_self`` drops (q, q) pairs before ranking — the semantics of
-    a pre-window ``id != q_id`` filter."""
-    q_rows = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = (
-        np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-        if q_rows
-        else np.zeros((0, 0))
-    )
-    qnorm = _foldorder_sq_norms(qmat) if q_rows else np.zeros(0)
+    a pre-window ``id != q_id`` filter.
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or qmat.shape[0] == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cos = _foldorder_cosine_matrix(mat, qmat, qnorm)
-            # self pairs are dropped inside the selection — none reach the
-            # final window, the semantics of a pre-window id != q_id filter
-            excl = ids[:, None] == qids[None, :] if exclude_self else None
-            out_q, out_id, out_cos = _batch_topk_frames(
-                ids, cos, qids, k, exclude=excl
-            )
-            yield pd.DataFrame(
-                {"q_id": out_q, "neighbor_id": out_id, "cosine": out_cos}
-            )
+    Q-small contract: the query set is collected to the driver and shipped
+    in every task's closure, so it may hold at most ``MAX_QUERIES`` rows;
+    a larger one raises :class:`QuerySetTooLarge`. Null vectors on either
+    side are skipped; a corpus vector whose length differs from the
+    queries' raises a ValueError naming its id."""
+    qids, q_type, qmat = _collect_queries(queries, query_id_col, vec_col)
+    qnorm = _foldorder_sq_norms(qmat)
 
-    q_t = queries.schema[query_id_col].dataType.simpleString()
-    v_t = vectors.schema[id_col].dataType.simpleString()
-    src = vectors.select(F.col(id_col), vec_col)
-    # parallelism floor: a bench-scale corpus is one parquet split, which
-    # would run the kernel on one core; at real scale the scan already has
-    # >= cores splits and takes no extra exchange (guide §2.4)
-    npart = src.rdd.getNumPartitions()
-    want = vectors.sparkSession.sparkContext.defaultParallelism
-    if npart < want:
-        src = src.repartition(want)
-    scored = src.mapInPandas(
-        kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
+    def score(ids, mat):
+        cos = _foldorder_cosine_matrix(mat, qmat, qnorm)
+        excl = ids[:, None] == qids[None, :] if exclude_self else None
+        return _batch_topk_frames(ids, cos, qids, k, exclude=excl)
+
+    return _corpus_topk(vectors, id_col, vec_col, (qids, q_type, qmat), k, score)
 
 
 def srp_signatures(
@@ -208,27 +312,26 @@ def srp_signatures(
 ) -> DataFrame:
     """Signed-random-projection bucket keys: one row per (id, table,
     bucket). Hyperplanes are derived deterministically from the seed inside
-    each task (no broadcast needed)."""
+    each task (no broadcast needed). Null vectors get no bucket; a vector
+    whose length is not ``dim`` raises a ValueError naming its id."""
 
-    def kernel(batches):
+    def srp_kernel(batches):
         rng = np.random.default_rng(seed)
         planes = rng.standard_normal((n_tables * n_bits, dim)).astype(np.float64)
         weights = (1 << np.arange(n_bits, dtype=np.int64))
-        for pdf in batches:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )  # (batch, dim)
+        for batch in batches:
+            batch, mat = _vector_matrix(batch, id_col, vec_col, dim)
+            n = batch.num_rows
             signs = (mat @ planes.T) > 0  # (batch, n_tables*n_bits)
-            signs = signs.reshape(len(pdf), n_tables, n_bits)
-            buckets = (signs * weights).sum(axis=2)  # (batch, n_tables)
-            ids = np.repeat(pdf[id_col].to_numpy(), n_tables)
-            tables = np.tile(np.arange(n_tables, dtype=np.int32), len(pdf))
-            yield pd.DataFrame(
-                {"vid": ids, "table_id": tables, "bucket": buckets.ravel()}
-            )
+            buckets = (signs.reshape(n, n_tables, n_bits) * weights).sum(axis=2)
+            yield pa.RecordBatch.from_pydict({
+                "vid": np.repeat(np.asarray(batch[id_col]), n_tables),
+                "table_id": np.tile(np.arange(n_tables, dtype=np.int32), n),
+                "bucket": buckets.ravel(),
+            })
 
-    return df.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
-        kernel, f"vid long, table_id int, bucket long"
+    return df.select(F.col(id_col).cast("long").alias(id_col), vec_col).mapInArrow(
+        srp_kernel, "vid long, table_id int, bucket long"
     )
 
 
@@ -249,7 +352,9 @@ def ann_topk(
     Recall rises with n_tables (union of candidates across tables) and
     falls with n_bits (finer buckets, fewer candidates). The bucket join
     shuffles on (table_id, bucket) — the A1-style collision prefilter of
-    the dedup cascade, reused for vectors."""
+    the dedup cascade, reused for vectors. Candidates are scored by the
+    pair kernel (:func:`_pair_cosine`, no threshold) and ranked by the
+    window."""
     v_sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
     q_sig = srp_signatures(queries, dim, n_tables, n_bits, query_id_col, vec_col, seed)
 
@@ -272,32 +377,12 @@ def ann_topk(
         F.col(query_id_col).alias("q_id"),
         F.col(vec_col).cast("array<double>").alias("_q"),
     )
-    scored = (
+    pairs = (
         cand.join(v, "neighbor_id")
         .join(F.broadcast(q), "q_id")
-        .select("q_id", "neighbor_id", cosine_sim(F.col("_q"), F.col("_v")).alias("cosine"))
+        .select("q_id", "neighbor_id", F.col("_q").alias("_va"), F.col("_v").alias("_vb"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
-def _probe_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
-    """array<int> of the ``nprobe`` nearest centroid cells for one vector
-    column, cosine-ranked (ties -> smaller cell id) — a PURE projection:
-    the centroid table rides into the plan as a literal array (tiny by
-    definition — a coarse quantizer is broadcastable or it is not a coarse
-    quantizer), so cell assignment costs ZERO shuffle on the corpus side."""
-    scored = F.array(
-        *[
-            F.struct(
-                (-cosine_sim(vec, F.array(*[F.lit(float(x)) for x in cv]))).alias("ncs"),
-                F.lit(cell).alias("cell"),
-            )
-            for cell, cv in enumerate(centroids)
-        ]
-    )
-    ranked = F.array_sort(scored)  # struct order: ncs asc = cosine desc, then cell asc
-    return F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
+    return _ranked_topk(_pair_cosine(pairs, "q_id", "neighbor_id", dim), k)
 
 
 def ivf_centroids(
@@ -336,14 +421,10 @@ def ivf_centroids_kmeans(
     A seeded Bernoulli sample costs one extra count() over the (narrow)
     vector column.
 
-    The FIT runs driver-side in numpy: a coarse quantizer's training set is
-    at most ``sample_rows`` rows (~50 MB at d=64) — small data by
-    construction — while the Spark ML k-means|| fit made ~15 distributed
-    passes over it (measured: 4-7 s of per-job scheduling on a 20k-row
-    sample vs <0.3 s for the same Lloyd iterations in BLAS). Distribution
-    stays where the data is big (the sampling scan); Euclidean objective,
-    k-means++ init, 10 Lloyd iterations — the same algorithm family and
-    determinism guarantees as before. Returns the same
+    The FIT runs driver-side in numpy: the training set is at most
+    ``sample_rows`` rows (~50 MB at d=64), small data by construction, so
+    a distributed fit would only add per-job scheduling. Euclidean
+    objective, k-means++ init, 10 Lloyd iterations. Returns the same
     ordered-centroid-list contract as :func:`ivf_centroids`."""
     n = vectors.count()
     frac = min(1.0, sample_rows / max(n, 1))
@@ -382,42 +463,6 @@ def ivf_centroids_kmeans(
     return [list(map(float, c)) for c in cents]
 
 
-def ivf_assign_kernel(
-    df: DataFrame,
-    centroids: list[list[float]],
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-) -> DataFrame:
-    """(id, cells array<int>[, _v array<double>]) via one numpy matmul per
-    Arrow batch — the kernel form of :func:`_probe_cells` for LARGE cell
-    counts, where n_cells literal fold-expressions would bloat codegen (the
-    native projection is linear in n_cells per row; the matmul is one BLAS
-    call). Same argmax-of-cosine semantics, ties -> smaller cell.
-    ``keep_vec`` passes the vector through so downstream re-rank needs no
-    join back to the source table (mapInPandas is a narrow transform — the
-    corpus side still never shuffles)."""
-    cmat = np.asarray(centroids, dtype=np.float64)
-    cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-
-    def kernel(batches):
-        for pdf in batches:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            nmat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            cs = nmat @ cmat.T  # (batch, n_cells)
-            # stable argsort on -cs: cosine desc, ties -> smaller cell
-            top = np.argsort(-cs, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-            out = {"vid": pdf[id_col].to_numpy(), "cells": list(top)}
-            if keep_vec:
-                out["_v"] = list(mat)
-            yield pd.DataFrame(out)
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    schema = f"vid {id_t}, cells array<int>" + (", _v array<double>" if keep_vec else "")
-    return df.select(F.col(id_col), vec_col).mapInPandas(kernel, schema)
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -435,136 +480,73 @@ def ivf_topk(
     to its nearest coarse cell, each query probes its ``nprobe`` nearest
     cells, and the exact cosine re-rank touches only vectors in probed
     cells (~nprobe / n_cells of the corpus per query instead of all of
-    it). Assignment + scoring + batch-local top-k run in ONE mapInPandas
-    pass over the corpus — a narrow, shuffle-free transform (the former
-    probe attach was a broadcast join producing a candidate-pair row per
-    scored pair, whose zip_with/aggregate cosine was interpreted per array
-    element — guide §4.1); queries and centroids ride in the closure.
-    Only ~(batches x Q x k) ranked candidates reach the final window, and
-    every global top-k row is top-k within its batch, so the reduction is
-    lossless.
+    it). Assignment + scoring + batch-local top-k run in ONE mapInArrow
+    pass over the corpus — a narrow, shuffle-free transform; queries and
+    centroids ride in the closure. Only ~(batches x Q x k) ranked
+    candidates reach the final window, and every global top-k row is
+    top-k within its batch, so the reduction is lossless.
 
-    ``assign_via_kernel`` (default: auto, > 64 cells) selects which
-    assignment ARITHMETIC is replicated bit-exactly: the matmul kernel
-    form (normalize + BLAS + stable argsort, :func:`ivf_assign_kernel`)
-    or the literal fold-expression form (:func:`_probe_cells` — fold-order
-    cosine, ties -> smaller cell). Same argmax-of-cosine semantics."""
+    ``assign_via_kernel`` (default: auto, > 64 cells) selects the cell
+    assignment ARITHMETIC: the matmul form (normalize + BLAS + stable
+    argsort) or the literal form (fold-order cosine via
+    :func:`_foldorder_cosine_matrix`, the arithmetic of the former
+    literal-centroid fold expressions). Both take the argmax of cosine,
+    ties -> smaller cell, and are applied identically to queries and
+    corpus.
+
+    Q-small contract: the query set is collected to the driver and shipped
+    in every task's closure, so it may hold at most ``MAX_QUERIES`` rows;
+    a larger one raises :class:`QuerySetTooLarge`. Null vectors on either
+    side are skipped; a vector whose length differs from the centroids'
+    raises a ValueError naming its id."""
     cents = centroids if centroids is not None else ivf_centroids(vectors, n_cells, id_col, vec_col)
     use_kernel = assign_via_kernel if assign_via_kernel is not None else len(cents) > 64
     cmat = np.asarray(cents, dtype=np.float64)
+    cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True) if use_kernel else None
 
-    # queries ride into the kernel closure (they were broadcast before —
-    # same memory class). Their probe cells are computed driver-side with
-    # the SAME arithmetic the chosen assignment mode used on executors:
-    # kernel mode = normalize + matmul + stable argsort of -cs (exactly
-    # ivf_assign_kernel); literal mode = fold-order cosine + (ncs, cell)
-    # ascending sort (exactly _probe_cells). Bit-identical assignments.
-    q_rows = queries.select(
-        F.col(query_id_col), F.col(vec_col).cast("array<double>")
-    ).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = (
-        np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-        if q_rows
-        else np.zeros((0, cmat.shape[1] if cmat.ndim == 2 else 0))
-    )
-    npr = min(nprobe, cmat.shape[0])
-    if use_kernel:
-        cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-        if qmat.shape[0]:
-            qn = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-            qcells = np.argsort(-(qn @ cnorm.T), axis=1, kind="stable")[:, :npr]
+    def ranked_cells(m: np.ndarray) -> np.ndarray:
+        # cells by cosine DESC, ties -> smaller cell; the same arithmetic
+        # assigns queries (driver) and corpus rows (executors)
+        if use_kernel:
+            cs = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ cnorm.T
         else:
-            qcells = np.zeros((0, npr), dtype=np.int64)
-    else:
-        qncs = -_foldorder_cosine_matrix(qmat, cmat)  # (Q, C)
-        qcells = np.argsort(qncs, axis=1, kind="stable")[:, :npr]
-    qnorm = _foldorder_sq_norms(qmat) if qmat.shape[0] else np.zeros(0)
-    # inverted probe lists: cell -> indices of the queries probing it
-    cell_queries: dict[int, np.ndarray] = {}
-    if qmat.shape[0]:
-        flat_cells = qcells.ravel()
-        flat_q = np.repeat(np.arange(qcells.shape[0]), qcells.shape[1])
-        srt = np.argsort(flat_cells, kind="stable")
-        uc, starts = np.unique(flat_cells[srt], return_index=True)
-        for c, s, e in zip(
-            uc, starts, np.append(starts[1:], flat_cells.shape[0])
-        ):
-            cell_queries[int(c)] = flat_q[srt[s:e]]
+            cs = _foldorder_cosine_matrix(m, cmat)
+        return np.argsort(-cs, axis=1, kind="stable")
 
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or qmat.shape[0] == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            # cell assignment, mode-exact (see driver-side comment)
-            if use_kernel:
-                nmat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-                cell = np.argsort(-(nmat @ cnorm.T), axis=1, kind="stable")[:, 0]
-            else:
-                ncs = -_foldorder_cosine_matrix(mat, cmat)
-                cell = np.argsort(ncs, axis=1, kind="stable")[:, 0]
-            # score each row ONLY against the queries probing its cell —
-            # the IVF contract: ~nprobe/n_cells of the pairs, never N x Q
-            per_q_ids: dict[int, list] = {}
-            per_q_cos: dict[int, list] = {}
-            order = np.argsort(cell, kind="stable")
-            uc, starts = np.unique(cell[order], return_index=True)
-            for c, s, e in zip(uc, starts, np.append(starts[1:], cell.shape[0])):
-                q_idx = cell_queries.get(int(c))
-                if q_idx is None:
-                    continue
+    qids, q_type, qmat = _collect_queries(
+        queries, query_id_col, vec_col, cmat.shape[1] if cmat.ndim == 2 else 0
+    )
+    qcells = ranked_cells(qmat)[:, : min(nprobe, cmat.shape[0])]
+    qnorm = _foldorder_sq_norms(qmat)
+    # inverted probe lists: cell -> indices of the queries probing it
+    flat_cells = qcells.ravel()
+    flat_q = np.repeat(np.arange(qcells.shape[0]), qcells.shape[1])
+    srt = np.argsort(flat_cells, kind="stable")
+    uc, starts = np.unique(flat_cells[srt], return_index=True)
+    cell_queries = {
+        int(c): flat_q[srt[s:e]]
+        for c, s, e in zip(uc, starts, np.append(starts[1:], flat_cells.shape[0]))
+    }
+
+    def score(ids, mat):
+        # score each row ONLY against the queries probing its cell — the
+        # IVF contract: ~nprobe/n_cells of the pairs, never N x Q. Each
+        # cell block keeps its own per-query top-k superset: a row in the
+        # batch's top-k is in its cell block's top-k.
+        cell = ranked_cells(mat)[:, 0]
+        order = np.argsort(cell, kind="stable")
+        uc, starts = np.unique(cell[order], return_index=True)
+        out = []
+        for c, s, e in zip(uc, starts, np.append(starts[1:], cell.shape[0])):
+            q_idx = cell_queries.get(int(c))
+            if q_idx is not None:
                 rows = order[s:e]
                 cos = _foldorder_cosine_matrix(mat[rows], qmat[q_idx], qnorm[q_idx])
-                for j, qi in enumerate(q_idx):
-                    per_q_ids.setdefault(int(qi), []).append(ids[rows])
-                    per_q_cos.setdefault(int(qi), []).append(cos[:, j])
-            if not per_q_ids:
-                continue
-            out_q, out_id, out_cos = [], [], []
-            for qi, id_chunks in per_q_ids.items():
-                cid = np.concatenate(id_chunks)
-                cco = np.concatenate(per_q_cos[qi])
-                keep = cid != qids[qi]
-                cid, cco = cid[keep], cco[keep]
-                if cid.shape[0] == 0:
-                    continue
-                # k-th-smallest threshold INCLUDING boundary ties — a
-                # superset of this batch's true top-k under the window
-                # order; extras are ranked out by the final window
-                if cid.shape[0] > k:
-                    key = -cco
-                    np.copyto(key, -np.inf, where=np.isnan(key))
-                    sel = key <= np.partition(key, k - 1)[k - 1]
-                    cid, cco = cid[sel], cco[sel]
-                out_q.append(np.full(cid.shape[0], qids[qi]))
-                out_id.append(cid)
-                out_cos.append(cco)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_id),
-                    "cosine": np.concatenate(out_cos),
-                }
-            )
+                excl = ids[rows, None] == qids[None, q_idx]
+                out.append(_batch_topk_frames(ids[rows], cos, qids[q_idx], k, excl))
+        return [np.concatenate([o[i] for o in out]) if out else [] for i in range(3)]
 
-    q_t = queries.schema[query_id_col].dataType.simpleString()
-    v_t = vectors.schema[id_col].dataType.simpleString()
-    src = vectors.select(F.col(id_col), vec_col)
-    npart = src.rdd.getNumPartitions()
-    want = vectors.sparkSession.sparkContext.defaultParallelism
-    if npart < want:
-        src = src.repartition(want)
-    scored = src.mapInPandas(
-        kernel, f"q_id {q_t}, neighbor_id {v_t}, cosine double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return _corpus_topk(vectors, id_col, vec_col, (qids, q_type, qmat), k, score)
 
 
 def embedding_dup_pairs(
@@ -578,19 +560,34 @@ def embedding_dup_pairs(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine >= threshold) —
-    the semantic-dedup edge source, LSH-bucketed so it never goes O(N^2)."""
+    the semantic-dedup edge source, LSH-bucketed so it never goes O(N^2).
+
+    Each vector is hashed once: the SRP rows are grouped by (table_id,
+    bucket), every member of a bucket is paired with the later members of
+    its sorted member list (so a < b), and pairs colliding in several
+    tables are deduplicated. The vectors are attached to the candidates
+    by id and scored by the pair kernel (:func:`_pair_cosine`), which
+    emits only pairs at or above ``threshold``. Null vectors form no
+    pairs; a vector whose length is not ``dim`` raises a ValueError."""
     sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
+    members = (
+        sig.groupBy("table_id", "bucket")
+        .agg(F.sort_array(F.collect_list("vid")).alias("m"))
+        .filter(F.size("m") > 1)
+    )
     cand = (
-        sig.alias("l")
-        .join(sig.alias("r"), ["table_id", "bucket"])
-        .filter(F.col("l.vid") < F.col("r.vid"))
-        .select(F.col("l.vid").alias("a"), F.col("r.vid").alias("b"))
+        members.select("m", F.posexplode("m").alias("i", "a"))
+        .select(
+            "a",
+            F.explode(
+                F.slice("m", F.col("i") + 2, F.size("m") - F.col("i") - 1)
+            ).alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))  # a repeated id pairs with itself
         .dropDuplicates(["a", "b"])
     )
     v = vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-    return (
-        cand.join(v.select(F.col(id_col).alias("a"), F.col("_v").alias("_va")), "a")
-        .join(v.select(F.col(id_col).alias("b"), F.col("_v").alias("_vb")), "b")
-        .select("a", "b", cosine_sim(F.col("_va"), F.col("_vb")).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    pairs = cand.join(
+        v.select(F.col(id_col).alias("a"), F.col("_v").alias("_va")), "a"
+    ).join(v.select(F.col(id_col).alias("b"), F.col("_v").alias("_vb")), "b")
+    return _pair_cosine(pairs, "a", "b", dim, threshold)

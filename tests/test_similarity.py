@@ -4,15 +4,16 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from deduplicate_spark.functions import similarity
 from deduplicate_spark.functions.similarity import (
+    QuerySetTooLarge,
+    _pair_cosine,
     ann_topk,
     brute_force_topk,
-    cosine_sim,
     embedding_dup_pairs,
-    ivf_assign_kernel,
-    ivf_centroids,
     ivf_centroids_kmeans,
     ivf_topk,
+    srp_signatures,
 )
 
 DIM = 16
@@ -29,13 +30,13 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>").cache()
 
 
-def test_cosine_sim_column(spark):
+def test_pair_cosine_kernel(spark):
     df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])],
-        "a array<double>, b array<double>",
+        [(1, 2, [1.0, 0.0], [1.0, 0.0]), (3, 4, [1.0, 0.0], [0.0, 1.0])],
+        "a long, b long, _va array<double>, _vb array<double>",
     )
-    got = [round(r[0], 6) for r in df.select(cosine_sim(F.col("a"), F.col("b"))).collect()]
-    assert got == [1.0, 0.0]
+    got = {r["a"]: r["cosine"] for r in _pair_cosine(df, "a", "b", 2).collect()}
+    assert got == {1: 1.0, 3: 0.0}
 
 
 def test_brute_force_topk_finds_planted(vectors):
@@ -77,23 +78,20 @@ def test_ivf_topk_recalls_planted(vectors):
 
 
 def test_ivf_kernel_assignment_matches_native(vectors):
-    # the matmul kernel and the literal-centroid projection implement the
-    # same argmax; their cell assignments must agree on real data
-    cents = ivf_centroids(vectors, 6)
-    kern = {
-        r["vid"]: list(r["cells"])
-        for r in ivf_assign_kernel(vectors, cents, nprobe=2).collect()
-    }
-    from deduplicate_spark.functions.similarity import _probe_cells
+    # the matmul assignment and the literal fold-order assignment implement
+    # the same argmax; on real data they must give identical rows. Every
+    # vector is a query and k exceeds the corpus, so each vector's cell and
+    # each query's two probed cells decide which rows come out.
+    queries = vectors.select(F.col("vec_id").alias("q_id"), "embedding")
 
-    native = {
-        r["vec_id"]: list(r["cells"])
-        for r in vectors.select(
-            "vec_id",
-            _probe_cells(F.col("embedding"), cents, 2).alias("cells"),
-        ).collect()
-    }
-    assert kern == native
+    def rows(via_kernel):
+        top = ivf_topk(
+            vectors, queries, n_cells=6, nprobe=2, k=50, assign_via_kernel=via_kernel
+        )
+        return sorted(tuple(r) for r in top.collect())
+
+    kern = rows(True)
+    assert kern and kern == rows(False)
 
 
 def test_ivf_kmeans_quantizer_contract(vectors):
@@ -182,3 +180,119 @@ def test_ivf_kmeans_production_recall_gate(spark):
     }
     recall = len(truth & got) / len(truth)
     assert recall >= 0.95, f"planted recall@10 {recall:.4f} < 0.95"
+
+
+def _fold_cosine(a, b) -> float:
+    """Left-fold cosine over index 0..d-1: the reference summation order."""
+    dot = na = nb = 0.0
+    for x, y in zip(a, b):
+        dot += x * y
+        na += x * x
+        nb += y * y
+    return dot / (np.sqrt(na) * np.sqrt(nb))
+
+
+def _srp_candidates(vectors, **kw) -> set:
+    """Every (a < b) pair sharing an SRP bucket in any table."""
+    buckets = {}
+    for r in srp_signatures(vectors, DIM, **kw).collect():
+        buckets.setdefault((r["table_id"], r["bucket"]), []).append(r["vid"])
+    return {
+        (a, b) for m in buckets.values() for a in m for b in m if a < b
+    }
+
+
+def test_embedding_dup_pairs_every_candidate_bit_exact(vectors):
+    kw = dict(n_tables=12, n_bits=4)
+    got = embedding_dup_pairs(vectors, dim=DIM, threshold=-1.0, **kw).collect()
+    pairs = [(r["a"], r["b"]) for r in got]
+    assert len(pairs) == len(set(pairs))
+    assert set(pairs) == _srp_candidates(vectors, **kw)
+    vecs = {r["vec_id"]: r["embedding"] for r in vectors.collect()}
+    for r in got:
+        ref = np.float64(_fold_cosine(vecs[r["a"]], vecs[r["b"]]))
+        assert np.array_equal(
+            np.float64(r["cosine"]).view("u8"), ref.view("u8")
+        ), (r["a"], r["b"])
+
+
+def test_embedding_dup_pairs_hot_bucket(spark, vectors):
+    hot = spark.createDataFrame(
+        [(1000 + i, [1.0] * DIM) for i in range(50)], "vec_id long, embedding array<double>"
+    )
+    got = [
+        (r["a"], r["b"])
+        for r in embedding_dup_pairs(vectors.unionByName(hot), dim=DIM, threshold=0.98)
+        .collect()
+        if r["a"] >= 1000 or r["b"] >= 1000
+    ]
+    assert len(got) == len(set(got)) == 50 * 49 // 2
+    assert set(got) == {(1000 + i, 1000 + j) for i in range(50) for j in range(i + 1, 50)}
+
+
+def _final_plan(df) -> str:
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_srp_paths_have_no_interpreted_cosine(vectors):
+    queries = vectors.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    dup = _final_plan(embedding_dup_pairs(vectors, dim=DIM, threshold=0.98))
+    ann = _final_plan(ann_topk(vectors, queries, dim=DIM, k=3))
+    for plan in (dup, ann):
+        assert "zip_with" not in plan and "aggregate(" not in plan
+        assert "lambdafunction" not in plan.lower()
+    # each vector is hashed once: one SRP kernel node, no self-join
+    assert dup.count("srp_kernel") == 1
+
+
+def test_null_vectors_form_no_pairs_or_neighbours(spark, vectors):
+    nulls = spark.createDataFrame(
+        [(900, None), (901, None)], "vec_id long, embedding array<double>"
+    )
+    with_nulls = vectors.unionByName(nulls)
+    ref = {(r["a"], r["b"]) for r in embedding_dup_pairs(
+        vectors, dim=DIM, threshold=-1.0, n_tables=12, n_bits=4).collect()}
+    got = {(r["a"], r["b"]) for r in embedding_dup_pairs(
+        with_nulls, dim=DIM, threshold=-1.0, n_tables=12, n_bits=4).collect()}
+    assert got == ref
+    queries = with_nulls.filter(
+        (F.col("vec_id") < 3) | (F.col("vec_id") == 900)
+    ).select(F.col("vec_id").alias("q_id"), "embedding")
+    top = brute_force_topk(with_nulls, queries, k=50).collect()
+    assert {r["q_id"] for r in top} == {0, 1, 2}
+    assert not {r["neighbor_id"] for r in top} & {900, 901}
+    assert len(top) == 3 * 45
+
+
+def test_ragged_vector_raises_named_error(spark, vectors):
+    ragged = vectors.unionByName(
+        spark.createDataFrame([(77, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>")
+    )
+    with pytest.raises(Exception, match="vec_id=77 has length 3, expected 16"):
+        embedding_dup_pairs(ragged, dim=DIM).collect()
+    queries = vectors.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    with pytest.raises(Exception, match="vec_id=77 has length 3, expected 16"):
+        brute_force_topk(ragged, queries, k=2).collect()
+    bad_q = ragged.filter(F.col("vec_id").isin(0, 77)).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    with pytest.raises(ValueError, match="q_id=77 has length 3"):
+        brute_force_topk(vectors, bad_q, k=2)
+
+
+def test_query_collect_is_capped(vectors, monkeypatch):
+    monkeypatch.setattr(similarity, "MAX_QUERIES", 4)
+    queries = vectors.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    with pytest.raises(QuerySetTooLarge):
+        brute_force_topk(vectors, queries, k=2)
+    with pytest.raises(QuerySetTooLarge):
+        ivf_topk(vectors, queries, n_cells=6, nprobe=2, k=2)
+    assert brute_force_topk(vectors, queries.limit(4), k=2).count() == 8
