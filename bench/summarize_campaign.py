@@ -47,7 +47,8 @@ def main() -> None:
             and ma in (b.get("interleaved_with") or [])
         ):
             latest = {ma: a, mb: b}
-    if not latest:
+    paired = bool(latest)
+    if not paired:
         print(
             "no adjacent interleaved oph/perm pair found — refusing to pair "
             "rows across campaigns/windows; no keep-or-flip decision."
@@ -69,7 +70,7 @@ def main() -> None:
             f"**{r['scaling_efficiency']}** | {fmt_probe(p2)} | {fmt_probe(p8)} |"
         )
     o, p = latest.get("oph"), latest.get("perm")
-    if o and p:
+    if paired:
         print()
         print(f"oph vs perm thr: 2c {o['turns_per_sec_local2']} vs {p['turns_per_sec_local2']} "
               f"({o['turns_per_sec_local2']/p['turns_per_sec_local2']-1:+.1%}); "

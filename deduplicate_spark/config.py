@@ -164,10 +164,11 @@ class DedupConfig:
     # mapInPandas kernels of cores on small corpora (measured: 1-task
     # signature stages bounding the sf0.1 wall). None = AUTO off the same
     # measured corpus stats as forced_smj: small corpora repartition the
-    # (tiny) kernel input to shuffle_partitions first; big corpora never
-    # pay the extra text shuffle. True/False pin it; operators treat None
-    # as False when called outside run_pipeline (scale-safe: no new
-    # exchange without a measurement).
+    # (tiny) kernel input to one task per slot (skew.spread_over_slots —
+    # not shuffle_partitions: each Python task pays a fixed worker set-up
+    # cost, see DESIGN §4); big corpora never pay the extra text shuffle.
+    # True/False pin it; operators treat None as False when called outside
+    # run_pipeline (scale-safe: no new exchange without a measurement).
     kernel_small_corpus: bool | None = None
     # guard the internal_long_ids path: an xxhash64(conv_id) collision
     # silently merges two unrelated docs, and make_actions can then mark a
@@ -181,6 +182,9 @@ class DedupConfig:
     # --- empty-doc handling (zero_hash analog, dupe_analysis.py:31,335-340) ---
     empty_cluster: bool = True
 
+    # sets the kernel_small_corpus gate threshold (shuffle_partitions x
+    # 4 MB) and the n-gram query's scan-spread floor; it does NOT size the
+    # Python kernel stages, which run one task per slot
     shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:

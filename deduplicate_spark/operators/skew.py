@@ -53,9 +53,11 @@ def measured_forced_smj(n_docs: int, total_bytes: int, config) -> bool:
 # kernels, which cost ~100x a columnar scan per byte, then run on as many
 # CPU cores (measured at sf0.1/local[32]: the two kernel stages were 1-task,
 # 2.5-2.7 s-cpu each, bounding the whole pipeline wall). Below this gate an
-# explicit repartition of the kernel input costs one pass over a tiny table;
-# above it AQE's parallelism-first coalescing already yields >= one ~>=4 MB
-# partition per slot and the extra text shuffle would be a pure scale tax.
+# explicit repartition of the kernel input (:func:`spread_over_slots`) costs
+# one pass over a tiny table; above it AQE's parallelism-first coalescing
+# already yields >= one ~>=4 MB partition per slot and the extra text
+# shuffle would be a pure scale tax. The threshold scales with
+# ``shuffle_partitions``; the repartition WIDTH does not (see below).
 _KERNEL_SMALL_BYTES_PER_SLOT = 4 << 20
 
 
@@ -94,6 +96,21 @@ def measured_small_corpus(total_bytes: int, config) -> bool:
     same real-count philosophy as :func:`measured_forced_smj`. True when
     the whole corpus is under ``shuffle_partitions x 4 MB``."""
     return total_bytes < config.shuffle_partitions * _KERNEL_SMALL_BYTES_PER_SLOT
+
+
+def spread_over_slots(df: DataFrame) -> DataFrame:
+    """Repartition a Python-kernel input to ONE task per task slot
+    (``defaultParallelism``), the width every mapInPandas/mapInArrow kernel
+    stage on the pipeline path runs at.
+
+    Why slots and not ``shuffle_partitions``: each Python task pays a fixed
+    worker set-up cost independent of its rows — PySpark's worker calls
+    ``importlib.invalidate_caches()`` per task, which makes every
+    ``zipimporter`` re-read the pyspark.zip directory (measured ~0.17
+    CPU-s/task on Python 3.11). More tasks than slots buys no parallelism
+    and multiplies that cost (32 tasks on 4 slots: ~5 CPU-s of set-up per
+    kernel stage); fewer leaves cores idle."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def tag_bucket_stats(

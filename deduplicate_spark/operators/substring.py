@@ -38,6 +38,7 @@ from deduplicate_spark.operators.skew import (
     maybe_merge_hint,
     measured_forced_smj,
     measured_small_corpus,
+    spread_over_slots,
     tag_bucket_stats,
 )
 from deduplicate_spark.lineage import cut_lineage
@@ -221,8 +222,9 @@ def has_common_substring_ge(ta: str, tb: str, t: int, w: int, cap: int | None) -
     the stage wall (measured at a 29k-doc word-salad corpus: 423k
     candidates, ~1 ms/pair, 0 confirmed). Falls back to the exact
     suffix-array LCS when the seed budget is exhausted (pathologically
-    repetitive docs) or when either text exceeds the fingerprint cap
-    (the guarantee then no longer covers the truncated tail). Decision is
+    repetitive docs), when either text exceeds the fingerprint cap
+    (the guarantee then no longer covers the truncated tail), or when
+    either text is whitespace-only (no fingerprints). Decision is
     exactly ``longest_common_substring_len(ta, tb) >= t`` in all cases.
     """
     if not ta or not tb:
@@ -231,6 +233,13 @@ def has_common_substring_ge(ta: str, tb: str, t: int, w: int, cap: int | None) -
         return longest_common_substring_len(ta, tb) >= t
     raw_a = _raw_window_hashes(ta, w, None)
     raw_b = _raw_window_hashes(tb, w, None)
+    if raw_a.size == 0 or raw_b.size == 0:
+        # whitespace-only text carries no fingerprints, so the winnowing
+        # guarantee says nothing about it; it can still share >= t bytes
+        # (of whitespace) with the other text -> exact path
+        if len(ta.encode("utf-8")) >= t and len(tb.encode("utf-8")) >= t:
+            return longest_common_substring_len(ta, tb) >= t
+        return False
     shared = np.intersect1d(
         _winnow_from_raw(raw_a, t, w), _winnow_from_raw(raw_b, t, w),
         assume_unique=True,
@@ -331,7 +340,7 @@ def substring_pairs(
     # run on as many cores; the repartition shuffles only a tiny table
     fp_input = docs
     if config.kernel_small_corpus:
-        fp_input = fp_input.repartition(config.shuffle_partitions)
+        fp_input = spread_over_slots(fp_input)
     # EAGER lineage cut on the narrow (conv_id, fp) rows: tag_bucket_stats
     # consumes them twice (partial agg + join-back probe), and AQE
     # materializes the two join inputs as CONCURRENT query stages — with no
@@ -409,9 +418,9 @@ def substring_pairs(
 
     # AQE coalesces the (tiny-by-bytes) candidate set into one partition,
     # which would serialize the CPU-bound verify kernel into a single task
-    # — spread pairs across the configured parallelism first
+    # — spread pairs to one task per slot first
     return (
-        withtext.repartition(config.shuffle_partitions)
+        spread_over_slots(withtext)
         .mapInPandas(verify, f"a {id_type}, b {id_type}")
         .withColumn("evidence", F.lit("substring"))
     )

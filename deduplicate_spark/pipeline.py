@@ -37,6 +37,7 @@ from deduplicate_spark.operators.skew import (
     measured_forced_smj,
     measured_small_corpus,
     salted_struct_min,
+    spread_over_slots,
     tag_bucket_stats,
 )
 from deduplicate_spark.operators.substring import substring_pairs
@@ -361,12 +362,12 @@ def run_pipeline(
 
     # kernel-parallelism floor (measured gate, see skew.measured_small_corpus):
     # on a small corpus the checkpointed kernel input sits in 1-4 byte-sized
-    # partitions — spread it across the configured parallelism before the
-    # CPU-bound kernel; the repartition shuffles only the tiny table the
-    # gate just measured. Never applied above the gate (no new exchange at
-    # scale, where AQE already yields >= a partition per slot).
+    # partitions — spread it to one task per slot before the CPU-bound
+    # kernel; the repartition shuffles only the tiny table the gate just
+    # measured. Never applied above the gate (no new exchange at scale,
+    # where AQE already yields >= a partition per slot).
     if config.kernel_small_corpus:
-        kernel_input = kernel_input.repartition(config.shuffle_partitions)
+        kernel_input = spread_over_slots(kernel_input)
 
     # signatures feed three consumers (sig_simhash projection, LSH bands,
     # rescue attach) — small corpora cut eagerly so the first two cannot

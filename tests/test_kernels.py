@@ -317,3 +317,30 @@ def test_seed_extend_verifier_equals_suffix_array_lcs():
     assert has_common_substring_ge(long_a, long_a, t, w, cap=100) == (
         longest_common_substring_len(long_a, long_a) >= t
     )
+
+
+def test_seed_extend_verifier_whitespace_only_texts():
+    """Whitespace-only text has no winnowing fingerprints, yet it shares
+    whitespace runs with other text: the verifier must still decide exactly
+    LCS(a, b) >= t (both whitespace-only, and whitespace-only vs a doc that
+    contains a long whitespace run), and stay False below t bytes."""
+    from deduplicate_spark.operators.substring import (
+        has_common_substring_ge,
+        longest_common_substring_len,
+    )
+
+    t, w = 128, 16
+    ws = " " * 300
+    cases = [
+        (ws, ws),
+        (ws, "\t\n " * 100),
+        (ws, "header text " + " " * 200 + " footer text"),  # mixed pair
+        ("lead " * 40 + " " * 150, ws),
+        (ws, "no long whitespace run here " * 20),
+        (ws, " " * (t - 1)),  # shorter than t bytes
+        (" " * 50, " " * 50),
+    ]
+    for ta, tb in cases:
+        want = longest_common_substring_len(ta, tb) >= t
+        assert has_common_substring_ge(ta, tb, t, w, cap=200_000) == want, (want, ta[:20], tb[:20])
+    assert has_common_substring_ge(ws, ws, t, w, cap=200_000)

@@ -165,14 +165,47 @@ def test_measured_small_corpus_gate():
 
 def test_kernel_parallelism_floor_applied_when_small(spark, turns_df):
     """On a measured-small corpus the signature kernel input is spread to
-    shuffle_partitions tasks (the checkpointed signatures table carries the
+    one task per slot (the checkpointed signatures table carries the
     repartitioned partitioning); pinned False leaves the plan untouched."""
     from deduplicate_spark.pipeline import run_pipeline
 
+    slots = spark.sparkContext.defaultParallelism
     res = run_pipeline(spark, turns_df, DedupConfig())  # auto-resolves small
-    assert res.signatures.rdd.getNumPartitions() == DedupConfig().shuffle_partitions
+    assert res.signatures.rdd.getNumPartitions() == slots
     res_off = run_pipeline(spark, turns_df, DedupConfig(kernel_small_corpus=False))
-    assert res_off.signatures.rdd.getNumPartitions() < DedupConfig().shuffle_partitions
+    assert res_off.signatures.rdd.getNumPartitions() < slots
+
+
+def test_python_kernel_stages_run_one_task_per_slot(spark, turns_df, monkeypatch):
+    """Each Python kernel stage of a pipeline run with the substring pass
+    on — signatures, winnowing fingerprints, substring verify — runs
+    exactly defaultParallelism tasks: a Python task pays a fixed worker
+    set-up cost, so more tasks than slots only multiplies it."""
+    from deduplicate_spark import pipeline
+    from deduplicate_spark.operators import substring
+
+    seen = {}
+    orig_fp, orig_sub = substring.doc_fingerprints, pipeline.substring_pairs
+
+    def fp_spy(docs, config=None):
+        seen["fingerprint_input"] = docs.rdd.getNumPartitions()
+        return orig_fp(docs, config)
+
+    def sub_spy(docs, config=None):
+        out = orig_sub(docs, config)
+        seen["verify_output"] = out.rdd.getNumPartitions()
+        return out
+
+    monkeypatch.setattr(substring, "doc_fingerprints", fp_spy)
+    monkeypatch.setattr(pipeline, "substring_pairs", sub_spy)
+    res = pipeline.run_pipeline(
+        spark, turns_df, DedupConfig(enable_substring_pass=True)
+    )
+    seen["signatures"] = res.signatures.rdd.getNumPartitions()
+    slots = spark.sparkContext.defaultParallelism
+    assert seen == dict.fromkeys(
+        ("fingerprint_input", "verify_output", "signatures"), slots
+    )
 
 
 def test_measured_text_stats_two_phase_bytes(spark):
