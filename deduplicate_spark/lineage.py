@@ -12,12 +12,22 @@ local[k] mode where executor loss cannot happen and the copy is cheaper.
 Reference analog: the reference's memoized analysis DBs are durable files
 (dupe_analysis.py:99-119) — intermediate state there also survives process
 restarts.
+
+``run_branches`` runs independent pipeline branches (each ending in an
+eager cut) on concurrent driver threads; it is the only place in the
+package that starts threads.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from concurrent.futures import ThreadPoolExecutor, as_completed
+from typing import Any, Callable
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
+
+BRANCH_THREAD_PREFIX = "dedup-branch"
 
 
 def cut_lineage(
@@ -25,6 +35,15 @@ def cut_lineage(
 ) -> DataFrame:
     """Materialization barrier: reliable checkpoint when a checkpoint dir
     is set, localCheckpoint otherwise.
+
+    ``eager=False`` does NOT defer the work below the cut. Under AQE,
+    building the cut plans ``queryExecution.toRdd``, and
+    ``AdaptiveSparkPlanExec.execute()`` runs every shuffle stage below the
+    cut before it returns (measured: a lazy cut over a ``groupBy`` runs one
+    job when it is built). Only the last stage — the one that writes the
+    cut's blocks — is deferred to the first consumer. So a lazy cut saves
+    at most that final stage, and building one blocks the calling thread
+    for as long as its shuffle stages take.
 
     ``spill_only=True`` stores the local-checkpoint blocks DISK_ONLY —
     OUT of the JVM's unified memory pool. Use it for big, cold tables
@@ -44,3 +63,34 @@ def cut_lineage(
         except TypeError:  # storageLevel param requires Spark >= 4.0
             return df.localCheckpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def run_branches(spark: SparkSession, **thunks: Callable[[], Any]) -> dict[str, Any]:
+    """Run independent branches on concurrent driver threads and return
+    ``{name: result}``.
+
+    Each thunk runs on its own thread, wrapped by
+    ``inheritable_thread_target(spark)`` so the caller's job group, job
+    description and tags follow its jobs (the session form also carries
+    the tags, and avoids the session-less wrapper's warning). Every branch
+    runs to the end; the first failure is re-raised only after all of them
+    have finished, and the pool is shut down before this returns. Inputs
+    that two branches read must be materialized before the call, or the
+    branches race to recompute them."""
+    with ThreadPoolExecutor(
+        max_workers=len(thunks), thread_name_prefix=BRANCH_THREAD_PREFIX
+    ) as pool:
+        # one wrapper per thunk: each clones the caller's local properties,
+        # and branches must not share one copy (Spark writes per-query
+        # properties such as the SQL execution id into it)
+        futures = {
+            pool.submit(inheritable_thread_target(spark)(fn)): name
+            for name, fn in thunks.items()
+        }
+        first_error = None
+        for fut in as_completed(futures):
+            if first_error is None and fut.exception() is not None:
+                first_error = fut.exception()
+    if first_error is not None:
+        raise first_error
+    return {name: fut.result() for fut, name in futures.items()}

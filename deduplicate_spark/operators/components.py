@@ -58,9 +58,11 @@ def connected_components(
     pairs = edges.select("a", "b")
     if not assume_deduped:
         pairs = pairs.dropDuplicates(["a", "b"])
-    # LAZY cut: the count() on the next line is the first (and serial)
-    # consumer, so it materializes the checkpoint blocks in the same job —
-    # an eager cut here paid a full extra pass over the edge-producing DAG
+    # LAZY cut: under AQE, building it already runs every shuffle stage
+    # below it (the edge dedup, when on; the pipeline's edge sources are
+    # materialized tables). Only the final stage is deferred, and the
+    # count() on the next line is its first (and serial) consumer, so it
+    # writes the blocks in the same job — an eager cut paid one extra pass
     pairs = pairs.transform(lambda _df: cut_lineage(_df, eager=False))
 
     # small-edge fast path: confirmed dup edges are a tiny fraction of the

@@ -134,9 +134,11 @@ def confirm_pairs(
         # of 64 -> cos <= ~0.56 -> shingle J well under 0.55, P[est >= 0.7]
         # < 1e-5), so the 8*num_perm-byte minhash arrays are only ever
         # joined onto the thin near-miss band, never the full candidate set.
-        # ham_ok and the rescue band both consume base; no explicit barrier —
-        # the branches' identical shuffles dedupe via ReusedExchange inside
-        # the single union query, and the simhash-only attach is narrow
+        # ham_ok and the rescue band both consume base through a lazy cut.
+        # Under AQE, building the cut already runs every shuffle stage below
+        # it (the LSH candidate stages and the simhash attach) on this
+        # thread; only the final join stage that writes the blocks is
+        # deferred to the first consumer. The simhash-only attach is narrow
         base = attach_signatures(
             pairs, sim_sigs, forced_smj=config.forced_smj
         ).withColumn(

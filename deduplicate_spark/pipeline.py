@@ -11,6 +11,10 @@ data the cheap stages could not already resolve.
                                                    (near edges between reps)
     edges = exact ∪ near [∪ substring] ──► connected components ─► resolve
 
+The three edge sources read nothing but the materialized meta and
+representative tables, so ``run_pipeline`` builds them as concurrent
+branches (``lineage.run_branches``), each ending in a materialized table.
+
 Running MinHash on exact-distinct representatives is the big cascade win at
 scale: a corpus that is 40% exact-duplicate does 40% less kernel work, and
 every exact member inherits its representative's near-dup connectivity
@@ -41,7 +45,7 @@ from deduplicate_spark.operators.skew import (
     tag_bucket_stats,
 )
 from deduplicate_spark.operators.substring import substring_pairs
-from deduplicate_spark.lineage import cut_lineage
+from deduplicate_spark.lineage import cut_lineage, run_branches
 
 
 @dataclass
@@ -213,9 +217,13 @@ def run_pipeline(
 ) -> PipelineResult:
     """turns -> PipelineResult. If ``store`` (a CheckpointStore) is given,
     each stage persists + is resumable; otherwise stages are cut with
-    localCheckpoints — the narrow meta projection and the kernel-feeding
-    tables materialize eagerly at construction (racing lazy consumers
-    would recompute them, see the ckpt call sites), the rest stay lazy.
+    localCheckpoints. A lazy cut defers only its last stage: under AQE,
+    building it runs every shuffle stage below it (see
+    ``lineage.cut_lineage``), so each cut blocks the thread that builds it.
+    After the corpus stats resolve the gates, the exact, near-dup and
+    (optional) substring edge tables are built on concurrent driver
+    threads, each ending in a materialized table that CC then unions;
+    every table two branches read is materialized before the fork.
 
     ``analyze_only`` mirrors the reference --analyze (deduplicate.py:459-461):
     stop after clusters — the actions/report DataFrames are still returned
@@ -257,13 +265,15 @@ def run_pipeline(
     # projection ONCE and route every non-kernel stage (guard, exact
     # cascade, relabel, election) through it; text blocks are read exactly
     # once, into the kernel path below.
-    # Eagerness: AQE materializes independent downstream stages
-    # CONCURRENTLY — with a lazy cut, racing consumers recompute meta from
-    # the full-text docs blocks before the narrow blocks land (measured:
-    # one extra 366 MB pass per racing consumer). But when the stats
-    # aggregation below runs (the default), it is the FIRST consumer and
-    # runs serially before any race can exist, so it materializes the lazy
-    # blocks in its own job — an eager cut would pay one extra full pass.
+    # Eagerness: every edge branch below reads meta, so it must be
+    # materialized before they fork (racing consumers of unwritten blocks
+    # recompute meta from the full-text docs blocks; measured: one extra
+    # 366 MB pass per racer). Building the lazy cut already runs the
+    # assembly's shuffle stages (AQE); only the final stage that writes
+    # the blocks is deferred. When the stats aggregation below runs (the
+    # default), it is that deferred stage's first and only consumer and
+    # runs before the fork, so it writes the blocks in its own job — an
+    # eager cut would pay one extra pass.
     meta = ckpt("docs_meta", docs.drop("doc_text"), eager=not (verify or unresolved))
     if verify or unresolved:
         stats = corpus_stats(meta, verify_ids=verify)
@@ -303,9 +313,6 @@ def run_pipeline(
     # EMPTY_SHA1 and cluster together when empty_cluster=True (reference
     # behavior); False leaves them untouched by every stage.
     exact_src = kmeta if config.empty_cluster else kmeta.filter(F.col("total_len") > 0)
-    exact_edges = exact_star_edges(
-        exact_src, salt_buckets=config.band_salt_buckets, forced_smj=config.forced_smj
-    )
 
     # exact-distinct representatives: argmin over narrow meta; only the
     # winning ids semi-join the text table (one text pass into the kernel)
@@ -315,16 +322,13 @@ def run_pipeline(
         "exact_sha",
         salt_buckets=config.band_salt_buckets,
     ).select(F.col("_ord").alias("conv_id"))
-    # Eagerness of the kernel-feeding checkpoints follows the measured
+    # Eagerness of the signature checkpoint follows the measured
     # small-corpus gate: on SMALL corpora a lazy cut lets racing AQE
-    # consumers re-run the text semi-join / kernel before the blocks land
-    # (measured at sf0.1: two concurrent 1-task kernel-sized stages), and
-    # the eager barrier costs one trivial job. On BIG corpora the race
-    # cannot pay for the barrier: the eager cut serializes construction
-    # into extra materialization passes of GB-sized tables (measured at
-    # 6.5M turns: walls regressed with unconditional eager), and the
-    # single downstream action materializes each checkpoint exactly once
-    # anyway.
+    # consumers re-run the kernel before the blocks land (measured at
+    # sf0.1: two concurrent 1-task kernel-sized stages), and the eager
+    # barrier costs one trivial job. On BIG corpora the eager cut added
+    # extra materialization passes of GB-sized tables (measured at 6.5M
+    # turns: walls regressed with unconditional eager).
     kernel_eager = bool(config.kernel_small_corpus)
     reps_join = ktext.join(
         maybe_merge_hint(rep_ids, config.forced_smj), "conv_id", "left_semi"
@@ -334,12 +338,16 @@ def run_pipeline(
     # kernel is its only consumer and the checkpoint is a pure extra
     # materialization of a text-sized table — feed the semi-join straight
     # into the kernel so the text attach and the kernel fuse into one pass.
+    # When it is cut, the cut is eager at every scale. With the substring
+    # pass on, the substring and near-dup branches both read it, and a
+    # table two branches read is materialized before they fork, or both
+    # recompute the text semi-join. Otherwise eagerness costs no extra
+    # pass: a lazy cut would run the semi-join's shuffle stages here
+    # anyway (AQE) and defer only the stage that writes the same blocks.
     reps_reused = (
         store is not None or config.enable_substring_pass or config.prefix_prefilter
     )
-    reps_text = (
-        ckpt("reps_text", reps_join, eager=kernel_eager) if reps_reused else reps_join
-    )
+    reps_text = ckpt("reps_text", reps_join, eager=True) if reps_reused else reps_join
 
     # optional beg_hash cascade stage (reference pass-1 semantics): the
     # kernel only sees reps that collide on prefix_sha. NOT applied to the
@@ -369,51 +377,78 @@ def run_pipeline(
     if config.kernel_small_corpus:
         kernel_input = spread_over_slots(kernel_input)
 
-    # signatures feed three consumers (sig_simhash projection, LSH bands,
-    # rescue attach) — small corpora cut eagerly so the first two cannot
-    # race and run the kernel twice (measured, see kernel_eager above)
-    signatures = ckpt(
-        "signatures", compute_signatures(kernel_input, config), eager=kernel_eager
-    )
-    if store is not None:
-        # no-silent-caps telemetry (VERDICT r4 #8): record the LSH bucket
-        # histogram + star-fallback count in the run's metrics table on
-        # every checkpointed run (previously computed only when a caller
-        # asked). One aggregation over the already-persisted signature
-        # blocks; skipped for store-less (fully lazy) runs.
-        from deduplicate_spark.operators.lsh import bucket_stats
-
-        bs = bucket_stats(signatures, config).first()
-        store.metrics.append(
-            {
-                "stage": "lsh_bucket_stats",
-                "config_hash": store.config_hash,
-                "input_key": store.input_key,
-                "rows": bs.n_buckets,
-                "reused": False,
-                "extra": {
-                    "max_bucket": bs.max_bucket,
-                    "n_star_fallback": bs.n_star_fallback,
-                    "est_edges": bs.est_edges,
-                },
-            }
+    def exact_branch() -> DataFrame:
+        edges = exact_star_edges(
+            exact_src,
+            salt_buckets=config.band_salt_buckets,
+            forced_smj=config.forced_smj,
         )
-    # narrow (conv_id, simhash) projection checkpoint: the Hamming attaches
-    # otherwise re-read and SMJ-sort the full ~1 KB minhash rows per side
-    # (same no-column-pruning-in-checkpoint-blocks disease as docs_meta)
-    sig_sim = ckpt("sig_simhash", signatures.select("conv_id", "simhash"))
-    cand = candidate_pairs(signatures, config)
-    confirmed = ckpt(
-        "pairs",
-        confirm_pairs(
-            cand, signatures, docs=kmeta, config=config, sim_signatures=sig_sim
-        ).select("a", "b", "evidence"),
-    )
+        return cut_lineage(edges.select("a", "b", "evidence"), eager=True)
 
-    edges = exact_edges.select("a", "b", "evidence").unionByName(confirmed)
+    def near_branch() -> tuple[DataFrame, DataFrame, DataFrame]:
+        # signatures feed three consumers (sig_simhash projection, LSH
+        # bands, rescue attach) — small corpora cut eagerly so the first
+        # two cannot race and run the kernel twice (see kernel_eager above)
+        signatures = ckpt(
+            "signatures", compute_signatures(kernel_input, config), eager=kernel_eager
+        )
+        if store is not None:
+            # no-silent-caps telemetry (VERDICT r4 #8): record the LSH
+            # bucket histogram + star-fallback count in the run's metrics
+            # table on every checkpointed run (previously computed only
+            # when a caller asked). One aggregation over the
+            # already-persisted signature blocks; skipped for store-less
+            # runs.
+            from deduplicate_spark.operators.lsh import bucket_stats
+
+            bs = bucket_stats(signatures, config).first()
+            store.metrics.append(
+                {
+                    "stage": "lsh_bucket_stats",
+                    "config_hash": store.config_hash,
+                    "input_key": store.input_key,
+                    "rows": bs.n_buckets,
+                    "reused": False,
+                    "extra": {
+                        "max_bucket": bs.max_bucket,
+                        "n_star_fallback": bs.n_star_fallback,
+                        "est_edges": bs.est_edges,
+                    },
+                }
+            )
+        # narrow (conv_id, simhash) projection checkpoint: the Hamming
+        # attaches otherwise re-read and SMJ-sort the full ~1 KB minhash
+        # rows per side (same no-column-pruning-in-checkpoint-blocks
+        # disease as docs_meta)
+        sig_sim = ckpt("sig_simhash", signatures.select("conv_id", "simhash"))
+        cand = candidate_pairs(signatures, config)
+        confirmed = ckpt(
+            "pairs",
+            confirm_pairs(
+                cand, signatures, docs=kmeta, config=config, sim_signatures=sig_sim
+            ).select("a", "b", "evidence"),
+            eager=True,
+        )
+        return signatures, cand, confirmed
+
+    # One branch per edge source. No knob and no serial path: each branch
+    # ends in an eager cut, so the union below reads three materialized
+    # tables, and the only shared inputs (meta, reps_text) are already
+    # materialized. The substring branch runs its verify kernel inside its
+    # own cut; an output with no store stage gets a local cut in store mode
+    # too.
+    branches = {"exact": exact_branch, "near": near_branch}
     if config.enable_substring_pass:
-        sub_edges = substring_pairs(reps_text, config)
-        edges = edges.unionByName(sub_edges)
+        branches["substring"] = lambda: cut_lineage(
+            substring_pairs(reps_text, config), eager=True
+        )
+    built = run_branches(spark, **branches)
+    exact_edges = built["exact"]
+    signatures, cand, confirmed = built["near"]
+
+    edges = exact_edges.unionByName(confirmed)
+    if "substring" in built:
+        edges = edges.unionByName(built["substring"])
     # no (a, b) dedup exchange here: every source emits a < b pairs, CC's
     # min-label propagation and the driver union-find are invariant to
     # duplicate edges, and the distributed path dedups its symmetrized

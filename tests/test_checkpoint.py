@@ -66,10 +66,9 @@ def test_lineage_written(spark, store):
     assert "partitions" in lineage and "wall_sec" in lineage
 
 
-def test_resume_equals_clean_run(spark, turns_df, tmp_path):
-    """Kill-after-stage-k resume == clean run (the reference's merge/resume
-    contract, test_db_merge analog)."""
-    cfg = DedupConfig(exclude_roles=("system",))
+def _resume_vs_clean(spark, turns_df, root, cfg) -> list[str]:
+    """Clean store-less run vs a store run resumed from a complete store:
+    asserts equal clusters and returns the stages the resumed run reused."""
     clean = run_pipeline(spark, turns_df, cfg)
     clean_clusters = {
         (r["conv_id"], r["cluster_id"]) for r in clean.clusters.collect()
@@ -77,7 +76,7 @@ def test_resume_equals_clean_run(spark, turns_df, tmp_path):
 
     store = CheckpointStore(
         spark=spark,
-        root=str(tmp_path / "resume"),
+        root=root,
         config_hash=cfg.config_hash(),
         input_key="corpus",
     )
@@ -95,8 +94,24 @@ def test_resume_equals_clean_run(spark, turns_df, tmp_path):
         (r["conv_id"], r["cluster_id"]) for r in resumed.clusters.collect()
     }
     assert resumed_clusters == clean_clusters
-    reused = [m["stage"] for m in store2.metrics if m.get("reused")]
+    return [m["stage"] for m in store2.metrics if m.get("reused")]
+
+
+def test_resume_equals_clean_run(spark, turns_df, tmp_path):
+    """Kill-after-stage-k resume == clean run (the reference's merge/resume
+    contract, test_db_merge analog)."""
+    cfg = DedupConfig(exclude_roles=("system",))
+    reused = _resume_vs_clean(spark, turns_df, str(tmp_path / "resume"), cfg)
     assert "docs" in reused and "signatures" in reused and "pairs" in reused
+
+
+def test_resume_equals_clean_run_substring_pass(spark, turns_df, tmp_path):
+    """Same contract with the substring branch running beside the exact and
+    near-dup branches: its edges get a local cut, not a store stage, and
+    the stages the branches share or produce are reused."""
+    cfg = DedupConfig(exclude_roles=("system",), enable_substring_pass=True)
+    reused = _resume_vs_clean(spark, turns_df, str(tmp_path / "resume"), cfg)
+    assert {"reps_text", "signatures", "pairs"} <= set(reused)
 
 
 def test_store_run_records_bucket_stats(spark, turns_df, tmp_path):
