@@ -117,7 +117,6 @@ class DedupConfig:
 
     # --- clustering / shuffle hygiene ---
     band_salt_buckets: int = 8     # salt for hot LSH bands
-    max_band_bucket: int = 2_000   # cap pair fan-out per band bucket (logged)
     cc_max_rounds: int = 30
     # run the kernel path (signatures -> band explode -> pairs -> CC) on
     # xxhash64(conv_id) LONGS instead of id strings: the band explode is
@@ -207,10 +206,12 @@ class DedupConfig:
         adding new ones with default values, must not invalidate resumable
         checkpoint state (ADVICE r5: r5's auto-gate knob additions silently
         orphaned every pre-existing CheckpointStore root). Introducing this
-        split is itself the LAST such break: pre-r6 store roots stop
-        matching once (safe direction — they are recomputed, never reused
-        wrongly); from r6 on, physical knobs join the exclusion set and the
-        hash stays stable."""
+        split broke every older hash once: pre-r6 store roots stop matching
+        (safe direction — they are recomputed, never reused wrongly); from
+        r6 on, physical knobs join the exclusion set and stay out of the
+        hash. Removing a SEMANTIC field changes the hash once the same safe
+        way: dropping ``max_band_bucket`` (it chose between two star tiers
+        that emitted the same edges) makes older store roots recompute."""
         payload = json.dumps(
             {k: v for k, v in asdict(self).items() if k not in _PHYSICAL_KNOBS},
             sort_keys=True,

@@ -477,6 +477,7 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the raw text the gate just measured. Big corpora take neither
     # branch: many splits give the scan its parallelism for free.
     from deduplicate_spark.operators.skew import (
+        bucket_pairs,
         measured_forced_smj,
         measured_text_stats,
     )
@@ -541,24 +542,14 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False,
     )
     sizes = feats.select("doc_id", "n_grams")
-    keyed = feats.select("doc_id", F.explode("min_grams").alias("min_gram"))
-    gstats = keyed.groupBy("min_gram").agg(
-        F.count(F.lit(1)).alias("g_n"), F.min("doc_id").alias("g_rep")
+    # one collision bucket per min-gram; hot grams take the star tier
+    cand = bucket_pairs(
+        feats.select("doc_id", F.explode("min_grams").alias("min_gram")),
+        "min_gram",
+        allpairs_max=_MINGRAM_HOT,
+        id_col="doc_id",
+        forced_smj=_smj,
     )
-    tagged = keyed.join(gstats, "min_gram")
-    cool = tagged.filter(F.col("g_n") <= _MINGRAM_HOT)
-    l = cool.alias("l")
-    r = cool.alias("r")
-    allpair_cand = (
-        l.join(r.hint("merge") if _smj else r, "min_gram")
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-    )
-    star_cand = (
-        tagged.filter((F.col("g_n") > _MINGRAM_HOT) & (F.col("doc_id") != F.col("g_rep")))
-        .select(F.col("g_rep").alias("a"), F.col("doc_id").alias("b"))
-    )
-    cand = allpair_cand.unionByName(star_cand).dropDuplicates(["a", "b"])
 
     def _m(df):
         return df.hint("merge") if _smj else df

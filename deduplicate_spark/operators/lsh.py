@@ -14,8 +14,9 @@ Scale design:
     ``allpairs_max`` use within-bucket all-pairs (better confirm recall);
     larger buckets emit *star edges* (member -> bucket-min representative),
     which is O(n) and preserves exactly the connectivity that the
-    connected-components stage needs. Star fallback counts are surfaced via
-    :func:`bucket_stats` (no silent caps).
+    connected-components stage needs. The pairing is the shared
+    :func:`~deduplicate_spark.operators.skew.bucket_pairs`; star fallback
+    counts are surfaced via :func:`bucket_stats` (no silent caps).
   * pairs deduped across bands with one ``dropDuplicates`` — candidate
     volume stays ~linear in corpus size for realistic dup rates.
 """
@@ -26,8 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
-from deduplicate_spark.lineage import cut_lineage
-from deduplicate_spark.operators.skew import tag_bucket_stats
+from deduplicate_spark.operators.skew import bucket_pairs
 
 # all-pairs ceiling: a bucket of n docs costs n(n-1)/2 pairs; above this,
 # star edges give the same CC connectivity at O(n). 16 keeps the worst
@@ -35,7 +35,6 @@ from deduplicate_spark.operators.skew import tag_bucket_stats
 # still confirmed pairwise. (measured: at 64 this was 45% of pipeline wall
 # on a 64-variant corpus; at 16 the pair volume is near-linear)
 ALLPAIRS_MAX_DEFAULT = 16
-COLLECT_CAP = 10_000  # buckets beyond this never materialize a member array
 
 
 def band_buckets(signatures: DataFrame, config: DedupConfig | None = None) -> DataFrame:
@@ -55,103 +54,26 @@ def band_buckets(signatures: DataFrame, config: DedupConfig | None = None) -> Da
     )
 
 
-def candidate_pairs(
-    signatures: DataFrame,
-    config: DedupConfig | None = None,
-    allpairs_max: int = ALLPAIRS_MAX_DEFAULT,
-) -> DataFrame:
+def candidate_pairs(signatures: DataFrame, config: DedupConfig | None = None) -> DataFrame:
     """LSH candidate edge list (a, b, evidence='lsh'), a < b, deduped.
 
-    Pair-volume control (the difference between 20 M and 600 k shuffled
-    rows on a 16x-near-dup corpus): buckets are collapsed to their sorted
-    member list per (band, bucket), then DEDUPED ACROSS BANDS by member-set
-    hash — near-identical docs agree on most of their b bands, so the same
-    member set would otherwise explode into the same pairs b times. Pair
-    expansion is a native nested-transform over the (deduped) member
-    arrays; only then does the final pair-level dropDuplicates run.
+    Each band bucket is one collision bucket of :func:`bucket_pairs`:
+    all pairs up to ``ALLPAIRS_MAX_DEFAULT`` members, star edges to the
+    bucket minimum above it. Its member-set dedup is what keeps the pair
+    volume down here (the difference between 20 M and 600 k shuffled rows
+    on a 16x-near-dup corpus): near-identical docs agree on most of their
+    b bands, so the same member set would otherwise expand b times.
     """
     config = config or DedupConfig()
-    collect_cap = config.max_band_bucket or COLLECT_CAP
-    # EAGER lineage cut on the NARROW band rows: tag_bucket_stats consumes
-    # them twice (partial agg + join-back probe), and AQE materializes the
-    # two join inputs as CONCURRENT query stages — racing consumers of a
-    # lazy cut BOTH compute it, re-running everything upstream. When the
-    # signature checkpoint itself is lazy (big-corpus path), that meant
-    # the whole signature KERNEL ran twice side by side (measured at a
-    # 2.5M-turn corpus: two identical 21.5 s MapInPandas+Generate stages —
-    # half the pipeline wall). The eager barrier serializes ONE
-    # materialization of the 16-byte/row band table.
-    buckets = (
-        band_buckets(signatures, config)
-        .select("conv_id", "band_hash")
-        .transform(lambda _df: cut_lineage(_df, eager=True))
-    )
-    # (band_id is folded into band_hash by the xxhash64; carrying it would
-    # only widen the 32x-exploded shuffle rows)
-
-    # SCALE PATH (default salt_buckets>1): salted algebraic partial agg +
-    # AQE-splittable join-back; window form for salt<=1 (small corpora).
-    # Shared with the substring pass — see operators/skew.py.
-    # same two-concurrent-consumer shape downstream (huge_pairs + members
-    # both read tagged) -> same eager rationale as the buckets cut above
-    tagged = tag_bucket_stats(
-        buckets,
+    # band_id is folded into band_hash by the xxhash64; carrying it would
+    # only widen the 32x-exploded shuffle rows
+    return bucket_pairs(
+        band_buckets(signatures, config),
         "band_hash",
+        allpairs_max=ALLPAIRS_MAX_DEFAULT,
         salt_buckets=config.band_salt_buckets,
         forced_smj=config.forced_smj,
-    ).select("conv_id", "band_hash", "bucket_n", "bucket_rep").transform(
-        lambda _df: cut_lineage(_df, eager=True)
-    )
-
-    # skew guard: never collect_list a mega-bucket (boilerplate content can
-    # put millions of docs in one bucket) — emit star edges row-wise instead
-    huge_pairs = (
-        tagged.filter(F.col("bucket_n") > collect_cap)
-        .filter(F.col("conv_id") != F.col("bucket_rep"))
-        .select(F.col("bucket_rep").alias("a"), F.col("conv_id").alias("b"))
-    )
-
-    # lazy cut: under AQE, building it already runs the collect_list and
-    # member-set dedup shuffle stages on this thread (measured 0.18-0.40 s
-    # per lazy cut on the `planted` benchmark, 4 cores); only the final
-    # stage that writes the blocks is deferred to small/large's first reader
-    members = (
-        tagged.filter(F.col("bucket_n") <= collect_cap)
-        .groupBy("band_hash")
-        .agg(F.sort_array(F.collect_list("conv_id")).alias("members"))
-        # across-band dedup: one row per distinct member set
-        .dropDuplicates(["members"])
-        .withColumn("bucket_n", F.size("members"))
-        .transform(lambda _df: cut_lineage(_df, eager=False))
-    )
-
-    small = members.filter(F.col("bucket_n") <= allpairs_max)
-    large = members.filter(F.col("bucket_n") > allpairs_max)
-
-    # small buckets: all-pairs within bucket (reference clique semantics,
-    # J2) via nested transform — no self-join, no window
-    small_pairs = small.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(members, (x, i) -> "
-                "transform(slice(members, i + 2, size(members) - i - 1), "
-                "y -> struct(x as a, y as b))))"
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
-
-    # large buckets: star edges to the bucket minimum (O(n), CC-sufficient)
-    large_pairs = large.select(
-        F.col("members")[0].alias("a"),
-        F.explode(F.expr("slice(members, 2, size(members) - 1)")).alias("b"),
-    )
-
-    return (
-        small_pairs.unionByName(large_pairs)
-        .unionByName(huge_pairs)
-        .dropDuplicates(["a", "b"])
-        .withColumn("evidence", F.lit("lsh"))
-    )
+    ).withColumn("evidence", F.lit("lsh"))
 
 
 def bucket_stats(signatures: DataFrame, config: DedupConfig | None = None,

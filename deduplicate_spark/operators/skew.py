@@ -13,12 +13,17 @@ skew-join CAN split.
 
 ``salt_buckets <= 1`` keeps the single-shuffle window form as a small-corpus
 fast path (measured ~2x faster at sandbox scale, unusable at 100x).
+
+:func:`bucket_pairs` turns tagged buckets into candidate edges for every
+batch stage that pairs collision buckets.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from deduplicate_spark.lineage import cut_lineage
 
 
 def maybe_merge_hint(df: DataFrame, forced: bool | None = True) -> DataFrame:
@@ -147,6 +152,59 @@ def tag_bucket_stats(
         F.count(F.lit(1)).over(w).alias("bucket_n"),
         F.min(id_col).over(w).alias("bucket_rep"),
     ).filter(F.col("bucket_n") > 1)
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    key: str,
+    *,
+    allpairs_max: int,
+    id_col: str = "conv_id",
+    salt_buckets: int = 8,
+    forced_smj: bool = True,
+) -> DataFrame:
+    """rows(..., id_col, key) -> candidate edges (a, b), ``a < b``, no
+    duplicate rows, from every collision bucket of ``key``.
+
+    Buckets of at most ``allpairs_max`` members emit all pairs: each
+    collapses to its sorted member array, equal arrays are deduped (near-dup
+    docs share most LSH bands, so one member set recurs per band), and a
+    nested ``transform`` expands them — no self-join, no window. Bigger
+    buckets emit row-wise star edges to the bucket minimum: O(n) rows, the
+    connectivity CC needs, and no member array for a hot bucket.
+
+    Both cuts are EAGER: each input has two readers that AQE runs as
+    concurrent stages, and racing readers of a lazy cut both recompute it
+    (measured: the signature kernel ran twice side by side). The narrowed
+    rows feed the stats aggregate and the join-back; the tagged rows feed
+    both tiers."""
+    narrow = cut_lineage(rows.select(id_col, key), eager=True)
+    tagged = cut_lineage(
+        tag_bucket_stats(
+            narrow, key, id_col=id_col, salt_buckets=salt_buckets, forced_smj=forced_smj
+        ).select(id_col, key, "bucket_n", "bucket_rep"),
+        eager=True,
+    )
+    clique_pairs = (
+        tagged.filter(F.col("bucket_n") <= allpairs_max)
+        .groupBy(key)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("members"))
+        .dropDuplicates(["members"])
+        .select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(members, (x, i) -> "
+                    "transform(slice(members, i + 2, size(members) - i - 1), "
+                    "y -> struct(x as a, y as b))))"
+                )
+            ).alias("p")
+        )
+        .select("p.a", "p.b")
+    )
+    star_pairs = tagged.filter(
+        (F.col("bucket_n") > allpairs_max) & (F.col(id_col) != F.col("bucket_rep"))
+    ).select(F.col("bucket_rep").alias("a"), F.col(id_col).alias("b"))
+    return clique_pairs.unionByName(star_pairs).dropDuplicates(["a", "b"])
 
 
 def salted_struct_min(

@@ -12,8 +12,9 @@ scale-correct graft:
      sharing an exact substring of length >= t share at least one selected
      fingerprint. Fingerprints are ~|doc| * 2/W — tiny. Vectorized numpy in
      ``mapInPandas``.
-  2. **Bucket join**: groupBy(fingerprint) count>1 (the A1 prefilter again)
-     -> candidate pairs, star-pairing for huge buckets as in the LSH stage.
+  2. **Bucket pairing**: each fingerprint is a collision bucket of
+     ``skew.bucket_pairs`` (count>1, the A1 prefilter again) -> candidate
+     pairs, star-pairing for huge buckets as in the LSH stage.
   3. **Verification: suffix array.** Per candidate pair, build the suffix
      array of ``a + SEP + b`` (numpy prefix-doubling, O(n log n)), Kasai LCP,
      and take the max LCP between suffixes from different docs = exact
@@ -35,11 +36,11 @@ from dataclasses import replace
 from deduplicate_spark.config import DedupConfig
 from deduplicate_spark.operators.minhash import _splitmix64
 from deduplicate_spark.operators.skew import (
+    bucket_pairs,
     maybe_merge_hint,
     measured_forced_smj,
     measured_small_corpus,
     spread_over_slots,
-    tag_bucket_stats,
 )
 from deduplicate_spark.lineage import cut_lineage
 
@@ -287,11 +288,10 @@ def doc_fingerprints(docs: DataFrame, config: DedupConfig | None = None) -> Data
     )
 
 
-def substring_pairs(
-    docs: DataFrame,
-    config: DedupConfig | None = None,
-    allpairs_max: int = 64,
-) -> DataFrame:
+_ALLPAIRS_MAX = 64  # all-pairs ceiling of a fingerprint bucket
+
+
+def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataFrame:
     """Confirmed substring-dup edges (a, b, evidence='substring')."""
     config = config or DedupConfig()
     # Candidate-economy: fingerprint with the WIDEST w-gram the guarantee
@@ -341,41 +341,16 @@ def substring_pairs(
     fp_input = docs
     if config.kernel_small_corpus:
         fp_input = spread_over_slots(fp_input)
-    # EAGER lineage cut on the narrow (conv_id, fp) rows: tag_bucket_stats
-    # consumes them twice (partial agg + join-back probe), and AQE
-    # materializes the two join inputs as CONCURRENT query stages — with no
-    # cut (or a lazy one, which racing jobs both compute) each side re-runs
-    # the winnowing kernel over the full text (measured at a 29k-doc
-    # corpus: two back-to-back 3.4s kernel jobs for one fingerprint pass).
-    # The barrier costs one materialization of a ~16-byte/row table.
-    fps = cut_lineage(doc_fingerprints(fp_input, config), eager=True)
-
-    # salted stats (VERDICT r2 #2): a winnowing fingerprint shared by 10^7
-    # boilerplate docs at 100 TB must not become a one-task window straggler
-    # — same skew-safe helper as the LSH band stage.
-    # EAGER: consumed by both the small and large branches, which AQE
-    # materializes concurrently — a lazy cut lets the racers both re-run
-    # the bucket-stats join (same pattern as the LSH band stage)
-    annotated = tag_bucket_stats(
-        fps, "fp", salt_buckets=config.band_salt_buckets, forced_smj=config.forced_smj
-    ).transform(lambda _df: cut_lineage(_df, eager=True))
-
-    small = annotated.filter(F.col("bucket_n") <= allpairs_max)
-    l = small.select("fp", F.col("conv_id").alias("a"))
-    r = small.select("fp", F.col("conv_id").alias("b"))
-    # forced SMJ: both sides are the corpus-sized fingerprint table — same
-    # planner-estimate broadcast OOM class as the stats join-back (skew.py)
-    small_pairs = (
-        l.join(maybe_merge_hint(r, config.forced_smj), "fp")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+    # one collision bucket per winnowing fingerprint: a fingerprint shared
+    # by 10^7 boilerplate docs takes the salted stats and the star tier,
+    # never a one-task window straggler
+    cand = bucket_pairs(
+        doc_fingerprints(fp_input, config),
+        "fp",
+        allpairs_max=_ALLPAIRS_MAX,
+        salt_buckets=config.band_salt_buckets,
+        forced_smj=config.forced_smj,
     )
-    large_pairs = (
-        annotated.filter(F.col("bucket_n") > allpairs_max)
-        .filter(F.col("conv_id") != F.col("bucket_rep"))
-        .select(F.col("bucket_rep").alias("a"), F.col("conv_id").alias("b"))
-    )
-    cand = small_pairs.unionByName(large_pairs).dropDuplicates(["a", "b"])
 
     # texts is corpus-sized WITH doc_text: forced SMJ so a planner size
     # under-estimate can never broadcast-build it on the driver (same class

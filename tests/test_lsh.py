@@ -43,11 +43,11 @@ def test_salted_equals_window_path(spark):
 
 
 def test_mega_band_star_edges_no_blowup(spark):
-    # one hot band bucket far above max_band_bucket: must produce star edges
+    # one hot band bucket far above allpairs_max: must produce star edges
     # (O(n) rows), identical under both stat paths
     n = 5000
-    cfg_s = DedupConfig(band_salt_buckets=16, max_band_bucket=100, **CFG)
-    cfg_w = DedupConfig(band_salt_buckets=0, max_band_bucket=100, **CFG)
+    cfg_s = DedupConfig(band_salt_buckets=16, **CFG)
+    cfg_w = DedupConfig(band_salt_buckets=0, **CFG)
     sigs = _sig_df(spark, [("hot", n, 7)]).repartition(8)
     ps = _pairs(candidate_pairs(sigs, cfg_s))
     assert len(ps) == n - 1  # star to min member, not n^2/2 clique
@@ -57,11 +57,18 @@ def test_mega_band_star_edges_no_blowup(spark):
 
 
 def test_config_knobs_change_behavior(spark):
-    # max_band_bucket is live: a 30-doc bucket is a clique-free star below
-    # the cap, all-pairs-free either way (30 > allpairs_max=16 -> star)
-    sigs = _sig_df(spark, [("g", 30, 5)])
-    star = _pairs(candidate_pairs(sigs, DedupConfig(max_band_bucket=10, **CFG)))
-    assert len(star) == 29
+    # the allpairs_max boundary (16 for LSH bands): a 16-doc bucket is a
+    # full clique, a 17-doc bucket and a 30-doc bucket are stars to their
+    # minimum member
+    sigs = _sig_df(spark, [("c", 16, 5), ("s", 17, 6), ("g", 30, 7)])
+    ps = _pairs(candidate_pairs(sigs, DedupConfig(**CFG)))
+    by_group = {p: {(a, b) for a, b in ps if a.startswith(p)} for p in "csg"}
+    assert len(by_group["c"]) == 16 * 15 // 2 == 120
+    for prefix, n in (("s", 17), ("g", 30)):
+        assert by_group[prefix] == {
+            (f"{prefix}{0:06d}", f"{prefix}{i:06d}") for i in range(1, n)
+        }
+    assert len(ps) == 120 + 16 + 29
 
 
 @pytest.mark.parametrize("empty_cluster,expect_empty_dupes", [(True, True), (False, False)])

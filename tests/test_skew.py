@@ -5,11 +5,12 @@ unsalted hot-bucket window in the repo)."""
 from __future__ import annotations
 
 import hashlib
+from itertools import combinations
 
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
-from deduplicate_spark.operators.skew import tag_bucket_stats
+from deduplicate_spark.operators.skew import bucket_pairs, tag_bucket_stats
 from deduplicate_spark.operators.substring import substring_pairs
 
 
@@ -31,6 +32,43 @@ def test_tag_bucket_stats_salted_equals_window(spark):
     assert "Window" not in plan
     assert "BroadcastHashJoin" not in plan
     assert "SortMergeJoin" in plan
+
+
+def test_bucket_pairs_matches_python_reference(spark):
+    """The shared pairing operator against a pure-Python restatement of its
+    rule: all pairs in buckets of at most allpairs_max members, star edges
+    to the bucket minimum above it. Buckets sit on both sides of the
+    boundary, one is hot, two keys share one member set (deduped before
+    expansion) and one doc sits in two buckets of different tiers."""
+    cap = 16
+    buckets = {
+        1: [0, 1],
+        2: list(range(100, 116)),  # exactly cap: clique
+        3: [1] + list(range(200, 216)),  # cap + 1: star to 1
+        4: list(range(1000, 4000)),  # hot: 3,000 members
+        5: list(range(300, 305)),
+        6: list(range(300, 305)),  # same member set as key 5
+        7: [500],  # singleton: no pairs
+    }
+    rows = [(i, k) for k, members in buckets.items() for i in members]
+    df = spark.createDataFrame(rows, "doc_id long, k int").repartition(4)
+
+    expected = set()
+    for members in buckets.values():
+        m = sorted(members)
+        if len(m) <= cap:
+            expected |= set(combinations(m, 2))
+        else:
+            expected |= {(m[0], x) for x in m[1:]}
+
+    for salt in (8, 0):
+        out = bucket_pairs(df, "k", allpairs_max=cap, id_col="doc_id", salt_buckets=salt)
+        got = [(r.a, r.b) for r in out.collect()]
+        assert len(got) == len(set(got))  # no duplicate rows
+        assert all(a < b for a, b in got)
+        assert set(got) == expected, salt
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "BroadcastHashJoin" not in plan
 
 
 def _mega_fp_docs(spark, n):
