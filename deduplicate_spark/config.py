@@ -66,17 +66,6 @@ class DedupConfig:
     # bounded extra confirm cost, no correctness effect. 'perm' remains
     # fully supported for strict Broder-estimator reproduction.
     minhash_mode: str = "oph"
-    # OPH-only: interleave signature components so each contiguous LSH
-    # band reads bins a stride of `lsh_bands` apart. Rotation densification
-    # makes ADJACENT bins of sparse docs correlated (runs of empties borrow
-    # from one source), and contiguous bands amplify a single shared
-    # shingle into band collisions — measured 13x candidate-pair inflation
-    # on the real sf0.1 corpus (6,773 vs perm's 522; flagship wall 2x).
-    # The strided layout restores perm-level candidate volume (578) with
-    # identical true-pair containment; see _oph_stride_order. False
-    # reproduces the naive adjacent layout. Ignored under 'perm' (iid
-    # components — banding layout immaterial, 522 vs 526 measured).
-    oph_band_stride: bool = True
     lsh_bands: int = 32          # b
     lsh_rows: int = 4            # r  (b*r must equal num_perm)
     max_shingle_chars: int = 200_000   # cap per-doc kernel input (skew guard)
@@ -179,6 +168,9 @@ class DedupConfig:
     verify_long_ids: bool = True
 
     # --- empty-doc handling (zero_hash analog, dupe_analysis.py:31,335-340) ---
+    # a doc with no character outside Unicode whitespace (str.strip()'s
+    # set) gets EMPTY_SHA1 and never reaches the kernel. True clusters all
+    # such docs together; False leaves them untouched by every stage.
     empty_cluster: bool = True
 
     # sets the kernel_small_corpus gate threshold (shuffle_partitions x
@@ -211,7 +203,9 @@ class DedupConfig:
         r6 on, physical knobs join the exclusion set and stay out of the
         hash. Removing a SEMANTIC field changes the hash once the same safe
         way: dropping ``max_band_bucket`` (it chose between two star tiers
-        that emitted the same edges) makes older store roots recompute."""
+        that emitted the same edges) and ``oph_band_stride`` (nothing set
+        it to False; the strided OPH layout is now the only one) each make
+        older store roots recompute."""
         payload = json.dumps(
             {k: v for k, v in asdict(self).items() if k not in _PHYSICAL_KNOBS},
             sort_keys=True,

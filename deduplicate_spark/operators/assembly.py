@@ -13,19 +13,35 @@ Unlike the reference, hashing a column is ~free relative to the shuffle, so
 we do not lazily defer full hashes; the *cascade* stays (later stages only
 process collision groups) but hash computation is single-pass.
 
-Empty docs get the reference's zero_hash treatment (S5;
-dupe_analysis.py:31,335-340): all-empty conversations share EMPTY_SHA1 and
-short-circuit into one cluster.
+Content-empty docs get the reference's zero_hash treatment (S5;
+dupe_analysis.py:31,335-340): docs with no character outside Unicode
+whitespace share EMPTY_SHA1 and short-circuit into one cluster. Every stage
+tells an empty doc by ``exact_sha == EMPTY_SHA1``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig, EMPTY_SHA1
 
 PREFIX_CHARS = 1024  # beg_hash window size analog (dupe_analysis.py:19 chunk=1024)
+
+# every character str.isspace() accepts: the set str.strip() removes, which
+# the kernels (minhash.py, substring.py) and oracle.py use to call a text
+# empty. Java's (?U)\s leaves out U+001C..U+001F, so the set is spelled out
+# (tests/test_assembly.py pins it to str.isspace()).
+UNICODE_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def content_empty(text: Column) -> Column:
+    """True when ``text`` has no character outside :data:`UNICODE_WHITESPACE`
+    — Python's ``not text.strip()``, as a column."""
+    return F.length(F.trim(text, F.lit(UNICODE_WHITESPACE))) == 0
 
 
 def apply_excludes(turns: DataFrame, config: DedupConfig) -> DataFrame:
@@ -81,6 +97,7 @@ def doc_hash_keys(assembled: DataFrame) -> DataFrame:
     produce BYTE-IDENTICAL keys for the same conversation (pinned by
     tests/test_sessionize.py). Stateless projection — valid on a streaming
     DataFrame."""
+    empty = content_empty(F.col("doc_text"))
     return assembled.select(
         "conv_id",
         "doc_text",
@@ -92,10 +109,10 @@ def doc_hash_keys(assembled: DataFrame) -> DataFrame:
         # against BYTE thresholds, so they get their own column, computed
         # in this same projection (no extra scan).
         F.octet_length("doc_text").cast("long").alias("total_bytes"),
-        F.when(F.length(F.trim(F.col("doc_text"))) == 0, F.lit(EMPTY_SHA1))
+        F.when(empty, F.lit(EMPTY_SHA1))
         .otherwise(F.sha1(F.encode(F.substring("doc_text", 1, PREFIX_CHARS), "UTF-8")))
         .alias("prefix_sha"),
-        F.when(F.length(F.trim(F.col("doc_text"))) == 0, F.lit(EMPTY_SHA1))
+        F.when(empty, F.lit(EMPTY_SHA1))
         .otherwise(F.sha1(F.encode(F.col("doc_text"), "UTF-8")))
         .alias("exact_sha"),
     )
@@ -104,8 +121,9 @@ def doc_hash_keys(assembled: DataFrame) -> DataFrame:
 def empty_conversations(turns: DataFrame, config: DedupConfig | None = None) -> DataFrame:
     """G6 analog (deduplicate.py:533-537; dupe_analysis.py:636-638): the
     reference injects empty dirs as deletable objects. Here: conv_ids whose
-    rows are ALL excluded or all-blank — they produce no dedup cluster but
-    must still surface in reports as droppable. Returns (conv_id, reason)."""
+    rows are ALL excluded or all content-empty (:func:`content_empty`) —
+    they produce no dedup cluster but must still surface in reports as
+    droppable. Returns (conv_id, reason)."""
     config = config or DedupConfig()
     all_ids = turns.select("conv_id").distinct()
     surviving = apply_excludes(turns, config).select("conv_id").distinct()
@@ -115,8 +133,8 @@ def empty_conversations(turns: DataFrame, config: DedupConfig | None = None) -> 
     blank = (
         apply_excludes(turns, config)
         .groupBy("conv_id")
-        .agg(F.max(F.length(F.trim(F.coalesce("text", F.lit(""))))).alias("_max_len"))
-        .filter(F.col("_max_len") == 0)
+        .agg(F.bool_and(content_empty(F.coalesce("text", F.lit("")))).alias("_blank"))
+        .filter("_blank")
         .select("conv_id", F.lit("all_turns_blank").alias("reason"))
     )
     return fully_excluded.unionByName(blank)

@@ -207,9 +207,7 @@ def doc_signature(
     — one implementation, two harnesses, both modes."""
     if config.minhash_mode == "oph":
         sig = oph_signature(shingles, config.num_perm)
-        if config.oph_band_stride:
-            sig = sig[_oph_stride_order(config.num_perm, config.lsh_bands, config.lsh_rows)]
-        return sig
+        return sig[_oph_stride_order(config.num_perm, config.lsh_bands, config.lsh_rows)]
     return minhash_signature(shingles, a, b)
 
 

@@ -28,7 +28,7 @@ from dataclasses import dataclass, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.config import EMPTY_SHA1, DedupConfig
 from deduplicate_spark.operators.assembly import assemble_docs
 from deduplicate_spark.operators.components import connected_components
 from deduplicate_spark.operators.lsh import candidate_pairs
@@ -93,8 +93,9 @@ def exact_representatives(
     salt_buckets: int = 8,
     forced_smj: bool = True,
 ) -> DataFrame:
-    """One doc per distinct exact hash (min conv_id), excluding empty docs —
-    the only rows the expensive signature kernel sees.
+    """One doc per distinct exact hash (min conv_id), excluding content-empty
+    docs (``EMPTY_SHA1``) — the only rows the expensive signature kernel
+    sees.
 
     Salted algebraic argmin + semi-join-back instead of a
     ``row_number() over (partition by exact_sha)`` window: the argmin is a
@@ -103,7 +104,7 @@ def exact_representatives(
     redundant in the join key). The single-column key lets Spark's runtime
     bloom-filter injection prune non-representative rows — on a high-dup
     corpus most of the fat ``doc_text`` bytes — BEFORE the exchange."""
-    src = docs.filter((F.col("total_len") > 0) & F.col(key).isNotNull())
+    src = docs.filter(F.col(key) != EMPTY_SHA1)
     best = salted_struct_min(
         src.select(key, F.col("conv_id").alias("_ord")),
         key,
@@ -309,14 +310,15 @@ def run_pipeline(
     kmeta = kid(meta)
     ktext = kid(docs.select("conv_id", "doc_text"))
 
-    # zero_hash analog (dupe_analysis.py:31,335-340): empty docs share
-    # EMPTY_SHA1 and cluster together when empty_cluster=True (reference
-    # behavior); False leaves them untouched by every stage.
-    exact_src = kmeta if config.empty_cluster else kmeta.filter(F.col("total_len") > 0)
+    # zero_hash analog (dupe_analysis.py:31,335-340): content-empty docs
+    # share EMPTY_SHA1 and cluster together when empty_cluster=True
+    # (reference behavior); False leaves them untouched by every stage.
+    non_empty = F.col("exact_sha") != EMPTY_SHA1
+    exact_src = kmeta if config.empty_cluster else kmeta.filter(non_empty)
 
     # exact-distinct representatives: argmin over narrow meta; only the
     # winning ids semi-join the text table (one text pass into the kernel)
-    rep_src = kmeta.filter((F.col("total_len") > 0) & F.col("exact_sha").isNotNull())
+    rep_src = kmeta.filter(non_empty)
     rep_ids = salted_struct_min(
         rep_src.select("exact_sha", F.col("conv_id").alias("_ord")),
         "exact_sha",

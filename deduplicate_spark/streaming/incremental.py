@@ -30,12 +30,15 @@ the BATCH, not the accumulated history:
     hit at planning time and then semi-filters by the batch's distinct band
     hashes — per-batch BYTES READ track the batch, not history. The compact
     (exact_sha, rep) side table is partitioned and pruned the same way.
-  * the batch path's pair-volume caps are reused: small touched buckets
-    produce all pairs with >= 1 new endpoint (never old x old); buckets
-    above ``allpairs_max`` produce star edges from each new member to the
-    bucket target (the minimal OLD member when one exists, so new arrivals
-    attach to the established cluster; the minimal new member otherwise).
-    A hot boilerplate bucket therefore costs O(new members) per batch.
+  * band pairs come from the batch operator ``skew.bucket_pairs`` with
+    its caps (:func:`band_pairs`): small touched buckets produce all pairs
+    with >= 1 new endpoint (never old x old); buckets above
+    ``allpairs_max`` produce star edges from each new member to the bucket
+    target (the minimal OLD member when one exists, so new arrivals attach
+    to the established cluster; the minimal new member otherwise). A hot
+    boilerplate bucket therefore costs O(new members) per batch. Edges
+    between an old and a new member are written (old, new); new x new
+    edges are written (smaller, larger) conv_id.
   * confirmation (SimHash / min-Jaccard / complete_hash) identical to the
     batch path; historical signatures are fetched per-endpoint via a
     broadcast semi-join, never scanned wholesale.
@@ -55,14 +58,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.config import EMPTY_SHA1, DedupConfig
 from deduplicate_spark.operators.assembly import assemble_docs
 from deduplicate_spark.operators.lsh import ALLPAIRS_MAX_DEFAULT, band_buckets
 from deduplicate_spark.operators.minhash import compute_signatures
 from deduplicate_spark.operators.simhash import confirm_pairs
+from deduplicate_spark.operators.skew import bucket_pairs
 from deduplicate_spark.lineage import cut_lineage
 
 
@@ -210,6 +215,33 @@ def _collect_mods(df: DataFrame, key: str, n: int) -> list[int]:
     ]
 
 
+def band_pairs(members: DataFrame, *, allpairs_max: int, config: DedupConfig) -> DataFrame:
+    """members(conv_id, band_hash, new) -> candidate edges (a, b, evidence),
+    pairing each touched band bucket through the batch operator
+    :func:`~deduplicate_spark.operators.skew.bucket_pairs`.
+
+    Members are ``(new, conv_id)`` structs and old rows carry
+    ``new=False``, so each bucket's minimum — the star target above
+    ``allpairs_max`` — is its minimal OLD member when one exists, its
+    minimal new member otherwise. Pairs with no new endpoint are dropped
+    (history is never re-paired), and so are self-pairs of a conv_id that
+    is both old and new."""
+    return (
+        bucket_pairs(
+            members.select(F.struct("new", "conv_id").alias("member"), "band_hash"),
+            "band_hash",
+            allpairs_max=allpairs_max,
+            id_col="member",
+            salt_buckets=config.band_salt_buckets,
+            forced_smj=config.forced_smj,
+        )
+        .filter(F.col("a.new") | F.col("b.new"))
+        .select(F.col("a.conv_id").alias("a"), F.col("b.conv_id").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .withColumn("evidence", F.lit("lsh"))
+    )
+
+
 def process_batch(
     spark: SparkSession,
     turns_batch: DataFrame,
@@ -235,52 +267,40 @@ def process_batch(
         epoch = 0 if first_batch else _next_epoch(spark, state.docs_path)
 
     def prior_state(path: str, mods: list[int], empty_like: DataFrame) -> DataFrame:
-        """Guarded prior-state read (ADVICE r5 medium): process_batch writes
-        its five state tables in sequence, so a crash between the docs write
-        and a later table's write leaves the docs probe saying "not first
-        batch" while e.g. reps/buckets don't exist yet — the replay must
-        treat a MISSING table as "no prior state" (empty, same schema as the
-        batch-local table) rather than raise PATH_NOT_FOUND forever. The
-        epoch's own partial rows are excluded by exclude_wseq anyway, so the
-        fallback and the pruned read agree on crash-replay semantics."""
+        """Pruned prior state without this epoch's own rows. A MISSING
+        table reads as empty (``empty_like``'s schema): a crash between the
+        docs write and a later state write leaves docs saying "not first
+        batch" while e.g. reps/buckets do not exist yet (ADVICE r5)."""
         if path not in state._known_tables:
             if not _table_exists(spark, path):
                 return empty_like.limit(0)
             state._known_tables.add(path)
         return pruned_state_read(spark, path, mods, exclude_wseq=epoch)
-    # drop the gate-only byte column: the docs STATE dir schema must stay
-    # stable across versions (appends + unionByName with prior-run state)
-    new_docs = (
-        assemble_docs(turns_batch, config)
-        .drop("total_bytes")
-        .transform(lambda _df: cut_lineage(_df, eager=False))
-    )
 
-    empty_schema = "a string, b string, evidence string"
-    no_edges = spark.createDataFrame([], empty_schema)
+    # drop the gate-only byte column: the docs STATE dir schema must stay
+    # stable across versions (appends + unionByName with prior-run state).
+    # Cuts follow the batch rule (bucket_pairs, run_pipeline): eager, and
+    # only on tables that two readers read — racing readers of a lazy cut
+    # both recompute it.
+    new_docs = cut_lineage(assemble_docs(turns_batch, config).drop("total_bytes"))
+
+    # zero_hash analog: content-empty docs (EMPTY_SHA1) take part only when
+    # empty_cluster=True, and never reach the kernel
+    non_empty = F.col("exact_sha") != EMPTY_SHA1
 
     # ---- exact fast path ------------------------------------------------
-    # zero_hash analog: empties participate only when empty_cluster=True
-    exact_new = (
-        new_docs if config.empty_cluster else new_docs.filter(F.col("total_len") > 0)
-    )
+    exact_new = new_docs if config.empty_cluster else new_docs.filter(non_empty)
     if first_batch:
-        old_reps = None
-        instant_edges = no_edges
+        instant_edges = spark.createDataFrame([], "a string, b string, evidence string")
         genuinely_new = new_docs
-        n_instant = 0
     else:
-        # compact incremental (exact_sha, old_rep) side table — the
-        # "existing analysis" fast path (dupe_analysis.py:106-113) without
-        # re-aggregating the ever-growing docs state (VERDICT r2 #3). One
-        # row per distinct sha ever seen; first-writer-wins rep (the
-        # merge_runs priority, connectivity-equivalent: later smaller-id
-        # holders are linked by their own instant edges).
-        # partition-pruned like the fat tables (VERDICT r3 #3): the table is
-        # compact (2 columns) but grows with distinct-sha history — pruning
-        # by the batch's sha-mods keeps the exact fast path's bytes O(batch).
-        # Mods come from new_docs (a superset of exact_new's shas) so the
-        # anti-join below sees every historical sha the batch could hit.
+        # compact (exact_sha, old_rep) side table — the "existing analysis"
+        # fast path (dupe_analysis.py:106-113) without re-aggregating the
+        # docs state (VERDICT r2 #3). One row per distinct sha ever seen,
+        # first writer wins (later smaller-id holders are linked by their
+        # own instant edges). Pruned to O(batch) bytes by the sha-mods of
+        # new_docs, a superset of exact_new's shas, so the anti-join below
+        # sees every historical sha the batch could hit.
         smods = _collect_mods(
             new_docs.select("exact_sha").distinct(), "exact_sha", state.state_partitions
         )
@@ -289,92 +309,44 @@ def process_batch(
             smods,
             new_docs.select("exact_sha", F.col("conv_id").alias("old_rep")),
         )
-        matched = exact_new.join(old_reps, "exact_sha").transform(lambda _df: cut_lineage(_df, eager=False))
-        n_instant = matched.count()
-        instant_edges = matched.select(
+        instant_edges = exact_new.join(old_reps, "exact_sha").select(
             F.col("old_rep").alias("a"),
             F.col("conv_id").alias("b"),
             F.lit("exact").alias("evidence"),
         )
-        genuinely_new = new_docs.join(
-            old_reps.select("exact_sha"), "exact_sha", "left_anti"
+        genuinely_new = cut_lineage(
+            new_docs.join(old_reps.select("exact_sha"), "exact_sha", "left_anti")
         )
 
     # batch-internal exact groups: star edges + one rep per sha, exactly
     # the batch cascade's work-avoidance (pipeline.py exact stage)
-    genuinely_new = genuinely_new.transform(lambda _df: cut_lineage(_df, eager=False))
     internal_exact_edges = exact_star_edges(
-        genuinely_new
-        if config.empty_cluster
-        else genuinely_new.filter(F.col("total_len") > 0)
+        genuinely_new if config.empty_cluster else genuinely_new.filter(non_empty)
     )
     reps = exact_representatives(genuinely_new)
 
     # ---- near path: kernel on genuinely-new reps only -------------------
-    new_sigs = compute_signatures(reps, config).transform(lambda _df: cut_lineage(_df, eager=False))
-    new_buckets = (
-        band_buckets(new_sigs, config)
-        .select("conv_id", "band_hash")
-        .transform(lambda _df: cut_lineage(_df, eager=False))
-    )
+    new_sigs = cut_lineage(compute_signatures(reps, config))
+    new_buckets = cut_lineage(band_buckets(new_sigs, config).select("conv_id", "band_hash"))
 
-    if first_batch:
-        touched_old = spark.createDataFrame([], "conv_id string, band_hash bigint")
-    else:
-        # probe ONLY the buckets this batch touches, at two levels:
-        # (1) PARTITION PRUNING — the state is written partitioned by
-        #     pmod(xxhash64(band_hash), N); the batch's <= N distinct mods
-        #     prune untouched partitions at planning time, so bytes READ
-        #     track the batch's key spread, not accumulated history;
-        # (2) the broadcast semi-filter of the batch's distinct band hashes
-        #     drops non-colliding rows inside the touched partitions.
-        # History is never re-banded (the state IS the banding).
+    members = new_buckets.withColumn("new", F.lit(True))
+    if not first_batch:
+        # probe ONLY the buckets this batch touches: partition pruning on
+        # the batch's band-hash mods at planning time, then a broadcast
+        # semi-filter on its distinct band hashes — bytes READ track the
+        # batch, not history. History is never re-banded (the state IS
+        # the banding).
         new_keys = new_buckets.select("band_hash").distinct()
         bmods = _collect_mods(new_keys, "band_hash", state.state_partitions)
         touched_old = prior_state(state.buckets_path, bmods, new_buckets).join(
             F.broadcast(new_keys), "band_hash"
         )
-
-    combined = new_buckets.withColumn("is_new", F.lit(True)).unionByName(
-        touched_old.withColumn("is_new", F.lit(False))
-    )
-    stats = combined.groupBy("band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_n"),
-        F.min(F.when(~F.col("is_new"), F.col("conv_id"))).alias("rep_old"),
-        F.min("conv_id").alias("rep_any"),
-    )
-    tagged = (
-        combined.join(stats, "band_hash")
-        .filter(F.col("bucket_n") > 1)
-        .withColumn("target", F.coalesce("rep_old", "rep_any"))
-        .transform(lambda _df: cut_lineage(_df, eager=False))
-    )
-
-    small = tagged.filter(F.col("bucket_n") <= allpairs_max)
-    l = small.select("band_hash", F.col("conv_id").alias("a"), F.col("is_new").alias("na"))
-    r = small.select("band_hash", F.col("conv_id").alias("b"), F.col("is_new").alias("nb"))
-    small_pairs = (
-        l.join(r, "band_hash")
-        .filter(F.col("a") < F.col("b"))
-        .filter(F.col("na") | F.col("nb"))  # never old x old
-        .select("a", "b")
-    )
-    # big buckets: O(new members) star edges to the bucket target
-    large_pairs = (
-        tagged.filter(F.col("bucket_n") > allpairs_max)
-        .filter(F.col("is_new") & (F.col("conv_id") != F.col("target")))
-        .select(F.col("target").alias("a"), F.col("conv_id").alias("b"))
-    )
-    cand = (
-        small_pairs.unionByName(large_pairs)
-        .dropDuplicates(["a", "b"])
-        .withColumn("evidence", F.lit("lsh"))
-    )
+        members = members.unionByName(touched_old.withColumn("new", F.lit(False)))
+    cand = cut_lineage(band_pairs(members, allpairs_max=allpairs_max, config=config))
 
     # confirmation needs signatures (and docs for complete_hash) for the
     # candidates' endpoints only — fetched via broadcast semi-join, never a
     # full history scan
-    cand = cand.transform(lambda _df: cut_lineage(_df, eager=False))
     endpoints = cand.select(F.col("a").alias("conv_id")).unionByName(
         cand.select(F.col("b").alias("conv_id"))
     ).distinct()
@@ -400,25 +372,20 @@ def process_batch(
         "a", "b", "evidence"
     )
 
-    all_edges = instant_edges.unionByName(internal_exact_edges.select("a", "b", "evidence")).unionByName(
-        confirmed
-    )
     # eager barrier on the full edge set, strictly BEFORE any state append
-    # below — preserving read-before-write ordering. It does NOT fold the
-    # upstream lazy cuts (docs, matched, genuinely-new, signatures,
-    # buckets, candidates) into one job: under AQE, building a lazy cut
-    # already runs every shuffle stage below it on this thread (see
-    # lineage.cut_lineage); only each cut's final block-writing stage is
-    # deferred to this job
-    all_edges = all_edges.transform(lambda _df: cut_lineage(_df, eager=True))
+    # below — preserving read-before-write ordering. Each edge carries its
+    # source so the batch metrics come from this one table, not re-run
+    # counts of its inputs.
+    all_edges = cut_lineage(
+        instant_edges.withColumn("source", F.lit("instant"))
+        .unionByName(internal_exact_edges.withColumn("source", F.lit("internal")))
+        .unionByName(confirmed.withColumn("source", F.lit("near")))
+    )
 
     # ---- write state -----------------------------------------------------
-    # fat tables are partitioned by (wseq, key-mod): the key-mod level keeps
-    # per-batch probes pruned (see IncrementalState), the wseq level makes
-    # every write a dynamic-partition overwrite of THIS epoch's rows — a
-    # replayed micro-batch rewrites its own partitions instead of
-    # double-appending (see _write_state). first_batch statically
-    # overwrites, preserving the fresh-run reset semantics.
+    # partitioned by (wseq, key-mod): key-mod keeps the probes pruned, wseq
+    # makes a replayed epoch rewrite its own partitions (see _write_state);
+    # first_batch statically overwrites (the fresh-run reset).
     n_parts = state.state_partitions
     _write_state(new_docs, state.docs_path, epoch, "conv_id", n_parts, reset=first_batch)
     _write_state(
@@ -427,7 +394,7 @@ def process_batch(
     _write_state(
         new_buckets, state.buckets_path, epoch, "band_hash", n_parts, reset=first_batch
     )
-    _write_state(all_edges, state.pairs_path, epoch, reset=first_batch)
+    _write_state(all_edges.drop("source"), state.pairs_path, epoch, reset=first_batch)
     # one (exact_sha, old_rep) row per sha first seen in this batch — the
     # compact side table the next batch's exact fast path reads; sha-mod
     # partitioned like the fat tables so that read stays pruned as history grows
@@ -450,22 +417,35 @@ def process_batch(
         }
     )
 
-    n_confirmed = confirmed.count()
+    by_source = {
+        r["source"]: r["count"] for r in all_edges.groupBy("source").count().collect()
+    }
     return {
         "batch_docs": new_docs.count(),
-        "instant_exact_dupes": n_instant,
+        "instant_exact_dupes": by_source.get("instant", 0),
         "new_signatures": new_sigs.count(),
-        "new_pairs": n_confirmed,
-        "new_edges_total": all_edges.count(),
+        "new_pairs": by_source.get("near", 0),
+        "new_edges_total": sum(by_source.values()),
     }
 
 
+# what Spark raises for a state dir that is missing, or that exists with
+# no data files yet (an empty dir left by a crash in the first epoch)
+_NO_TABLE_CONDITIONS = frozenset({"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"})
+
+
 def _table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether a readable state table is at ``path``. Only a missing or
+    data-less dir counts as absent: any other read failure (a corrupt or
+    foreign file) re-raises, because callers treat absence as a fresh run
+    and statically overwrite every state table."""
     try:
         spark.read.parquet(path).schema
         return True
-    except Exception:
-        return False
+    except AnalysisException as e:
+        if e.getCondition() in _NO_TABLE_CONDITIONS:
+            return False
+        raise
 
 
 def _release(

@@ -36,15 +36,45 @@ def test_exact_sha_matches_python_sha1(spark):
 
 
 def test_empty_docs_get_zero_hash(spark):
-    """All-empty conversations share EMPTY_SHA1 (the reference zero_hash
-    semantics, dupe_analysis.py:31,335-340)."""
+    """Content-empty conversations — no character outside Unicode
+    whitespace, as ``str.strip()`` sees it — share EMPTY_SHA1 for both
+    cascade keys (the reference zero_hash semantics,
+    dupe_analysis.py:31,335-340)."""
+    convs = {
+        "e1": [""],
+        "e2": [""],
+        "spaces": ["   "],
+        "tabs": ["\t\n "],
+        "wide": [" " * 400],
+        "turns": ["", "", ""],  # doc "\n\n"
+        "unicode": ["\u3000\u00a0"],
+        "separators": ["\x1c\x1d\x1e\x1f"],
+        # not whitespace to str.strip(): a real doc
+        "zwsp": ["\u200b"],
+        "text": [" x "],
+    }
     turns = spark.createDataFrame(
-        [("e1", 0, "user", "", "", None), ("e2", 0, "user", "", "", None)],
+        [(cid, i, "user", t, "", None) for cid, ts in convs.items() for i, t in enumerate(ts)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     rows = {r["conv_id"]: r for r in assemble_docs(turns).collect()}
-    assert rows["e1"]["exact_sha"] == EMPTY_SHA1
-    assert rows["e2"]["exact_sha"] == EMPTY_SHA1
+    for cid, texts in convs.items():
+        empty = not "\n".join(texts).strip()
+        assert empty == (cid not in ("zwsp", "text")), cid
+        for key in ("exact_sha", "prefix_sha"):
+            assert (rows[cid][key] == EMPTY_SHA1) == empty, (cid, key)
+
+
+def test_unicode_whitespace_is_str_isspace():
+    """The content-empty set is exactly Python's whitespace (what
+    str.strip() removes), including U+001C..U+001F."""
+    import sys
+
+    from deduplicate_spark.operators.assembly import UNICODE_WHITESPACE
+
+    assert set(UNICODE_WHITESPACE) == {
+        c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()
+    }
 
 
 def test_excludes(spark):

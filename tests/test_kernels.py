@@ -217,8 +217,8 @@ def test_oph_stride_order_layout():
 
 
 def test_doc_signature_oph_stride_dispatch():
-    """doc_signature applies the stride under the default config and
-    reproduces the raw adjacent layout under oph_band_stride=False."""
+    """doc_signature's OPH signature is the raw adjacent layout
+    (oph_signature) permuted by the band stride."""
     from deduplicate_spark.config import DedupConfig
     from deduplicate_spark.operators.minhash import (
         _oph_stride_order,
@@ -230,9 +230,8 @@ def test_doc_signature_oph_stride_dispatch():
     sh = shingle_hashes("some moderately sized document text " * 8, 9)
     a, b = perm_params(128)
     raw = oph_signature(sh, 128)
-    flat = doc_signature(sh, DedupConfig(oph_band_stride=False), a, b)
-    assert np.array_equal(flat, raw)
     strided = doc_signature(sh, DedupConfig(), a, b)
+    assert not np.array_equal(strided, raw)
     assert np.array_equal(strided, raw[_oph_stride_order(128, 32, 4)])
 
 
@@ -243,11 +242,14 @@ def test_oph_stride_kills_band_amplification_on_sparse_docs():
     runs of empty bins identically in both docs and whole bands collide;
     the strided layout needs an empty run >= lsh_bands to do that."""
     from deduplicate_spark.config import DedupConfig
-    from deduplicate_spark.operators.minhash import doc_signature, perm_params
+    from deduplicate_spark.operators.minhash import (
+        doc_signature,
+        oph_signature,
+        perm_params,
+    )
 
     rng = np.random.default_rng(11)
     a, b = perm_params(128)
-    cfg_adj = DedupConfig(oph_band_stride=False)
     cfg_str = DedupConfig()
     B, R = cfg_str.lsh_bands, cfg_str.lsh_rows
 
@@ -262,10 +264,10 @@ def test_oph_stride_kills_band_amplification_on_sparse_docs():
         shared = rng.integers(0, 1 << 63, size=1, dtype=np.uint64)
         d1 = np.unique(np.concatenate([shared, rng.integers(0, 1 << 63, 5, dtype=np.uint64)]))
         d2 = np.unique(np.concatenate([shared, rng.integers(0, 1 << 63, 5, dtype=np.uint64)]))
-        for key, cfg in (("adj", cfg_adj), ("str", cfg_str)):
-            fires[key] += band_fires(
-                doc_signature(d1, cfg, a, b), doc_signature(d2, cfg, a, b)
-            )
+        fires["adj"] += band_fires(oph_signature(d1, 128), oph_signature(d2, 128))
+        fires["str"] += band_fires(
+            doc_signature(d1, cfg_str, a, b), doc_signature(d2, cfg_str, a, b)
+        )
     # J ~ 1/11: honest per-band fire probability ~ (1/11)^4 ~ 7e-5 -> ~0.13
     # expected fires over 60*32 bands. The adjacent layout amplified this by
     # orders of magnitude (the 13x corpus-level inflation); strided must

@@ -73,27 +73,42 @@ def test_config_knobs_change_behavior(spark):
 
 @pytest.mark.parametrize("empty_cluster,expect_empty_dupes", [(True, True), (False, False)])
 def test_empty_cluster_knob(spark, empty_cluster, expect_empty_dupes):
+    """A doc is content-empty when it has no character outside Unicode
+    whitespace (str.strip()'s set, U+001C..U+001F included). True puts every
+    such doc in one cluster; False leaves all of them unclustered, even the
+    two equal ones and those with non-ASCII whitespace."""
     from deduplicate_spark.pipeline import run_pipeline
     from deduplicate_spark.schema import TRANSCRIPTS_SCHEMA
 
-    rows = []
-    for cid, text in [
-        ("full/a", "the quick brown fox jumps over the lazy dog again"),
-        ("full/b", "the quick brown fox jumps over the lazy dog again"),
-        ("empty/a", "   "),
-        ("empty/b", ""),
-    ]:
-        rows.append((cid, 0, "user", text, "", None))
+    empties = {
+        "empty/a": ["   "],
+        "empty/b": [""],
+        "empty/tabs": ["\t\n "],
+        "empty/wide1": [" " * 400],
+        "empty/wide2": [" " * 400],
+        "empty/turns": ["", "", ""],  # doc "\n\n", like datagen's empty/ convs
+        "empty/unicode": ["\u3000\u00a0"],
+        "empty/separators": ["\x1c\x1d\x1e\x1f"],
+    }
+    full = "the quick brown fox jumps over the lazy dog again"
+    convs = {"full/a": [full], "full/b": [full], **empties}
+    rows = [
+        (cid, i, "user", text, "", None)
+        for cid, texts in convs.items()
+        for i, text in enumerate(texts)
+    ]
     turns = spark.createDataFrame(
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]),
         schema=TRANSCRIPTS_SCHEMA,
     )
     res = run_pipeline(spark, turns, DedupConfig(empty_cluster=empty_cluster))
-    members = {
-        r.conv_id for r in res.clusters.select("conv_id").collect()
-    }
-    assert {"full/a", "full/b"} <= members
-    assert (("empty/a" in members) and ("empty/b" in members)) == expect_empty_dupes
+    cluster_of = {r.conv_id: r.cluster_id for r in res.clusters.collect()}
+    assert cluster_of["full/a"] == cluster_of["full/b"]
+    empty_clusters = {cluster_of.get(cid) for cid in empties}
+    if expect_empty_dupes:
+        assert len(empty_clusters) == 1 and None not in empty_clusters
+    else:
+        assert empty_clusters == {None}
 
 
 def test_min_jaccard_rescue_band(spark):

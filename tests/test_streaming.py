@@ -583,3 +583,94 @@ def test_flush_buffered_on_empty_state_is_noop(spark, state):
     from deduplicate_spark.streaming.incremental import flush_buffered
 
     assert flush_buffered(spark, state, DedupConfig()) == {"released_convs": 0}
+
+
+def _band_rule_reference(buckets, allpairs_max):
+    """The streaming band rule in plain Python, per bucket of (new, conv_id)
+    members: up to ``allpairs_max`` members, every pair with at least one
+    new endpoint; above it, a star from the target (minimal old member, or
+    minimal new member when none is old) to each new member. Old/new edges
+    are (old, new); new/new edges are (smaller, larger)."""
+    out = set()
+    for members in buckets.values():
+        members = sorted(members)
+        if len(members) <= allpairs_max:
+            pairs = [
+                (x, y) for i, x in enumerate(members) for y in members[i + 1:]
+            ]
+        else:
+            pairs = [(members[0], m) for m in members[1:]]
+        out |= {(x[1], y[1]) for x, y in pairs if (x[0] or y[0]) and x[1] != y[1]}
+    return out
+
+
+def test_band_pairs_matches_python_reference(spark):
+    """process_batch's band stage (skew.bucket_pairs over (new, conv_id)
+    struct members) against a pure-Python reference, salted and window
+    bucket stats alike."""
+    from dataclasses import replace
+
+    from deduplicate_spark.streaming.incremental import band_pairs
+
+    def ids(prefix, n):
+        return [f"{prefix}{i:05d}" for i in range(n)]
+
+    buckets = {
+        1: [(False, c) for c in ids("oldonly", 5)],
+        2: [(True, c) for c in ids("pair", 2)],
+        3: [(True, c) for c in ids("clique", 16)],
+        4: [(False, c) for c in ids("m16o", 8)] + [(True, c) for c in ids("m16n", 8)],
+        5: [(False, c) for c in ids("m17o", 5)] + [(True, c) for c in ids("m17n", 12)],
+        6: [(False, c) for c in ids("m3ko", 1000)] + [(True, c) for c in ids("m3kn", 2000)],
+        7: [(True, c) for c in ids("star", 17)],
+        # "both" is old and new: no self-pair
+        8: [(False, "both"), (True, "both"), (False, "b-old"), (True, "b-new")],
+        9: [(False, "self"), (True, "self")],
+    }
+    members = spark.createDataFrame(
+        [(c, h, new) for h, ms in buckets.items() for new, c in ms],
+        "conv_id string, band_hash bigint, new boolean",
+    )
+    want = _band_rule_reference(buckets, 16)
+    # spot checks of the rule itself
+    assert not any(a.startswith("oldonly") for a, _ in want)
+    assert len({p for p in want if p[0].startswith("clique")}) == 120
+    assert len({p for p in want if p[0].startswith("m16")}) == 16 * 15 // 2 - 8 * 7 // 2
+    assert {p for p in want if p[0].startswith("m17")} == {
+        ("m17o00000", c) for c in ids("m17n", 12)
+    }
+    assert {p for p in want if p[0].startswith("m3k")} == {
+        ("m3ko00000", c) for c in ids("m3kn", 2000)
+    }
+    assert {p for p in want if p[0].startswith("star")} == {
+        ("star00000", c) for c in ids("star", 17)[1:]
+    }
+    assert not any(a == b for a, b in want)
+
+    cfg = DedupConfig()
+    for salt in (cfg.band_salt_buckets, 0):
+        got = band_pairs(
+            members, allpairs_max=16, config=replace(cfg, band_salt_buckets=salt)
+        ).collect()
+        assert {r.evidence for r in got} == {"lsh"}
+        assert {(r.a, r.b) for r in got} == want, salt
+
+
+def test_table_exists_only_missing_or_empty_dir_is_absent(spark, tmp_path):
+    """A missing dir and an empty dir (left by a crash in the first epoch)
+    read as absent; a dir holding a file that is not parquet raises rather
+    than passing for a fresh run, which would overwrite every state table."""
+    from py4j.protocol import Py4JJavaError
+
+    from deduplicate_spark.streaming.incremental import _table_exists
+
+    assert _table_exists(spark, str(tmp_path / "missing")) is False
+    (tmp_path / "empty").mkdir()
+    assert _table_exists(spark, str(tmp_path / "empty")) is False
+    spark.range(3).write.parquet(str(tmp_path / "table"))
+    assert _table_exists(spark, str(tmp_path / "table")) is True
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_text("not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        _table_exists(spark, str(corrupt))
