@@ -109,12 +109,10 @@ def spread_over_slots(df: DataFrame) -> DataFrame:
     stage on the pipeline path runs at.
 
     Why slots and not ``shuffle_partitions``: each Python task pays a fixed
-    worker set-up cost independent of its rows — PySpark's worker calls
-    ``importlib.invalidate_caches()`` per task, which makes every
-    ``zipimporter`` re-read the pyspark.zip directory (measured ~0.17
-    CPU-s/task on Python 3.11). More tasks than slots buys no parallelism
-    and multiplies that cost (32 tasks on 4 slots: ~5 CPU-s of set-up per
-    kernel stage); fewer leaves cores idle."""
+    cost independent of its rows (DESIGN §4: ~0.29 CPU-s per trivial task
+    under ``pyspark.daemon``, ~0.06 under ``worker_daemon``, which local
+    sessions use). More tasks than slots buys no parallelism and multiplies
+    that cost; fewer leaves cores idle."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 

@@ -1,7 +1,9 @@
 """SparkSession factory tuned for the dedup pipeline.
 
-Local-mode defaults match the sandbox (local[32], single JVM); on a real
-cluster the same settings apply except master/memory come from spark-submit.
+The master defaults to ``local[*]`` (``local[SPARK_GRAFT_CPUS]`` when that
+variable is set), one JVM; on a real cluster the same settings apply except
+master/memory come from spark-submit. Local masters also get the
+``worker_daemon`` Python daemon.
 """
 
 from __future__ import annotations
@@ -9,6 +11,36 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Spark's generated-code cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100) is smaller than what one pass generates, so every warm pass
+# recompiled nearly all of its classes with Janino. Measured classes per
+# pass (local[4]): a `planted` benchmark pass ~205 (201-210; 201 recompiled
+# on every warm pass at the default), a warm streaming micro-batch ~278
+# (276-279). 1000 holds either several times over.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Static codegen settings for every session the package builds (get_spark
+# and jobs/dedup.py). The cache is keyed by source text, and the default
+# class name carries the whole-stage codegen id, which AQE assigns in the
+# order concurrent query stages finish: the same pipeline then came back
+# under a new name and was compiled again (4 classes in about one warm
+# `planted` pass in two).
+CODEGEN_CONF = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _daemon_importable() -> bool:
+    """Whether a Python worker daemon started by a local JVM can import this
+    package: ``python -m`` puts the JVM's working directory (the driver's)
+    first on ``sys.path``, then come the PYTHONPATH entries."""
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    root = os.path.realpath(_PACKAGE_ROOT)
+    return any(p and os.path.realpath(p) == root for p in paths)
 
 
 def get_spark(
@@ -76,7 +108,15 @@ def get_spark(
         # what production clusters commonly run for spark.network.timeout.
         .config("spark.network.timeout", "600s")
         .config("spark.executor.heartbeatInterval", "60s")
+        .config(map=CODEGEN_CONF)
     )
+    if master.startswith("local") and _daemon_importable():
+        # each Python task stops re-reading pyspark.zip's directory
+        # (DESIGN §4); a cluster's executors may not have this package on
+        # their path when the daemon starts, so only local masters get it
+        builder = builder.config(
+            "spark.python.daemon.module", "deduplicate_spark.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -164,9 +164,19 @@ def main(argv: list[str] | None = None) -> None:
 
     from deduplicate_spark.config import DedupConfig
     from deduplicate_spark.pipeline import run_pipeline
+    from deduplicate_spark.session import CODEGEN_CONF
     from deduplicate_spark.sources.checkpoint import CheckpointStore
 
-    spark = SparkSession.builder.appName("deduplicate_spark_job").getOrCreate()
+    # The codegen settings are static, so they are set before the session
+    # starts; --stream runs then stop recompiling every micro-batch. No
+    # worker_daemon here: the daemon is imported when the executor's
+    # Python daemon starts, and a cluster's --py-files may not be on its
+    # path yet.
+    spark = (
+        SparkSession.builder.appName("deduplicate_spark_job")
+        .config(map=CODEGEN_CONF)
+        .getOrCreate()
+    )
     if args.shuffle_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
 
