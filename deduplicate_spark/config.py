@@ -71,25 +71,25 @@ class DedupConfig:
     max_shingle_chars: int = 200_000   # cap per-doc kernel input (skew guard)
 
     # --- SimHash confirmation (stage 4) ---
-    simhash_bits: int = 64
     # confirmation kills LSH false positives (random pairs sit at hamming
     # ~32 of 64). Calibration: hamming h ~ angle between shingle-feature
     # vectors; h=12 corresponds to ~Jaccard 0.7, measured J=0.87 planted
     # near-dups land at h in [8, 12], J~0.3 false positives at h >= ~20.
+    # Every LSH candidate is confirmed this way — the reference's
+    # rev_hash-confirms-beg_hash layering (dupe_analysis.py:367-375).
     simhash_hamming_max: int = 12
     # second acceptance evidence: MinHash-estimated Jaccard >= threshold
-    # (tighter-calibrated than SimHash: std ~0.04 at 128 perms). With
-    # confirm_with_simhash also on, a candidate confirms when hamming <=
-    # simhash_hamming_max OR est_jaccard >= min_jaccard (the rescue is
-    # bounded to hamming max+8 — see simhash.RESCUE_HAMMING_SLACK); this
-    # recovers genuine near-dups the noisy hamming estimator puts at 13-14
-    # (measured ~2% of planted J~0.85 pairs). None = hamming only.
+    # (tighter-calibrated than SimHash: std ~0.04 at 128 perms). A
+    # candidate confirms when hamming <= simhash_hamming_max OR
+    # est_jaccard >= min_jaccard (the rescue is bounded to hamming max+8 —
+    # see simhash.RESCUE_HAMMING_SLACK); this recovers genuine near-dups
+    # the noisy hamming estimator puts at 13-14 (measured ~2% of planted
+    # J~0.85 pairs). None = hamming only.
     min_jaccard: float | None = 0.7
-    # require SimHash confirmation of LSH candidates (the reference's
-    # rev_hash-confirms-beg_hash layering, dupe_analysis.py:367-375)
-    confirm_with_simhash: bool = True
     # complete_hash analog (dupe_analysis.py:622-633): when True, near-dup
-    # candidates must ALSO be exact-content-equal to cluster (strict mode)
+    # candidates must ALSO be exact-content-equal to cluster (strict mode),
+    # so only exact groups cluster. Refused together with the substring
+    # pass, which clusters docs that merely share a long substring.
     complete_hash: bool = False
     # beg_hash pass-1 analog (dupe_analysis.py:369-370, 437-439): when True,
     # only exact-distinct reps whose prefix_sha collides with another rep
@@ -101,8 +101,7 @@ class DedupConfig:
 
     # --- substring pass (winnowing + LCS verify) ---
     enable_substring_pass: bool = False
-    substring_min_len: int = 256   # t: min common-substring length to dedup on
-    winnow_kgram: int = 16         # w-gram size for winnowing fingerprints
+    substring_min_len: int = 256   # t; w-gram width = substring.winnow_width(t)
 
     # --- clustering / shuffle hygiene ---
     band_salt_buckets: int = 8     # salt for hot LSH bands
@@ -187,6 +186,12 @@ class DedupConfig:
             raise ValueError(f"minhash_mode must be 'perm' or 'oph', got {self.minhash_mode!r}")
         if self.minhash_mode == "oph" and self.num_perm & (self.num_perm - 1):
             raise ValueError(f"minhash_mode='oph' needs a power-of-two num_perm, got {self.num_perm}")
+        if self.complete_hash and self.enable_substring_pass:
+            raise ValueError(
+                "complete_hash=True clusters exact-content-equal docs only; "
+                "enable_substring_pass=True would cluster docs that merely "
+                "share a substring — set one of them, not both"
+            )
 
     def config_hash(self) -> str:
         """Deterministic hash of the SEMANTIC config — keys checkpoint reuse
@@ -205,7 +210,11 @@ class DedupConfig:
         way: dropping ``max_band_bucket`` (it chose between two star tiers
         that emitted the same edges) and ``oph_band_stride`` (nothing set
         it to False; the strided OPH layout is now the only one) each make
-        older store roots recompute."""
+        older store roots recompute, and so does dropping the SimHash width
+        (never read; SimHash is 64-bit by construction), the SimHash
+        confirmation switch (nothing turned it off; SimHash confirmation is
+        the only near-dup rule) and the winnowing w-gram size (now derived
+        from ``substring_min_len``)."""
         payload = json.dumps(
             {k: v for k, v in asdict(self).items() if k not in _PHYSICAL_KNOBS},
             sort_keys=True,

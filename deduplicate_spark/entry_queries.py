@@ -478,8 +478,9 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch: many splits give the scan its parallelism for free.
     from deduplicate_spark.operators.skew import (
         bucket_pairs,
-        measured_forced_smj,
+        maybe_merge_hint,
         measured_text_stats,
+        resolve_gates,
     )
 
     _cfg = DedupConfig()
@@ -492,7 +493,7 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_col="text",
         chars_col="n_chars" if "n_chars" in docs.columns else None,
     )
-    _smj = measured_forced_smj(_n, _b, _cfg)
+    _smj = resolve_gates(_n, _b, _cfg).forced_smj
     # scan-parallelism floor: the gram computation (split + md5 + xxhash64
     # per gram) is CPU-bound, and a single-file documents table yields
     # file-split parallelism only (a 148 MB file = 2 splits — measured at
@@ -551,17 +552,16 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         forced_smj=_smj,
     )
 
-    def _m(df):
-        return df.hint("merge") if _smj else df
-
     # size-ratio prefilter BEFORE any gram data moves: J = inter/union <=
     # min(n_a, n_b) / max(n_a, n_b) (inter <= min, union >= max), so pairs
     # whose size ratio is under the threshold cannot pass the final filter
     # — dropped here with two narrow joins instead of carrying their grams.
     # The epsilon keeps the bound a strict superset under float rounding.
+    n_a = sizes.select(F.col("doc_id").alias("a"), F.col("n_grams").alias("n_a"))
+    n_b = sizes.select(F.col("doc_id").alias("b"), F.col("n_grams").alias("n_b"))
     sized = (
-        cand.join(_m(sizes.select(F.col("doc_id").alias("a"), F.col("n_grams").alias("n_a"))), "a")
-        .join(_m(sizes.select(F.col("doc_id").alias("b"), F.col("n_grams").alias("n_b"))), "b")
+        cand.join(maybe_merge_hint(n_a, _smj), "a")
+        .join(maybe_merge_hint(n_b, _smj), "b")
         .filter(
             F.least("n_a", "n_b") / F.greatest("n_a", "n_b")
             >= F.lit(_JACCARD_THRESHOLD) - F.lit(1e-9)
@@ -576,8 +576,8 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     gh_a = feats.select(F.col("doc_id").alias("a"), F.col("gh").alias("_gha"))
     gh_b = feats.select(F.col("doc_id").alias("b"), F.col("gh").alias("_ghb"))
     return (
-        sized.join(_m(gh_a), "a")
-        .join(_m(gh_b), "b")
+        sized.join(maybe_merge_hint(gh_a, _smj), "a")
+        .join(maybe_merge_hint(gh_b, _smj), "b")
         .withColumn("n_inter", F.size(F.array_intersect("_gha", "_ghb")))
         .filter(
             F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))

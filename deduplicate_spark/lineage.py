@@ -58,10 +58,7 @@ def cut_lineage(
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     if spill_only:
-        try:
-            return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
-        except TypeError:  # storageLevel param requires Spark >= 4.0
-            return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
     return df.localCheckpoint(eager=eager)
 
 

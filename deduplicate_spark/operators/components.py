@@ -33,13 +33,16 @@ DRIVER_CC_MAX_EDGES = 5_000_000
 # width x rows), not a flat row count
 DRIVER_CC_MAX_BYTES = 200 * 1024 * 1024
 _PANDAS_STR_OVERHEAD = 64  # CPython str object + pointer overhead per cell
+# distributed path: cut the label lineage every CHECKPOINT_EVERY rounds,
+# and skip the convergence-count job until round MIN_ROUNDS (dedup graphs
+# are star-shaped and cannot converge in fewer rounds)
+CHECKPOINT_EVERY = 2
+MIN_ROUNDS = 2
 
 
 def connected_components(
     edges: DataFrame,
     max_rounds: int = 30,
-    checkpoint_every: int = 2,
-    min_rounds: int = 2,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
     assume_deduped: bool = False,
     forced_smj: bool = True,
@@ -118,13 +121,10 @@ def connected_components(
                 F.min(F.when(F.col("is_self"), F.col("label"))).alias("_old"),
             )
         )
-        if checkpoint_every and round_no % checkpoint_every == checkpoint_every - 1:
+        if round_no % CHECKPOINT_EVERY == CHECKPOINT_EVERY - 1:
             merged = merged.transform(lambda _df: cut_lineage(_df, eager=True))
 
-        # dedup graphs converge in 2-3 rounds (star-shaped components);
-        # skip the convergence-count job for the first min_rounds - 1
-        # rounds — they cannot have converged yet anyway
-        if round_no >= min_rounds - 1:
+        if round_no >= MIN_ROUNDS - 1:
             changed = merged.filter(F.col("label") != F.col("_old")).limit(1).count()
         else:
             changed = -1

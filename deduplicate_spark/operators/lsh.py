@@ -11,8 +11,8 @@ Scale design:
   * one shuffle on (band_id, band_hash); AQE skew-join handles stragglers.
   * **no quadratic self-join for big buckets**: a bucket of n near-identical
     boilerplate docs would otherwise emit n^2 edges. Buckets up to
-    ``allpairs_max`` use within-bucket all-pairs (better confirm recall);
-    larger buckets emit *star edges* (member -> bucket-min representative),
+    ``ALLPAIRS_MAX_DEFAULT`` members use within-bucket all-pairs (better
+    confirm recall); larger buckets emit *star edges* (member -> bucket-min representative),
     which is O(n) and preserves exactly the connectivity that the
     connected-components stage needs. The pairing is the shared
     :func:`~deduplicate_spark.operators.skew.bucket_pairs`; star fallback
@@ -76,8 +76,7 @@ def candidate_pairs(signatures: DataFrame, config: DedupConfig | None = None) ->
     ).withColumn("evidence", F.lit("lsh"))
 
 
-def bucket_stats(signatures: DataFrame, config: DedupConfig | None = None,
-                 allpairs_max: int = ALLPAIRS_MAX_DEFAULT) -> DataFrame:
+def bucket_stats(signatures: DataFrame, config: DedupConfig | None = None) -> DataFrame:
     """Metrics: bucket-size histogram + how many buckets fell back to star
     pairing — recorded per stage run (lineage/metrics requirement)."""
     config = config or DedupConfig()
@@ -90,12 +89,12 @@ def bucket_stats(signatures: DataFrame, config: DedupConfig | None = None,
     return sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.max("bucket_n").alias("max_bucket"),
-        F.sum(F.when(F.col("bucket_n") > allpairs_max, 1).otherwise(0)).alias(
+        F.sum(F.when(F.col("bucket_n") > ALLPAIRS_MAX_DEFAULT, 1).otherwise(0)).alias(
             "n_star_fallback"
         ),
         F.sum(
             F.when(
-                F.col("bucket_n") <= allpairs_max,
+                F.col("bucket_n") <= ALLPAIRS_MAX_DEFAULT,
                 F.col("bucket_n") * (F.col("bucket_n") - 1) / 2,
             ).otherwise(F.col("bucket_n") - 1)
         ).cast("long").alias("est_edges"),

@@ -54,11 +54,13 @@ def perm_params(num_perm: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def shingle_hashes(text: str, k: int, max_chars: int | None = None) -> np.ndarray:
-    """Unique u64 hashes of all UTF-8-byte k-gram windows of ``text``.
+def window_hashes(text: str, k: int, max_chars: int | None = None) -> np.ndarray:
+    """u64 hashes of the UTF-8-byte k-gram windows of ``text``, in window
+    order (one per start offset) — the one rolling hash behind the MinHash
+    shingles and the winnowing fingerprints.
 
     O(n) rolling hash, fully vectorized. Texts shorter than k hash as a
-    single whole-text shingle. Empty/whitespace-only text -> empty array.
+    single whole-text window. Empty/whitespace-only text -> empty array.
     """
     if max_chars is not None and len(text) > max_chars:
         text = text[:max_chars]
@@ -67,11 +69,11 @@ def shingle_hashes(text: str, k: int, max_chars: int | None = None) -> np.ndarra
     buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
     n = buf.shape[0]
     if n <= k:
-        # single shingle: plain polynomial hash of the whole buffer
+        # single window: plain polynomial hash of the whole buffer
         pw = np.empty(n, dtype=np.uint64)
         pw[0] = 1
         if n > 1:
-            np.multiply.accumulate(np.full(n, _BASE, dtype=np.uint64)[: n - 1], out=pw[1:])
+            np.multiply.accumulate(np.full(n - 1, _BASE, dtype=np.uint64), out=pw[1:])
         h = np.uint64((buf * pw).sum(dtype=np.uint64))
         return _splitmix64(np.array([h], dtype=np.uint64))
     # prefix sums S[i] = sum_{j<i} b[j]*BASE^j (mod 2^64, wraparound)
@@ -85,8 +87,13 @@ def shingle_hashes(text: str, k: int, max_chars: int | None = None) -> np.ndarra
     inv[0] = 1
     if n - k > 0:
         np.multiply.accumulate(np.full(n - k, _INV_BASE, dtype=np.uint64), out=inv[1:])
-    w = (s[k : n + 1] - s[: n - k + 1]) * inv
-    return np.unique(_splitmix64(w))
+    return _splitmix64((s[k : n + 1] - s[: n - k + 1]) * inv)
+
+
+def shingle_hashes(text: str, k: int, max_chars: int | None = None) -> np.ndarray:
+    """Unique u64 hashes of all UTF-8-byte k-gram windows of ``text``
+    (the shingle set; see :func:`window_hashes`)."""
+    return np.unique(window_hashes(text, k, max_chars))
 
 
 # double-blocked kernel tiling: shingle chunks bound the working set to L2

@@ -20,6 +20,8 @@ batch stage that pairs collision buckets.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -101,6 +103,25 @@ def measured_small_corpus(total_bytes: int, config) -> bool:
     same real-count philosophy as :func:`measured_forced_smj`. True when
     the whole corpus is under ``shuffle_partitions x 4 MB``."""
     return total_bytes < config.shuffle_partitions * _KERNEL_SMALL_BYTES_PER_SLOT
+
+
+def resolve_gates(n_docs: int, total_bytes: int, config):
+    """``config`` with each auto gate left at ``None`` filled in from a
+    MEASURED corpus size (``n_docs`` rows, ``total_bytes`` UTF-8 text
+    bytes): ``forced_smj`` and ``rescue_short_circuit`` from
+    :func:`measured_forced_smj`, ``kernel_small_corpus`` from
+    :func:`measured_small_corpus`. Gates the caller pinned stay as set."""
+    big = measured_forced_smj(n_docs, total_bytes, config)
+    return replace(
+        config,
+        forced_smj=big if config.forced_smj is None else config.forced_smj,
+        rescue_short_circuit=big
+        if config.rescue_short_circuit is None
+        else config.rescue_short_circuit,
+        kernel_small_corpus=measured_small_corpus(total_bytes, config)
+        if config.kernel_small_corpus is None
+        else config.kernel_small_corpus,
+    )
 
 
 def spread_over_slots(df: DataFrame) -> DataFrame:

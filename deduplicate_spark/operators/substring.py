@@ -31,50 +31,37 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataclasses import replace
-
 from deduplicate_spark.config import DedupConfig
-from deduplicate_spark.operators.minhash import _splitmix64
+from deduplicate_spark.operators.minhash import window_hashes
 from deduplicate_spark.operators.skew import (
     bucket_pairs,
     maybe_merge_hint,
-    measured_forced_smj,
-    measured_small_corpus,
+    resolve_gates,
     spread_over_slots,
 )
 from deduplicate_spark.lineage import cut_lineage
 
 
+def winnow_width(t: int) -> int:
+    """The w-gram width the substring pass fingerprints with at threshold
+    ``t``: the WIDEST gram the guarantee allows, capped at 64 B, floored at
+    16 B, and never above ``t``.
+
+    Winnowing's guarantee holds for any w <= t — a common substring of
+    length >= t contains all of its t-w+1 w-grams — but the FALSE-candidate
+    rate is driven by how often unrelated docs share a w-gram: 16-byte
+    grams are ~3 words and collide constantly on template/word-salad
+    corpora (measured at a 29k-doc corpus: 423k candidate pairs, 0
+    confirmed), 64-byte grams are ~11 consecutive identical words and
+    essentially never collide by chance. The confirmed pair set does not
+    depend on w: the verifier decides LCS >= t exactly on any candidate
+    superset."""
+    return min(t, max(16, min(64, t // 4)))
+
+
 def winnow_fingerprints(text: str, t: int, w: int, max_chars: int | None = None) -> np.ndarray:
     """Selected fingerprint hashes per the winnowing scheme (unique u64s)."""
-    return _winnow_from_raw(_raw_window_hashes(text, w, max_chars), t, w)
-
-
-def _raw_window_hashes(text: str, w: int, max_chars: int | None = None) -> np.ndarray:
-    if max_chars is not None and len(text) > max_chars:
-        text = text[:max_chars]
-    if not text.strip():
-        return np.empty(0, dtype=np.uint64)
-    from deduplicate_spark.operators.minhash import _BASE, _INV_BASE
-
-    buf = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-    n = buf.shape[0]
-    if n <= w:
-        pw = np.empty(max(n, 1), dtype=np.uint64)
-        pw[0] = 1
-        if n > 1:
-            np.multiply.accumulate(np.full(n - 1, _BASE, dtype=np.uint64), out=pw[1:])
-        return _splitmix64(np.array([(buf * pw[:n]).sum(dtype=np.uint64)], dtype=np.uint64))
-    pw = np.empty(n, dtype=np.uint64)
-    pw[0] = 1
-    np.multiply.accumulate(np.full(n - 1, _BASE, dtype=np.uint64), out=pw[1:])
-    s = np.zeros(n + 1, dtype=np.uint64)
-    np.cumsum(buf * pw, out=s[1:], dtype=np.uint64)
-    inv = np.empty(n - w + 1, dtype=np.uint64)
-    inv[0] = 1
-    if n - w > 0:
-        np.multiply.accumulate(np.full(n - w, _INV_BASE, dtype=np.uint64), out=inv[1:])
-    return _splitmix64((s[w : n + 1] - s[: n - w + 1]) * inv)
+    return _winnow_from_raw(window_hashes(text, w, max_chars), t, w)
 
 
 def _winnow_from_raw(raw: np.ndarray, t: int, w: int) -> np.ndarray:
@@ -232,8 +219,8 @@ def has_common_substring_ge(ta: str, tb: str, t: int, w: int, cap: int | None) -
         return False
     if cap is not None and (len(ta) > cap or len(tb) > cap):
         return longest_common_substring_len(ta, tb) >= t
-    raw_a = _raw_window_hashes(ta, w, None)
-    raw_b = _raw_window_hashes(tb, w, None)
+    raw_a = window_hashes(ta, w)
+    raw_b = window_hashes(tb, w)
     if raw_a.size == 0 or raw_b.size == 0:
         # whitespace-only text carries no fingerprints, so the winnowing
         # guarantee says nothing about it; it can still share >= t bytes
@@ -268,7 +255,8 @@ def doc_fingerprints(docs: DataFrame, config: DedupConfig | None = None) -> Data
     """docs -> exploded (conv_id, fp) winnowing fingerprints. The id column
     passes through opaquely (strings, or the pipeline's internal longs)."""
     config = config or DedupConfig()
-    t, w, cap = config.substring_min_len, config.winnow_kgram, config.max_shingle_chars
+    t, cap = config.substring_min_len, config.max_shingle_chars
+    w = winnow_width(t)
     id_type = docs.schema["conv_id"].dataType.simpleString()
     id_dtype = "int64" if id_type == "bigint" else "object"
 
@@ -276,7 +264,7 @@ def doc_fingerprints(docs: DataFrame, config: DedupConfig | None = None) -> Data
         for pdf in batches:
             ids, fps = [], []
             for conv_id, text in zip(pdf["conv_id"], pdf["doc_text"]):
-                sel = _winnow_from_raw(_raw_window_hashes(text or "", w, cap), t, w)
+                sel = winnow_fingerprints(text or "", t, w, cap)
                 ids.extend([conv_id] * sel.size)
                 fps.extend(sel.view(np.int64).tolist())
             yield pd.DataFrame(
@@ -294,20 +282,6 @@ _ALLPAIRS_MAX = 64  # all-pairs ceiling of a fingerprint bucket
 def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataFrame:
     """Confirmed substring-dup edges (a, b, evidence='substring')."""
     config = config or DedupConfig()
-    # Candidate-economy: fingerprint with the WIDEST w-gram the guarantee
-    # allows (capped at 64 B; never below the configured size). Winnowing's
-    # guarantee holds for any w <= t — a common substring of length >= t
-    # contains all of its t-w+1 w-grams — but the FALSE-candidate rate is
-    # driven by how often unrelated docs share a w-gram: 16-byte grams are
-    # ~3 words and collide constantly on template/word-salad corpora
-    # (measured at a 29k-doc corpus: 423k candidate pairs, 0 confirmed),
-    # 64-byte grams are ~11 consecutive identical words and essentially
-    # never collide by chance. The confirmed pair set is invariant: the
-    # verifier decides LCS >= t exactly on any candidate superset.
-    if config.substring_min_len // 4 > config.winnow_kgram:
-        config = replace(
-            config, winnow_kgram=min(64, config.substring_min_len // 4)
-        )
     # a doc shorter than t bytes cannot contain a t-byte substring: drop it
     # before fingerprinting. Kills the random min-hash collisions tiny docs
     # produce (measured: 13k -> ~2k candidate pairs at sf0.1, verify was
@@ -315,25 +289,16 @@ def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataF
     docs = docs.filter(F.octet_length("doc_text") >= config.substring_min_len)
     if config.forced_smj is None or config.kernel_small_corpus is None:
         # direct-call path (run_pipeline passes an already-resolved config):
-        # resolve the forced-SMJ insurance + kernel-parallelism floor off a
-        # MEASURED corpus size. The eager cut materializes the filtered docs
-        # once; the stats agg and the fingerprint/text-attach stages below
-        # all read the same blocks instead of re-running assembly, so the
-        # measurement is ~free.
+        # resolve the gates off a MEASURED corpus size. The eager cut
+        # materializes the filtered docs once; the stats agg and the
+        # fingerprint/text-attach stages below all read the same blocks
+        # instead of re-running assembly, so the measurement is ~free.
         docs = cut_lineage(docs, eager=True)
         st = docs.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(F.octet_length("doc_text")), F.lit(0)).alias("b"),
         ).first()
-        config = replace(
-            config,
-            forced_smj=measured_forced_smj(st.n, st.b, config)
-            if config.forced_smj is None
-            else config.forced_smj,
-            kernel_small_corpus=measured_small_corpus(st.b, config)
-            if config.kernel_small_corpus is None
-            else config.kernel_small_corpus,
-        )
+        config = resolve_gates(st.n, st.b, config)
     # kernel-parallelism floor (same measured gate as the signature kernel,
     # skew.measured_small_corpus): below the gate the filtered docs sit in
     # 1-4 byte-sized partitions and the CPU-bound winnowing kernel would
@@ -373,7 +338,7 @@ def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataF
     )
 
     t = config.substring_min_len
-    w = config.winnow_kgram
+    w = winnow_width(t)
     cap = config.max_shingle_chars
     id_type = docs.schema["conv_id"].dataType.simpleString()
     id_dtype = "int64" if id_type == "bigint" else "object"

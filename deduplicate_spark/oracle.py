@@ -24,9 +24,12 @@ from deduplicate_spark.operators.minhash import (
     shingle_hashes,
     simhash64,
 )
+from deduplicate_spark.operators.lsh import ALLPAIRS_MAX_DEFAULT
+from deduplicate_spark.operators.simhash import RESCUE_HAMMING_SLACK
 from deduplicate_spark.operators.substring import (
     longest_common_substring_len,
     winnow_fingerprints,
+    winnow_width,
 )
 
 
@@ -110,8 +113,6 @@ def oracle_dup_pairs(
         for band in range(config.lsh_bands):
             key = (band, sig[band * r : (band + 1) * r].tobytes())
             buckets[key].append(conv_id)
-    from deduplicate_spark.operators.lsh import ALLPAIRS_MAX_DEFAULT
-
     seen: set[tuple[str, str]] = set()
     for members in buckets.values():
         if len(members) < 2:
@@ -131,36 +132,29 @@ def oracle_dup_pairs(
             if pair in seen:
                 continue
             seen.add(pair)
-            if not config.complete_hash:
-                # mirrors operators/simhash.py confirm_pairs exactly: when
-                # both evidences are enabled, hamming <= bound OR (hamming
-                # within the rescue slack AND est_jaccard >= min_jaccard)
-                if config.confirm_with_simhash and config.min_jaccard is not None:
-                    from deduplicate_spark.operators.simhash import (
-                        RESCUE_HAMMING_SLACK,
-                    )
-
-                    ham = bin(sims[pair[0]] ^ sims[pair[1]]).count("1")
-                    if ham > config.simhash_hamming_max:
-                        if ham > config.simhash_hamming_max + RESCUE_HAMMING_SLACK:
-                            continue
-                        est = float((sigs[pair[0]] == sigs[pair[1]]).mean())
-                        if est < config.min_jaccard:
-                            continue
-                elif config.confirm_with_simhash:
-                    ham = bin(sims[pair[0]] ^ sims[pair[1]]).count("1")
-                    if ham > config.simhash_hamming_max:
-                        continue
-                elif config.min_jaccard is not None:
-                    est = float((sigs[pair[0]] == sigs[pair[1]]).mean())
-                    if est < config.min_jaccard:
-                        continue
+            if config.complete_hash:
+                # strict mode confirms exact-content-equal pairs only, and
+                # candidates are exact-distinct representatives
+                continue
+            # mirrors operators/simhash.py confirm_pairs: hamming <= bound,
+            # OR (min_jaccard set AND hamming within the rescue slack AND
+            # est_jaccard >= min_jaccard)
+            ham = bin(sims[pair[0]] ^ sims[pair[1]]).count("1")
+            if ham > config.simhash_hamming_max and (
+                config.min_jaccard is None
+                or ham > config.simhash_hamming_max + RESCUE_HAMMING_SLACK
+                or float((sigs[pair[0]] == sigs[pair[1]]).mean()) < config.min_jaccard
+            ):
+                continue
             uf.union(*pair)
 
     if config.enable_substring_pass:
         fps = {
             cid: winnow_fingerprints(
-                text, config.substring_min_len, config.winnow_kgram, config.max_shingle_chars
+                text,
+                config.substring_min_len,
+                winnow_width(config.substring_min_len),
+                config.max_shingle_chars,
             )
             for cid, text in zip(reps["conv_id"], reps["doc_text"])
         }

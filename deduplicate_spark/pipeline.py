@@ -23,7 +23,7 @@ through the star edge.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,8 +38,7 @@ from deduplicate_spark.operators.resolve import cluster_report
 from deduplicate_spark.operators.simhash import confirm_pairs
 from deduplicate_spark.operators.skew import (
     maybe_merge_hint,
-    measured_forced_smj,
-    measured_small_corpus,
+    resolve_gates,
     salted_struct_min,
     spread_over_slots,
     tag_bucket_stats,
@@ -281,18 +280,7 @@ def run_pipeline(
         if verify:
             assert_no_id_collisions(meta, stats=stats)
         if unresolved:
-            big = measured_forced_smj(stats.n, stats.total_bytes, config)
-            small = measured_small_corpus(stats.total_bytes, config)
-            config = replace(
-                config,
-                forced_smj=big if config.forced_smj is None else config.forced_smj,
-                rescue_short_circuit=big
-                if config.rescue_short_circuit is None
-                else config.rescue_short_circuit,
-                kernel_small_corpus=small
-                if config.kernel_small_corpus is None
-                else config.kernel_small_corpus,
-            )
+            config = resolve_gates(stats.n, stats.total_bytes, config)
 
     # internal id representation: every stage from here to CC treats
     # conv_id opaquely, so the whole kernel path can run on 8-byte

@@ -8,7 +8,10 @@ production transcript pipeline needs, with per-batch work proportional to
 the BATCH, not the accumulated history:
 
   * stream of turn rows -> per-batch assembly. Two modes:
-      - immediate (``process_batch``): a batch carries whole conversations;
+      - immediate (``process_batch``): a batch carries whole conversations,
+        and each conversation is ingested once — a batch that re-sends a
+        ``conv_id`` already in the docs state is refused
+        (:class:`ConversationAlreadyIngested`);
       - buffered (``process_batch_buffered``): conversations MAY SPAN
         batches — turns are buffered in conv-partitioned state and a
         conversation enters the cascade only after ``buffer_lag`` quiet
@@ -33,12 +36,12 @@ the BATCH, not the accumulated history:
   * band pairs come from the batch operator ``skew.bucket_pairs`` with
     its caps (:func:`band_pairs`): small touched buckets produce all pairs
     with >= 1 new endpoint (never old x old); buckets above
-    ``allpairs_max`` produce star edges from each new member to the bucket
-    target (the minimal OLD member when one exists, so new arrivals attach
-    to the established cluster; the minimal new member otherwise). A hot
-    boilerplate bucket therefore costs O(new members) per batch. Edges
-    between an old and a new member are written (old, new); new x new
-    edges are written (smaller, larger) conv_id.
+    ``lsh.ALLPAIRS_MAX_DEFAULT`` members produce star edges from each new
+    member to the bucket target (the minimal OLD member when one exists, so
+    new arrivals attach to the established cluster; the minimal new member
+    otherwise). A hot boilerplate bucket therefore costs O(new members) per
+    batch. Edges between an old and a new member are written (old, new);
+    new x new edges are written (smaller, larger) conv_id.
   * confirmation (SimHash / min-Jaccard / complete_hash) identical to the
     batch path; historical signatures are fetched per-endpoint via a
     broadcast semi-join, never scanned wholesale.
@@ -46,11 +49,12 @@ the BATCH, not the accumulated history:
 Equivalence contract vs a clean batch run: CONNECTIVITY-EQUIVALENT AT THE
 CANDIDATE LEVEL, not structurally identical. Streaming stars large-bucket
 arrivals to the established (min OLD) member while a clean run stars to the
-global bucket min, and a bucket that crosses ``allpairs_max`` mid-history
-emits early cliques + later stars. SimHash confirmation is pair-specific,
-so adversarial corpora (candidates near the hamming threshold) could
-confirm different edge subsets; for real near-dup corpora the confirmed
-connectivity — and therefore the cluster partition — coincides (pinned by
+global bucket min, and a bucket that crosses ``ALLPAIRS_MAX_DEFAULT``
+members mid-history emits early cliques + later stars. SimHash
+confirmation is pair-specific, so adversarial corpora (candidates near the
+hamming threshold) could confirm different edge subsets; for real near-dup
+corpora the confirmed connectivity — and therefore the cluster partition —
+coincides (pinned by
 tests/test_streaming.py::test_streaming_equals_clean_batch_run).
 """
 
@@ -113,6 +117,12 @@ class IncrementalState:
             self.pending_path = self.docs_path.rstrip("/") + "_pending"
         if self.released_path is None:
             self.released_path = self.docs_path.rstrip("/") + "_released"
+
+
+class ConversationAlreadyIngested(ValueError):
+    """An immediate-mode batch re-sent a conversation the docs state already
+    holds. Immediate mode ingests each conversation once; conversations that
+    span batches go through buffered mode (:func:`process_batch_buffered`)."""
 
 
 _LEGACY_LAYOUT_MSG = (
@@ -215,14 +225,14 @@ def _collect_mods(df: DataFrame, key: str, n: int) -> list[int]:
     ]
 
 
-def band_pairs(members: DataFrame, *, allpairs_max: int, config: DedupConfig) -> DataFrame:
+def band_pairs(members: DataFrame, config: DedupConfig) -> DataFrame:
     """members(conv_id, band_hash, new) -> candidate edges (a, b, evidence),
     pairing each touched band bucket through the batch operator
     :func:`~deduplicate_spark.operators.skew.bucket_pairs`.
 
     Members are ``(new, conv_id)`` structs and old rows carry
     ``new=False``, so each bucket's minimum — the star target above
-    ``allpairs_max`` — is its minimal OLD member when one exists, its
+    ``ALLPAIRS_MAX_DEFAULT`` — is its minimal OLD member when one exists, its
     minimal new member otherwise. Pairs with no new endpoint are dropped
     (history is never re-paired), and so are self-pairs of a conv_id that
     is both old and new."""
@@ -230,7 +240,7 @@ def band_pairs(members: DataFrame, *, allpairs_max: int, config: DedupConfig) ->
         bucket_pairs(
             members.select(F.struct("new", "conv_id").alias("member"), "band_hash"),
             "band_hash",
-            allpairs_max=allpairs_max,
+            allpairs_max=ALLPAIRS_MAX_DEFAULT,
             id_col="member",
             salt_buckets=config.band_salt_buckets,
             forced_smj=config.forced_smj,
@@ -248,13 +258,16 @@ def process_batch(
     state: IncrementalState,
     config: DedupConfig | None = None,
     first_batch: bool = False,
-    allpairs_max: int = ALLPAIRS_MAX_DEFAULT,
     epoch: int | None = None,
 ) -> dict[str, int]:
     """Process one micro-batch of turns against accumulated state.
 
     Returns batch metrics. Usable directly or inside foreachBatch (see
-    :func:`stream_turns`, which passes the epoch_id through). ``epoch``
+    :func:`stream_turns`, which passes the epoch_id through). Each
+    conversation is ingested once: a batch carrying a ``conv_id`` the docs
+    state already holds raises :class:`ConversationAlreadyIngested` before
+    any state is written (conversations that span batches use
+    :func:`process_batch_buffered`). ``epoch``
     keys this batch's state writes for crash-replay idempotency
     (:func:`_write_state`); streaming callers MUST pass the foreachBatch
     epoch_id — ``None`` (direct calls) derives max-persisted + 1, which is
@@ -283,6 +296,26 @@ def process_batch(
     # only on tables that two readers read — racing readers of a lazy cut
     # both recompute it.
     new_docs = cut_lineage(assemble_docs(turns_batch, config).drop("total_bytes"))
+    if not first_batch:
+        # the conv-id mods prune the re-send probe, the sha-mods the reps
+        # read below: one distinct over both (at most state_partitions^2
+        # rows) collects them in one job
+        n = state.state_partitions
+        mods = _with_mod(_with_mod(new_docs, "conv_id", n, "cm"), "exact_sha", n, "sm")
+        mods = mods.select("cm", "sm").distinct().collect()
+        cmods, smods = sorted({r.cm for r in mods}), sorted({r.sm for r in mods})
+        # a re-sent conv_id would add a second docs row for it and leave the
+        # edges of its old content in the pairs state; this epoch's own rows
+        # are excluded, so a crash replay passes
+        old_ids = prior_state(state.docs_path, cmods, new_docs).select("conv_id")
+        again = (
+            new_docs.select("conv_id").join(old_ids, "conv_id", "left_semi").limit(1).collect()
+        )
+        if again:
+            raise ConversationAlreadyIngested(
+                f"conv_id {again[0].conv_id!r} is already in {state.docs_path}: immediate "
+                "mode ingests a conversation once (use process_batch_buffered)"
+            )
 
     # zero_hash analog: content-empty docs (EMPTY_SHA1) take part only when
     # empty_cluster=True, and never reach the kernel
@@ -301,9 +334,6 @@ def process_batch(
         # own instant edges). Pruned to O(batch) bytes by the sha-mods of
         # new_docs, a superset of exact_new's shas, so the anti-join below
         # sees every historical sha the batch could hit.
-        smods = _collect_mods(
-            new_docs.select("exact_sha").distinct(), "exact_sha", state.state_partitions
-        )
         old_reps = prior_state(
             state.reps_path,
             smods,
@@ -342,7 +372,7 @@ def process_batch(
             F.broadcast(new_keys), "band_hash"
         )
         members = members.unionByName(touched_old.withColumn("new", F.lit(False)))
-    cand = cut_lineage(band_pairs(members, allpairs_max=allpairs_max, config=config))
+    cand = cut_lineage(band_pairs(members, config))
 
     # confirmation needs signatures (and docs for complete_hash) for the
     # candidates' endpoints only — fetched via broadcast semi-join, never a
@@ -453,7 +483,6 @@ def _release(
     convs: DataFrame,
     state: IncrementalState,
     config: DedupConfig,
-    allpairs_max: int,
     epoch: int | None = None,
 ) -> dict[str, int]:
     """Feed fully-buffered conversations through the dedup cascade exactly
@@ -481,7 +510,6 @@ def _release(
         state,
         config,
         first_batch=first_release,
-        allpairs_max=allpairs_max,
         epoch=epoch,
     )
     metrics.update(sub)
@@ -503,7 +531,6 @@ def process_batch_buffered(
     config: DedupConfig | None = None,
     batch_seq: int = 0,
     buffer_lag: int = 1,
-    allpairs_max: int = ALLPAIRS_MAX_DEFAULT,
 ) -> dict[str, int]:
     """Cross-batch conversation mode: buffer turns, release a conversation
     into the cascade only once it has been QUIET for ``buffer_lag`` batches
@@ -572,7 +599,6 @@ def process_batch_buffered(
                 cand.join(recent, "conv_id", "left_anti"),
                 state,
                 config,
-                allpairs_max,
                 epoch=batch_seq,
             )
         )
@@ -583,7 +609,6 @@ def flush_buffered(
     spark: SparkSession,
     state: IncrementalState,
     config: DedupConfig | None = None,
-    allpairs_max: int = ALLPAIRS_MAX_DEFAULT,
 ) -> dict[str, int]:
     """Stream-end flush: release every conversation still in the buffer
     (terminal operation — reads the whole pending log once). A state with
@@ -597,7 +622,7 @@ def flush_buffered(
         pend = pend.join(
             spark.read.parquet(state.released_path), "conv_id", "left_anti"
         )
-    return _release(spark, pend, state, config, allpairs_max)
+    return _release(spark, pend, state, config)
 
 
 def current_clusters(spark: SparkSession, state: IncrementalState, config: DedupConfig | None = None) -> DataFrame:

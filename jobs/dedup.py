@@ -43,7 +43,11 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--checkpoint-root", default=None)
     p.add_argument("--resume", action="store_true", help="reuse completed stages")
     p.add_argument("--substring", action="store_true", help="enable substring pass")
-    p.add_argument("--complete-hash", action="store_true", help="exact-only confirmation")
+    p.add_argument(
+        "--complete-hash",
+        action="store_true",
+        help="exact-only confirmation (refused with --substring)",
+    )
     p.add_argument("--exclude-roles", nargs="*", default=[])
     p.add_argument("--exclude-conv-regex", default=None)
     p.add_argument(

@@ -13,11 +13,11 @@ from __future__ import annotations
 import pytest
 
 from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.oracle import assemble_docs_pandas, oracle_dup_pairs
 from deduplicate_spark.pipeline import run_pipeline
 
 
-@pytest.fixture(scope="module")
-def collision_turns(spark):
+def _collision_rows():
     # aperiodic base (distinct numbered words) so a rotation is NOT
     # content-equal but keeps (almost) the same shingle set
     base = " ".join(f"word{i:03d}" for i in range(240))
@@ -30,8 +30,13 @@ def collision_turns(spark):
     ]
     rows = [("orig", 0, "user", base, "", None), ("rot", 0, "user", rotated, "", None)]
     rows += [(f"fill{i}", 0, "user", t, "", None) for i, t in enumerate(fillers)]
+    return rows
+
+
+@pytest.fixture(scope="module")
+def collision_turns(spark):
     return spark.createDataFrame(
-        rows,
+        _collision_rows(),
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
 
@@ -49,3 +54,16 @@ def test_complete_hash_separates_collision(spark, collision_turns):
     # not exact-content-equal -> no cluster membership in strict mode
     assert "orig" not in clusters
     assert "rot" not in clusters
+
+
+def test_oracle_complete_hash_unions_exact_groups_only():
+    """The oracle follows the engine's strict mode: the rotation is an LSH
+    candidate of the original but not content-equal, so it is no pair."""
+    import pandas as pd
+
+    turns = pd.DataFrame(
+        _collision_rows(), columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )
+    docs = assemble_docs_pandas(turns)
+    assert ("orig", "rot") in oracle_dup_pairs(docs, DedupConfig())
+    assert ("orig", "rot") not in oracle_dup_pairs(docs, DedupConfig(complete_hash=True))

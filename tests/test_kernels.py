@@ -15,6 +15,7 @@ from deduplicate_spark.operators.minhash import (
     perm_params,
     shingle_hashes,
     simhash64,
+    window_hashes,
 )
 from deduplicate_spark.operators.substring import (
     longest_common_substring_len,
@@ -23,19 +24,43 @@ from deduplicate_spark.operators.substring import (
 )
 
 
+def _naive_windows(text: str, k: int, max_chars: int | None = None) -> np.ndarray:
+    """Per-window pure-Python reference of ``window_hashes``, in order: the
+    polynomial hash of each k-byte window (of the whole text when shorter
+    than k), splitmix64-finalized; nothing for whitespace-only text."""
+    if max_chars is not None:
+        text = text[:max_chars]
+    if not text.strip():
+        return np.empty(0, dtype=np.uint64)
+    data = text.encode()
+    width = min(k, len(data))
+    out = [
+        sum(byte * pow(int(_BASE), j, 1 << 64) for j, byte in enumerate(data[i : i + width]))
+        % (1 << 64)
+        for i in range(len(data) - width + 1)
+    ]
+    return _splitmix64(np.array(out, dtype=np.uint64))
+
+
 def _naive_window_hashes(text: str, k: int) -> np.ndarray:
-    buf = np.frombuffer(text.encode(), dtype=np.uint8).astype(np.uint64)
-    n = len(buf)
-    out = []
-    with np.errstate(over="ignore"):
-        for i in range(n - k + 1):
-            h = np.uint64(0)
-            p = np.uint64(1)
-            for j in range(k):
-                h += buf[i + j] * p
-                p *= _BASE
-            out.append(h)
-    return np.unique(_splitmix64(np.array(out, dtype=np.uint64)))
+    return np.unique(_naive_windows(text, k))
+
+
+@pytest.mark.parametrize(
+    "text, k, cap",
+    [
+        ("", 9, None),
+        ("  \n\t ", 9, None),
+        ("ab", 9, None),
+        ("abcdefghi", 9, None),
+        ("naïve café — 日本語のテキスト, then ascii words", 5, None),
+        ("the quick brown fox jumps over the lazy dog", 7, 20),
+    ],
+)
+def test_window_hashes_match_naive_in_order(text, k, cap):
+    got = window_hashes(text, k, cap)
+    assert np.array_equal(got, _naive_windows(text, k, cap))
+    assert np.array_equal(shingle_hashes(text, k, cap), np.unique(got))
 
 
 def test_rolling_hash_matches_naive():

@@ -18,6 +18,7 @@ from deduplicate_spark.operators.minhash import (
 from deduplicate_spark.operators.substring import (
     longest_common_substring_len,
     winnow_fingerprints,
+    winnow_width,
 )
 
 TEXT = st.text(
@@ -67,15 +68,16 @@ def test_jaccard_bounds(text):
 @settings(max_examples=50, deadline=None)
 def test_winnowing_shared_substring_guarantee(shared, pre, post):
     """Any two docs sharing a substring of length >= t share a fingerprint
-    (the Schleimer-Wilkerson-Aiken guarantee)."""
-    t, w = 128, 16
-    if len(shared) < t:
-        return
+    (the Schleimer-Wilkerson-Aiken guarantee), also at the derived widths
+    the substring pass uses, below 16 bytes included."""
     doc_a = pre + shared
     doc_b = shared + post
-    fa = winnow_fingerprints(doc_a, t, w)
-    fb = winnow_fingerprints(doc_b, t, w)
-    assert np.intersect1d(fa, fb).size > 0
+    for t, w in ((128, 16), (128, winnow_width(128)), (12, winnow_width(12))):
+        if len(shared) < t:
+            continue
+        fa = winnow_fingerprints(doc_a, t, w)
+        fb = winnow_fingerprints(doc_b, t, w)
+        assert np.intersect1d(fa, fb).size > 0, (t, w)
 
 
 @given(

@@ -146,8 +146,8 @@ def test_hot_bucket_cost_is_o_new_per_batch(spark, state):
             TRANSCRIPTS_SCHEMA,
         )
 
-    process_batch(spark, batch("b0", 30), state, cfg, first_batch=True, allpairs_max=4)
-    m1 = process_batch(spark, batch("b1", 25), state, cfg, first_batch=False, allpairs_max=4)
+    process_batch(spark, batch("b0", 30), state, cfg, first_batch=True)
+    m1 = process_batch(spark, batch("b1", 25), state, cfg, first_batch=False)
     # all 25 are exact dupes of history -> instant path, zero kernel work
     assert m1["instant_exact_dupes"] == 25
     assert m1["new_signatures"] == 0
@@ -157,9 +157,49 @@ def test_hot_bucket_cost_is_o_new_per_batch(spark, state):
         pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]),
         TRANSCRIPTS_SCHEMA,
     )
-    m2 = process_batch(spark, b2, state, cfg, first_batch=False, allpairs_max=4)
+    m2 = process_batch(spark, b2, state, cfg, first_batch=False)
     # near edges bounded by O(new x bands), far below clique size
     assert 0 < m2["new_pairs"] <= 25 * cfg.lsh_bands
+
+
+def test_resent_conversation_is_refused_before_any_state_write(spark, state):
+    """Immediate mode ingests a conversation once: a later batch that
+    re-sends a conv_id (here with unrelated content) raises a named error
+    before any state table changes, instead of storing a second docs row
+    and keeping the old content's edges."""
+    import os
+
+    import pandas as pd
+
+    from deduplicate_spark.streaming.incremental import ConversationAlreadyIngested
+
+    def batch(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                [(c, 0, "user", t, "", None) for c, t in rows],
+                columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+            ),
+            TRANSCRIPTS_SCHEMA,
+        )
+
+    a = " ".join(f"alpha{i:03d} beta{i % 7} gamma" for i in range(120))
+    b = " ".join(f"omega{i:03d} delta{i % 5} sigma" for i in range(120))
+    cfg = DedupConfig()
+    process_batch(spark, batch([("X", a), ("Y", a + " tail")]), state, cfg, first_batch=True)
+
+    root = os.path.dirname(state.docs_path)
+
+    def files():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(root)
+            for f in fs
+        }
+
+    before = files()
+    with pytest.raises(ConversationAlreadyIngested, match="'X'"):
+        process_batch(spark, batch([("X", b)]), state, cfg, first_batch=False)
+    assert files() == before
 
 
 def test_state_partition_pruning_and_compact_reps(spark, state, tmp_path):
@@ -649,9 +689,7 @@ def test_band_pairs_matches_python_reference(spark):
 
     cfg = DedupConfig()
     for salt in (cfg.band_salt_buckets, 0):
-        got = band_pairs(
-            members, allpairs_max=16, config=replace(cfg, band_salt_buckets=salt)
-        ).collect()
+        got = band_pairs(members, config=replace(cfg, band_salt_buckets=salt)).collect()
         assert {r.evidence for r in got} == {"lsh"}
         assert {(r.a, r.b) for r in got} == want, salt
 
