@@ -163,10 +163,7 @@ def main() -> None:
         cents = ivf_centroids_kmeans(emb, n_cells=64, seed=42)
         got = {
             (r.q_id, r.neighbor_id)
-            for r in ivf_topk(
-                emb, queries, nprobe=16, k=10, centroids=cents,
-                assign_via_kernel=True,
-            ).collect()
+            for r in ivf_topk(emb, queries, nprobe=16, k=10, centroids=cents).collect()
         }
         bf = brute_force_topk(emb, queries, k=11).collect()
         per_q = collections.defaultdict(list)

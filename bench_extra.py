@@ -54,7 +54,7 @@ def main() -> None:
     t0 = time.time(); cents = ivf_centroids_kmeans(emb, n_cells=64, seed=42); t1 = time.time()
     sc.setJobDescription("bench_extra: ivf_topk probe")
     got = {(r.q_id, r.neighbor_id) for r in ivf_topk(
-        emb, queries, nprobe=16, k=10, centroids=cents, assign_via_kernel=True).collect()}
+        emb, queries, nprobe=16, k=10, centroids=cents).collect()}
     t2 = time.time()
     sc.setJobDescription("bench_extra: brute-force truth")
     bf = brute_force_topk(emb, queries, k=11).collect(); t3 = time.time()

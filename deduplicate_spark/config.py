@@ -22,8 +22,6 @@ from dataclasses import asdict, dataclass, field
 _PHYSICAL_KNOBS = frozenset(
     {
         "forced_smj",
-        "forced_smj_min_docs",
-        "forced_smj_min_bytes",
         "rescue_short_circuit",
         "kernel_small_corpus",
         "shuffle_partitions",
@@ -36,7 +34,6 @@ _PHYSICAL_KNOBS = frozenset(
 @dataclass(frozen=True)
 class DedupConfig:
     # --- assembly (stage 0) ---
-    turn_separator: str = "\n"
     # excluded rows never enter the cascade — analog of the reference's
     # fnmatch exclude globs '*/@*', '*/.*' (dupe_analysis.py:29-30, 179-181)
     exclude_roles: tuple[str, ...] = ()
@@ -68,7 +65,6 @@ class DedupConfig:
     minhash_mode: str = "oph"
     lsh_bands: int = 32          # b
     lsh_rows: int = 4            # r  (b*r must equal num_perm)
-    max_shingle_chars: int = 200_000   # cap per-doc kernel input (skew guard)
 
     # --- SimHash confirmation (stage 4) ---
     # confirmation kills LSH false positives (random pairs sit at hamming
@@ -104,7 +100,9 @@ class DedupConfig:
     substring_min_len: int = 256   # t; w-gram width = substring.winnow_width(t)
 
     # --- clustering / shuffle hygiene ---
-    band_salt_buckets: int = 8     # salt for hot LSH bands
+    # salt of the bucket stats (skew.tag_bucket_stats) and the argmin
+    # (skew.salted_struct_min); at least 1
+    band_salt_buckets: int = 8
     cc_max_rounds: int = 30
     # run the kernel path (signatures -> band explode -> pairs -> CC) on
     # xxhash64(conv_id) LONGS instead of id strings: the band explode is
@@ -123,21 +121,13 @@ class DedupConfig:
     # would reintroduce exactly that bug. None (default) = AUTO off a
     # MEASURED corpus size instead: run_pipeline counts the eagerly
     # materialized docs_meta table (a real count, not an estimate) and
-    # forces SMJ only when the corpus crosses forced_smj_min_docs /
-    # forced_smj_min_bytes — small corpora keep planner freedom (measured
+    # forces SMJ only when the corpus crosses skew.FORCED_SMJ_MIN_DOCS /
+    # skew.FORCED_SMJ_MIN_BYTES — small corpora keep planner freedom (measured
     # ~0.2-0.4 s/query tax of unconditional SMJ at sf0.1/local[32],
     # VERDICT r4 #1), big corpora get the insurance unconditionally.
     # True/False pin the behavior explicitly (operators treat None as True
     # when called outside run_pipeline — scale-safe without a measurement).
     forced_smj: bool | None = None
-    # measured-gate thresholds for forced_smj=None: force SMJ when the doc
-    # count exceeds min_docs, OR total text bytes exceed min_bytes, OR the
-    # estimated signature-table bytes (n_docs * num_perm * 8) exceed
-    # min_bytes — the two broadcast-build OOM classes measured at 6.5M
-    # turns were the text attach (sum total_len) and the 1 KB/row
-    # minhash-carrying signatures side.
-    forced_smj_min_docs: int = 1_000_000
-    forced_smj_min_bytes: int = 64 * 1024 * 1024
     # eager empty-check short-circuit on the rescue band (simhash.py): when
     # no candidate lands in the near-miss band — the common case — the wide
     # minhash attach is skipped entirely (measured ~60 s-cpu of 365 at 1.6M
@@ -186,6 +176,10 @@ class DedupConfig:
             raise ValueError(f"minhash_mode must be 'perm' or 'oph', got {self.minhash_mode!r}")
         if self.minhash_mode == "oph" and self.num_perm & (self.num_perm - 1):
             raise ValueError(f"minhash_mode='oph' needs a power-of-two num_perm, got {self.num_perm}")
+        if self.band_salt_buckets < 1:
+            raise ValueError(
+                f"band_salt_buckets must be at least 1, got {self.band_salt_buckets}"
+            )
         if self.complete_hash and self.enable_substring_pass:
             raise ValueError(
                 "complete_hash=True clusters exact-content-equal docs only; "
@@ -213,8 +207,11 @@ class DedupConfig:
         older store roots recompute, and so does dropping the SimHash width
         (never read; SimHash is 64-bit by construction), the SimHash
         confirmation switch (nothing turned it off; SimHash confirmation is
-        the only near-dup rule) and the winnowing w-gram size (now derived
-        from ``substring_min_len``)."""
+        the only near-dup rule), the winnowing w-gram size (now derived
+        from ``substring_min_len``), the turn separator (now
+        ``assembly.TURN_SEPARATOR``) and the per-doc kernel input cap (now
+        ``minhash.MAX_SHINGLE_CHARS``); both constants keep the old
+        defaults, so only the hash moves, never a result."""
         payload = json.dumps(
             {k: v for k, v in asdict(self).items() if k not in _PHYSICAL_KNOBS},
             sort_keys=True,

@@ -479,21 +479,12 @@ def q_dd_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deduplicate_spark.operators.skew import (
         bucket_pairs,
         maybe_merge_hint,
-        measured_text_stats,
         resolve_gates,
+        text_stats,
     )
 
     _cfg = DedupConfig()
-    # byte-correct two-phase measurement (chars undercount UTF-8 bytes up
-    # to 4x; see measured_text_stats) — the cheap n_chars column decides
-    # whenever the corpus is far from every threshold
-    _n, _b = measured_text_stats(
-        docs,
-        _cfg,
-        text_col="text",
-        chars_col="n_chars" if "n_chars" in docs.columns else None,
-    )
-    _smj = resolve_gates(_n, _b, _cfg).forced_smj
+    _smj = resolve_gates(*text_stats(docs), _cfg).forced_smj
     # scan-parallelism floor: the gram computation (split + md5 + xxhash64
     # per gram) is CPU-bound, and a single-file documents table yields
     # file-split parallelism only (a 148 MB file = 2 splits — measured at

@@ -473,7 +473,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
     centroids: list[list[float]] | None = None,
-    assign_via_kernel: bool | None = None,
 ) -> DataFrame:
     """IVF-partitioned approximate top-k — the inverted-file scale path
     beside the SRP-LSH one (``ann_topk``): every corpus vector is assigned
@@ -486,13 +485,9 @@ def ivf_topk(
     candidates reach the final window, and every global top-k row is
     top-k within its batch, so the reduction is lossless.
 
-    ``assign_via_kernel`` (default: auto, > 64 cells) selects the cell
-    assignment ARITHMETIC: the matmul form (normalize + BLAS + stable
-    argsort) or the literal form (fold-order cosine via
-    :func:`_foldorder_cosine_matrix`, the arithmetic of the former
-    literal-centroid fold expressions). Both take the argmax of cosine,
-    ties -> smaller cell, and are applied identically to queries and
-    corpus.
+    Cells are assigned by cosine to each centroid (normalize + matmul +
+    stable argsort): the argmax of cosine, ties -> smaller cell, applied
+    identically to queries and corpus.
 
     Q-small contract: the query set is collected to the driver and shipped
     in every task's closure, so it may hold at most ``MAX_QUERIES`` rows;
@@ -500,17 +495,13 @@ def ivf_topk(
     side are skipped; a vector whose length differs from the centroids'
     raises a ValueError naming its id."""
     cents = centroids if centroids is not None else ivf_centroids(vectors, n_cells, id_col, vec_col)
-    use_kernel = assign_via_kernel if assign_via_kernel is not None else len(cents) > 64
     cmat = np.asarray(cents, dtype=np.float64)
-    cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True) if use_kernel else None
+    cnorm = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
 
     def ranked_cells(m: np.ndarray) -> np.ndarray:
         # cells by cosine DESC, ties -> smaller cell; the same arithmetic
         # assigns queries (driver) and corpus rows (executors)
-        if use_kernel:
-            cs = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ cnorm.T
-        else:
-            cs = _foldorder_cosine_matrix(m, cmat)
+        cs = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ cnorm.T
         return np.argsort(-cs, axis=1, kind="stable")
 
     qids, q_type, qmat = _collect_queries(

@@ -27,6 +27,9 @@ from pyspark.sql import functions as F
 from deduplicate_spark.config import DedupConfig, EMPTY_SHA1
 
 PREFIX_CHARS = 1024  # beg_hash window size analog (dupe_analysis.py:19 chunk=1024)
+# joins a conversation's turn texts into its doc (batch assembly, the
+# streaming sessionizer and the oracle)
+TURN_SEPARATOR = "\n"
 
 # every character str.isspace() accepts: the set str.strip() removes, which
 # the kernels (minhash.py, substring.py) and oracle.py use to call a text
@@ -81,7 +84,7 @@ def assemble_docs(turns: DataFrame, config: DedupConfig | None = None) -> DataFr
         .select(
             "conv_id",
             F.concat_ws(
-                config.turn_separator,
+                TURN_SEPARATOR,
                 F.transform(F.col("turns"), lambda t: F.coalesce(t["text"], F.lit(""))),
             ).alias("doc_text"),
             F.size("turns").cast("int").alias("n_turns"),
@@ -147,11 +150,3 @@ def debug_dump(docs: DataFrame) -> DataFrame:
         "conv_id", "n_turns", "total_len", "prefix_sha", "exact_sha"
     )
 
-
-def turns_roundtrip_check(turns: DataFrame, docs: DataFrame, config: DedupConfig) -> int:
-    """Invariant check: every (conv_id, turn_idx) text survives assembly in
-    order. Returns the number of violating conversations (0 == pass)."""
-    config = config or DedupConfig()
-    expected = assemble_docs(turns, config).select("conv_id", "doc_text")
-    joined = expected.alias("e").join(docs.alias("d"), "conv_id", "inner")
-    return joined.filter(F.col("e.doc_text") != F.col("d.doc_text")).count()

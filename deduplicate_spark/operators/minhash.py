@@ -33,6 +33,10 @@ from deduplicate_spark.config import DedupConfig
 _BASE = np.uint64(1099511628211)          # FNV prime, odd -> invertible mod 2^64
 _INV_BASE = np.uint64(pow(1099511628211, -1, 1 << 64))
 _SEED_A = 0x9E3779B97F4A7C15             # splitmix64 golden gamma
+# per-doc kernel input cap in characters (skew guard): the signature and
+# winnowing kernels, the substring verify and the oracle read at most this
+# many leading characters of a doc
+MAX_SHINGLE_CHARS = 200_000
 
 
 def _splitmix64(z: np.ndarray) -> np.ndarray:
@@ -262,7 +266,6 @@ def compute_signatures(docs, config: DedupConfig | None = None, seed: int = 42):
     config = config or DedupConfig()
     k = config.shingle_k
     num_perm = config.num_perm
-    max_chars = config.max_shingle_chars
     id_type = docs.schema["conv_id"].dataType.simpleString()
     id_dtype = "int64" if id_type == "bigint" else "object"
 
@@ -271,7 +274,7 @@ def compute_signatures(docs, config: DedupConfig | None = None, seed: int = 42):
         for pdf in batches:
             out_ids, out_sigs, out_sims, out_ns = [], [], [], []
             for conv_id, text in zip(pdf["conv_id"], pdf["doc_text"]):
-                sh = shingle_hashes(text or "", k, max_chars)
+                sh = shingle_hashes(text or "", k, MAX_SHINGLE_CHARS)
                 sig = doc_signature(sh, config, a, b)
                 out_ids.append(conv_id)
                 out_sigs.append(_to_i64(sig).tolist())

@@ -4,15 +4,12 @@ The cascade repeatedly needs "tag each row with its bucket's size and min
 member, keep only collision buckets (n > 1)" — the A1 prefilter
 (/root/reference/dupe_analysis.py:391-407) — over a bucket key that can be
 pathologically hot at 100 TB (a boilerplate LSH band, a winnowing
-fingerprint shared by millions of template docs). ``Window.partitionBy(key)``
-puts the whole hot bucket in ONE task that AQE cannot split; this helper
+fingerprint shared by millions of template docs). A window partitioned by
+the key puts the whole hot bucket in ONE task that AQE cannot split; this helper
 instead computes count/min as a SALTED ALGEBRAIC partial aggregation
 (reduced within ``salt_buckets`` independent groups, then combined on a
 tiny per-bucket stats table) and tags rows via a join-back that AQE's
 skew-join CAN split.
-
-``salt_buckets <= 1`` keeps the single-shuffle window form as a small-corpus
-fast path (measured ~2x faster at sandbox scale, unusable at 100x).
 
 :func:`bucket_pairs` turns tagged buckets into candidate edges for every
 batch stage that pairs collision buckets.
@@ -22,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import replace
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplicate_spark.lineage import cut_lineage
@@ -39,6 +36,16 @@ def maybe_merge_hint(df: DataFrame, forced: bool | None = True) -> DataFrame:
     return df.hint("merge") if (forced or forced is None) else df
 
 
+# forced-SMJ gate thresholds for ``forced_smj=None``: force SMJ when the doc
+# count exceeds FORCED_SMJ_MIN_DOCS, OR the total text bytes or the
+# estimated signature-table bytes (n_docs * num_perm * 8) exceed
+# FORCED_SMJ_MIN_BYTES — the two broadcast-build OOM classes measured at
+# 6.5M turns were the text attach (sum total_len) and the 1 KB/row
+# minhash-carrying signatures side.
+FORCED_SMJ_MIN_DOCS = 1_000_000
+FORCED_SMJ_MIN_BYTES = 64 << 20
+
+
 def measured_forced_smj(n_docs: int, total_bytes: int, config) -> bool:
     """The MEASURED gate behind ``DedupConfig.forced_smj=None``: real
     counts, not planner estimates (which are exactly what mis-admitted the
@@ -48,9 +55,9 @@ def measured_forced_smj(n_docs: int, total_bytes: int, config) -> bool:
     signature table's exact bytes (n_docs * num_perm * 8 — the 1 KB/row
     minhash side that built a 1.15 GB broadcast at 6.5M turns)."""
     return (
-        n_docs > config.forced_smj_min_docs
-        or total_bytes > config.forced_smj_min_bytes
-        or n_docs * config.num_perm * 8 > config.forced_smj_min_bytes
+        n_docs > FORCED_SMJ_MIN_DOCS
+        or total_bytes > FORCED_SMJ_MIN_BYTES
+        or n_docs * config.num_perm * 8 > FORCED_SMJ_MIN_BYTES
     )
 
 
@@ -68,34 +75,16 @@ def measured_forced_smj(n_docs: int, total_bytes: int, config) -> bool:
 _KERNEL_SMALL_BYTES_PER_SLOT = 4 << 20
 
 
-def measured_text_stats(
-    df: DataFrame, config, text_col: str = "text", chars_col: str | None = None
-) -> tuple[int, int]:
-    """(n_rows, total_utf8_bytes) for the measured gates, over a RAW text
-    table (no assembly pass to piggyback a byte column on — contrast
-    ``assemble_docs``' total_bytes).
-
-    Two-phase so the common cases never scan the text column: chars are a
-    LOWER bound on UTF-8 bytes and 4*chars an UPPER bound, so when both
-    bounds land on the same side of every gate threshold a cheap
-    chars-column scan decides (a 100 TB corpus is "big" in any unit).
-    Only when some threshold falls inside [chars, 4*chars] — which proves
-    the corpus is under 4*max_threshold bytes, so the scan is cheap by
-    construction — is ``octet_length`` aggregated exactly."""
-    c = F.sum(chars_col) if chars_col else F.sum(F.length(text_col))
+def text_stats(df: DataFrame, text_col: str = "text") -> tuple[int, int]:
+    """(n_rows, total UTF-8 bytes of ``text_col``) — the measured corpus size
+    the gates take (:func:`resolve_gates`), for a table with no assembled
+    ``total_bytes`` column. Bytes, not chars: chars undercount UTF-8 up to
+    4x, and every gate threshold is in bytes."""
     st = df.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(c, F.lit(0)).alias("c")
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.octet_length(text_col)), F.lit(0)).alias("b"),
     ).first()
-    lo, hi = int(st.c), int(st.c) * 4
-    thresholds = (
-        config.forced_smj_min_bytes,
-        config.shuffle_partitions * _KERNEL_SMALL_BYTES_PER_SLOT,
-    )
-    if any(lo <= t <= hi for t in thresholds):
-        b = df.agg(F.coalesce(F.sum(F.octet_length(text_col)), F.lit(0))).first()[0]
-        return int(st.n), int(b)
-    # both bounds agree for every gate -> lo yields the same decisions
-    return int(st.n), lo
+    return int(st.n), int(st.b)
 
 
 def measured_small_corpus(total_bytes: int, config) -> bool:
@@ -145,32 +134,25 @@ def tag_bucket_stats(
     forced_smj: bool = True,
 ) -> DataFrame:
     """df(..., key, id_col) -> rows of collision buckets only, plus
-    ``bucket_n`` (bucket size) and ``bucket_rep`` (min id in bucket)."""
-    if salt_buckets and salt_buckets > 1:
-        partial = (
-            df.withColumn("_salt", F.pmod(F.xxhash64(id_col), F.lit(salt_buckets)))
-            .groupBy(key, "_salt")
-            .agg(F.count(F.lit(1)).alias("_pn"), F.min(id_col).alias("_pmin"))
-        )
-        stats = (
-            partial.groupBy(key)
-            .agg(F.sum("_pn").alias("bucket_n"), F.min("_pmin").alias("bucket_rep"))
-            .filter(F.col("bucket_n") > 1)  # A1 prefilter: collision buckets only
-        )
-        # forced sort-merge: the stats side of a web-scale corpus is
-        # millions of collision buckets — a planner-estimate-driven
-        # broadcast builds it on the driver and OOMs exactly when the data
-        # gets interesting (measured at 6.5M turns: long-id stats rows
-        # squeeze under the 64 MB estimate threshold and the driver dies).
-        # SMJ is also what AQE's skew-join can split — the design reason
-        # this helper exists.
-        return df.join(maybe_merge_hint(stats, forced_smj), key)
-    w = Window.partitionBy(key)
-    return df.select(
-        *df.columns,
-        F.count(F.lit(1)).over(w).alias("bucket_n"),
-        F.min(id_col).over(w).alias("bucket_rep"),
-    ).filter(F.col("bucket_n") > 1)
+    ``bucket_n`` (bucket size) and ``bucket_rep`` (min id in bucket).
+    ``salt_buckets`` must be at least 1."""
+    partial = (
+        df.withColumn("_salt", F.pmod(F.xxhash64(id_col), F.lit(salt_buckets)))
+        .groupBy(key, "_salt")
+        .agg(F.count(F.lit(1)).alias("_pn"), F.min(id_col).alias("_pmin"))
+    )
+    stats = (
+        partial.groupBy(key)
+        .agg(F.sum("_pn").alias("bucket_n"), F.min("_pmin").alias("bucket_rep"))
+        .filter(F.col("bucket_n") > 1)  # A1 prefilter: collision buckets only
+    )
+    # forced sort-merge: the stats side of a web-scale corpus is millions
+    # of collision buckets — a planner-estimate-driven broadcast builds it
+    # on the driver and OOMs exactly when the data gets interesting
+    # (measured at 6.5M turns: long-id stats rows squeeze under the 64 MB
+    # estimate threshold and the driver dies). SMJ is also what AQE's
+    # skew-join can split — the design reason this helper exists.
+    return df.join(maybe_merge_hint(stats, forced_smj), key)
 
 
 def bucket_pairs(

@@ -32,12 +32,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
-from deduplicate_spark.operators.minhash import window_hashes
+from deduplicate_spark.operators.minhash import MAX_SHINGLE_CHARS, window_hashes
 from deduplicate_spark.operators.skew import (
     bucket_pairs,
     maybe_merge_hint,
     resolve_gates,
     spread_over_slots,
+    text_stats,
 )
 from deduplicate_spark.lineage import cut_lineage
 
@@ -255,7 +256,7 @@ def doc_fingerprints(docs: DataFrame, config: DedupConfig | None = None) -> Data
     """docs -> exploded (conv_id, fp) winnowing fingerprints. The id column
     passes through opaquely (strings, or the pipeline's internal longs)."""
     config = config or DedupConfig()
-    t, cap = config.substring_min_len, config.max_shingle_chars
+    t = config.substring_min_len
     w = winnow_width(t)
     id_type = docs.schema["conv_id"].dataType.simpleString()
     id_dtype = "int64" if id_type == "bigint" else "object"
@@ -264,7 +265,7 @@ def doc_fingerprints(docs: DataFrame, config: DedupConfig | None = None) -> Data
         for pdf in batches:
             ids, fps = [], []
             for conv_id, text in zip(pdf["conv_id"], pdf["doc_text"]):
-                sel = winnow_fingerprints(text or "", t, w, cap)
+                sel = winnow_fingerprints(text or "", t, w, MAX_SHINGLE_CHARS)
                 ids.extend([conv_id] * sel.size)
                 fps.extend(sel.view(np.int64).tolist())
             yield pd.DataFrame(
@@ -294,11 +295,7 @@ def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataF
         # fingerprint/text-attach stages below all read the same blocks
         # instead of re-running assembly, so the measurement is ~free.
         docs = cut_lineage(docs, eager=True)
-        st = docs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.octet_length("doc_text")), F.lit(0)).alias("b"),
-        ).first()
-        config = resolve_gates(st.n, st.b, config)
+        config = resolve_gates(*text_stats(docs, "doc_text"), config)
     # kernel-parallelism floor (same measured gate as the signature kernel,
     # skew.measured_small_corpus): below the gate the filtered docs sit in
     # 1-4 byte-sized partitions and the CPU-bound winnowing kernel would
@@ -339,7 +336,6 @@ def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataF
 
     t = config.substring_min_len
     w = winnow_width(t)
-    cap = config.max_shingle_chars
     id_type = docs.schema["conv_id"].dataType.simpleString()
     id_dtype = "int64" if id_type == "bigint" else "object"
 
@@ -349,7 +345,7 @@ def substring_pairs(docs: DataFrame, config: DedupConfig | None = None) -> DataF
             for a, b, ta, tb in zip(pdf["a"], pdf["b"], pdf["text_a"], pdf["text_b"]):
                 # seed-and-extend decision, equal to LCS(ta, tb) >= t
                 # (suffix-array fallback inside — see has_common_substring_ge)
-                if has_common_substring_ge(ta or "", tb or "", t, w, cap):
+                if has_common_substring_ge(ta or "", tb or "", t, w, MAX_SHINGLE_CHARS):
                     keep_a.append(a)
                     keep_b.append(b)
             yield pd.DataFrame(

@@ -18,7 +18,9 @@ import numpy as np
 import pandas as pd
 
 from deduplicate_spark.config import DedupConfig, EMPTY_SHA1
+from deduplicate_spark.operators.assembly import TURN_SEPARATOR
 from deduplicate_spark.operators.minhash import (
+    MAX_SHINGLE_CHARS,
     doc_signature,
     perm_params,
     shingle_hashes,
@@ -65,7 +67,7 @@ def assemble_docs_pandas(turns: pd.DataFrame, config: DedupConfig | None = None)
     t = t.sort_values(["conv_id", "turn_idx"])
     docs = (
         t.groupby("conv_id")["text"]
-        .apply(lambda s: config.turn_separator.join(x or "" for x in s))
+        .apply(lambda s: TURN_SEPARATOR.join(x or "" for x in s))
         .reset_index(name="doc_text")
     )
     docs["total_len"] = docs["doc_text"].str.len()
@@ -102,7 +104,7 @@ def oracle_dup_pairs(
     sigs: dict[str, np.ndarray] = {}
     sims: dict[str, int] = {}
     for conv_id, text in zip(reps["conv_id"], reps["doc_text"]):
-        sh = shingle_hashes(text, config.shingle_k, config.max_shingle_chars)
+        sh = shingle_hashes(text, config.shingle_k, MAX_SHINGLE_CHARS)
         shingles[conv_id] = sh
         sigs[conv_id] = doc_signature(sh, config, a, b)
         sims[conv_id] = simhash64(sh)
@@ -154,7 +156,7 @@ def oracle_dup_pairs(
                 text,
                 config.substring_min_len,
                 winnow_width(config.substring_min_len),
-                config.max_shingle_chars,
+                MAX_SHINGLE_CHARS,
             )
             for cid, text in zip(reps["conv_id"], reps["doc_text"])
         }

@@ -99,10 +99,16 @@ class CheckpointStore:
         self.metrics.append({**lineage, "reused": False})
         return out
 
-    def invalidate(self, name: str) -> None:
-        path = self._lineage_path(name)
-        if os.path.exists(path):
-            os.remove(path)
+    def invalidate_all(self) -> None:
+        """Forget every stage under the root, so the next run recomputes
+        each one — whatever stages the pipeline checkpoints. The data stays
+        on disk until a stage overwrites it."""
+        if not os.path.isdir(self.root):
+            return
+        for name in os.listdir(self.root):
+            path = self._lineage_path(name)
+            if os.path.exists(path):
+                os.remove(path)
 
     def read_metrics(self) -> DataFrame:
         """The appended metrics table across every run of this store root.

@@ -351,9 +351,13 @@ def process_batch(
     # batch-internal exact groups: star edges + one rep per sha, exactly
     # the batch cascade's work-avoidance (pipeline.py exact stage)
     internal_exact_edges = exact_star_edges(
-        genuinely_new if config.empty_cluster else genuinely_new.filter(non_empty)
+        genuinely_new if config.empty_cluster else genuinely_new.filter(non_empty),
+        salt_buckets=config.band_salt_buckets,
+        forced_smj=config.forced_smj,
     )
-    reps = exact_representatives(genuinely_new)
+    reps = exact_representatives(
+        genuinely_new, salt_buckets=config.band_salt_buckets, forced_smj=config.forced_smj
+    )
 
     # ---- near path: kernel on genuinely-new reps only -------------------
     new_sigs = cut_lineage(compute_signatures(reps, config))

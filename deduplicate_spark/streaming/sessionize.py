@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from deduplicate_spark.config import DedupConfig
-from deduplicate_spark.operators.assembly import apply_excludes, doc_hash_keys
+from deduplicate_spark.operators.assembly import TURN_SEPARATOR, apply_excludes, doc_hash_keys
 
 # assembled-doc rows emitted when a session closes; hash keys are attached
 # by the shared batch projection afterwards (doc_hash_keys), NOT computed in
@@ -49,7 +49,7 @@ _STATE_SCHEMA = "idx array<int>, txt array<string>"
 _STATE_SCHEMA_EVENT = "idx array<int>, txt array<string>, max_ts long"
 
 
-def _emit_doc(key, idx, txt, separator: str) -> pd.DataFrame:
+def _emit_doc(key, idx, txt) -> pd.DataFrame:
     """Shared close-session emit for BOTH timeout modes: sort with the
     None-safe key matching Spark's struct ordering exactly —
     array_sort(struct(turn_idx, text)) puts a null text BEFORE any string
@@ -60,7 +60,7 @@ def _emit_doc(key, idx, txt, separator: str) -> pd.DataFrame:
         range(len(idx)),
         key=lambda i: (idx[i], txt[i] is not None, txt[i] or ""),
     )
-    doc = separator.join(txt[i] if txt[i] is not None else "" for i in order)
+    doc = TURN_SEPARATOR.join(txt[i] if txt[i] is not None else "" for i in order)
     return pd.DataFrame(
         {"conv_id": [key[0]], "doc_text": [doc], "n_turns": [len(idx)]}
     )
@@ -71,7 +71,6 @@ def assemble_session(
     pdfs: Iterable[pd.DataFrame],
     state: GroupState,
     gap_ms: int = 30_000,
-    separator: str = "\n",
 ) -> Iterator[pd.DataFrame]:
     """The per-conversation state function. Pure Python over pandas
     batches + a GroupState handle, so it is unit-testable without a
@@ -83,7 +82,7 @@ def assemble_session(
     with the separator, emits ONE document row, and drops the state."""
     if state.hasTimedOut:
         idx, txt = state.get
-        out = _emit_doc(key, idx, txt, separator)
+        out = _emit_doc(key, idx, txt)
         state.remove()
         yield out
         return
@@ -101,7 +100,6 @@ def assemble_session_event_time(
     pdfs: Iterable[pd.DataFrame],
     state: GroupState,
     gap_ms: int = 30_000,
-    separator: str = "\n",
 ) -> Iterator[pd.DataFrame]:
     """Event-time variant (VERDICT r5 #5): the session gap is measured on
     the TS COLUMN, not arrival time, so out-of-order and cross-trigger
@@ -125,7 +123,7 @@ def assemble_session_event_time(
     delay >= the feed's real lateness to make that window empty."""
     if state.hasTimedOut:
         idx, txt, _ = state.get
-        out = _emit_doc(key, idx, txt, separator)
+        out = _emit_doc(key, idx, txt)
         state.remove()
         yield out
         return
@@ -178,9 +176,7 @@ def sessionize_turns(
     if event_time_watermark is not None:
 
         def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
-            return assemble_session_event_time(
-                key, pdfs, state, gap_ms=gap_ms, separator=config.turn_separator
-            )
+            return assemble_session_event_time(key, pdfs, state, gap_ms=gap_ms)
 
         assembled = (
             turns.withWatermark("ts", event_time_watermark)
@@ -197,9 +193,7 @@ def sessionize_turns(
         return doc_hash_keys(assembled)
 
     def fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        return assemble_session(
-            key, pdfs, state, gap_ms=gap_ms, separator=config.turn_separator
-        )
+        return assemble_session(key, pdfs, state, gap_ms=gap_ms)
 
     assembled = (
         turns.select("conv_id", "turn_idx", "text")

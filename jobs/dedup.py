@@ -231,8 +231,7 @@ def main(argv: list[str] | None = None) -> None:
             enabled=True,
         )
         if not resume:
-            for stage in ("docs", "signatures", "pairs", "clusters", "actions"):
-                store.invalidate(stage)
+            store.invalidate_all()
 
     t0 = time.time()
     result = run_pipeline(spark, turns, config, store=store, analyze_only=args.analyze)

@@ -1,13 +1,18 @@
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+from pathlib import Path
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.datagen import generate_transcripts
 from deduplicate_spark.pipeline import run_pipeline
+from deduplicate_spark.schema import TRANSCRIPTS_SCHEMA
 from deduplicate_spark.sources.checkpoint import CheckpointStore, merge_runs
 
 
@@ -112,6 +117,33 @@ def test_resume_equals_clean_run_substring_pass(spark, turns_df, tmp_path):
     cfg = DedupConfig(exclude_roles=("system",), enable_substring_pass=True)
     reused = _resume_vs_clean(spark, turns_df, str(tmp_path / "resume"), cfg)
     assert {"reps_text", "signatures", "pairs"} <= set(reused)
+
+
+def test_job_without_resume_recomputes_every_stage(spark, tmp_path, monkeypatch):
+    """The job keys its store by the input PATH, so new data at the same
+    path matches the last run's lineage. Without --resume it must forget
+    every stage the pipeline checkpoints and equal a clean run on the new
+    data (a hand-kept list of stage names once left docs_meta, reps_text
+    and sig_simhash to be reused from the previous corpus)."""
+    path = Path(__file__).resolve().parents[1] / "jobs" / "dedup.py"
+    spec = importlib.util.spec_from_file_location("dedup_job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)  # shared session
+    turns_path, root = str(tmp_path / "turns"), str(tmp_path / "ckpt")
+
+    def run_job(seed: int, out: str) -> set:
+        corpus = generate_transcripts(n_base=150, seed=seed)[0]
+        spark.createDataFrame(corpus, TRANSCRIPTS_SCHEMA).write.mode("overwrite").parquet(
+            turns_path
+        )
+        job.main(["--input", turns_path, "--output", out, "--checkpoint-root", root])
+        return {tuple(r) for r in spark.read.parquet(f"{out}/clusters").collect()}
+
+    run_job(1, str(tmp_path / "out_a"))
+    got = run_job(2, str(tmp_path / "out_b"))
+    clean = run_pipeline(spark, spark.read.parquet(turns_path), DedupConfig())
+    assert got == {tuple(r) for r in clean.clusters.collect()}
 
 
 def test_store_run_records_bucket_stats(spark, turns_df, tmp_path):
@@ -264,8 +296,6 @@ def test_config_hash_ignores_physical_knobs():
     base = DedupConfig()
     physical = DedupConfig(
         forced_smj=True,
-        forced_smj_min_docs=7,
-        forced_smj_min_bytes=123,
         rescue_short_circuit=True,
         kernel_small_corpus=True,
         shuffle_partitions=4,

@@ -31,3 +31,12 @@ def test_strict_mode_refuses_substring_pass():
         DedupConfig(complete_hash=True, enable_substring_pass=True)
     DedupConfig(complete_hash=True)
     DedupConfig(enable_substring_pass=True)
+
+
+@pytest.mark.parametrize("salt", [0, -1])
+def test_band_salt_buckets_below_one_is_refused(salt):
+    """The salt is a modulus (pmod(xxhash64(id), salt)): 0 would fail in an
+    executor with a remainder-by-zero error, so the config refuses it."""
+    with pytest.raises(ValueError, match="band_salt_buckets"):
+        DedupConfig(band_salt_buckets=salt)
+    DedupConfig(band_salt_buckets=1)

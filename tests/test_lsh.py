@@ -1,10 +1,12 @@
-"""LSH candidate generation: salted-aggregation path vs window path, hot-band
-star fallback, and the empty_cluster pipeline knob.
+"""LSH candidate generation: salted-aggregation pairs against the clique
+rule, hot-band star fallback, and the empty_cluster pipeline knob.
 
 Reference analog: the collision-group secondary-index step the cascade leans
 on (/root/reference/dupe_analysis.py:391-407)."""
 
 from __future__ import annotations
+
+from itertools import combinations
 
 import pandas as pd
 import pytest
@@ -32,28 +34,30 @@ def _pairs(df):
     return {(r.a, r.b) for r in df.select("a", "b").collect()}
 
 
-def test_salted_equals_window_path(spark):
+def test_salted_pairs_match_python_reference(spark):
     sigs = _sig_df(spark, [("x", 9, 1), ("y", 5, 2), ("z", 1, 3)])
     salted = candidate_pairs(sigs, DedupConfig(band_salt_buckets=8, **CFG))
-    window = candidate_pairs(sigs, DedupConfig(band_salt_buckets=0, **CFG))
-    ps, pw = _pairs(salted), _pairs(window)
-    assert ps == pw
+    ps = _pairs(salted)
+    expected = {
+        p for prefix, n in (("x", 9), ("y", 5))
+        for p in combinations([f"{prefix}{i:06d}" for i in range(n)], 2)
+    }
+    assert ps == expected
     # 9-doc and 5-doc groups are <= allpairs_max=16: full cliques
     assert len(ps) == 9 * 8 // 2 + 5 * 4 // 2
 
 
 def test_mega_band_star_edges_no_blowup(spark):
     # one hot band bucket far above allpairs_max: must produce star edges
-    # (O(n) rows), identical under both stat paths
+    # (O(n) rows): every member starred to the bucket minimum
     n = 5000
     cfg_s = DedupConfig(band_salt_buckets=16, **CFG)
-    cfg_w = DedupConfig(band_salt_buckets=0, **CFG)
     sigs = _sig_df(spark, [("hot", n, 7)]).repartition(8)
     ps = _pairs(candidate_pairs(sigs, cfg_s))
     assert len(ps) == n - 1  # star to min member, not n^2/2 clique
     rep = min(f"hot{i:06d}" for i in range(n))
     assert all(a == rep for a, _ in ps)
-    assert ps == _pairs(candidate_pairs(sigs, cfg_w))
+    assert ps == {(rep, f"hot{i:06d}") for i in range(1, n)}
 
 
 def test_config_knobs_change_behavior(spark):

@@ -7,7 +7,8 @@ shape that dominates skew at 100 TB — and asserts:
   * the physical plan contains NO Window (a window puts the whole hot
     group in one task AQE cannot split) and no driver-built broadcast on
     the corpus-sized join-backs (measured OOM class at 6.5M turns);
-  * outputs are identical to the window/legacy formulation.
+  * outputs equal the expected star / cluster digests, or the window
+    formulation where the test restates one.
 """
 
 from __future__ import annotations
@@ -69,8 +70,11 @@ def test_exact_star_edges_mega_group(spark):
     docs = _mega_docs(spark)
     salted = exact_star_edges(docs, salt_buckets=16)
     _assert_skew_safe(salted)
-    legacy = exact_star_edges(docs, salt_buckets=0)  # window stats path
-    assert _edge_digest(salted) == _edge_digest(legacy)
+    # every hot member starred to the hot group's minimum id
+    expected = spark.range(1, N_MEGA).select(
+        F.lit("c0000000").alias("a"), F.format_string("c%07d", F.col("id")).alias("b")
+    )
+    assert _edge_digest(salted) == _edge_digest(expected)
     got = _edge_digest(salted)
     assert got.n == N_MEGA - 1  # star to the min member, linear not clique
     sample = salted.filter(F.col("b") == "c0099999").collect()
@@ -81,12 +85,16 @@ def test_exact_clusters_mega_group(spark):
     docs = _mega_docs(spark)
     salted = exact_clusters(docs, salt_buckets=16)
     _assert_skew_safe(salted)
-    legacy = exact_clusters(docs, salt_buckets=0)
+    # the hot group is one cluster named by its minimum id; solos drop out
+    expected = spark.range(N_MEGA).select(
+        F.format_string("c%07d", F.col("id")).alias("conv_id"),
+        F.lit("c0000000").alias("cluster_id"),
+    )
     snap = lambda d: d.agg(  # noqa: E731
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64("conv_id", "cluster_id")).alias("h"),
     ).first()
-    assert snap(salted) == snap(legacy)
+    assert snap(salted) == snap(expected)
     assert snap(salted).n == N_MEGA
 
 

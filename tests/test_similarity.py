@@ -78,20 +78,34 @@ def test_ivf_topk_recalls_planted(vectors):
 
 
 def test_ivf_kernel_assignment_matches_native(vectors):
-    # the matmul assignment and the literal fold-order assignment implement
-    # the same argmax; on real data they must give identical rows. Every
-    # vector is a query and k exceeds the corpus, so each vector's cell and
-    # each query's two probed cells decide which rows come out.
+    # ivf_topk against a driver-side numpy IVF: each vector's cell is the
+    # argmax cosine to the centroids (the 6 smallest-id vectors), ties to
+    # the smaller cell, and a query probes its 2 best cells. Every vector
+    # is a query and k exceeds the corpus, so each vector's cell and each
+    # query's probed cells decide which rows come out.
     queries = vectors.select(F.col("vec_id").alias("q_id"), "embedding")
+    got = {
+        (r.q_id, r.neighbor_id): r.cosine
+        for r in ivf_topk(vectors, queries, n_cells=6, nprobe=2, k=50).collect()
+    }
 
-    def rows(via_kernel):
-        top = ivf_topk(
-            vectors, queries, n_cells=6, nprobe=2, k=50, assign_via_kernel=via_kernel
-        )
-        return sorted(tuple(r) for r in top.collect())
-
-    kern = rows(True)
-    assert kern and kern == rows(False)
+    rows = sorted((r.vec_id, r.embedding) for r in vectors.collect())
+    ids = [i for i, _ in rows]
+    mat = np.array([v for _, v in rows])
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    to_cells = unit @ unit[:6].T
+    cell = to_cells.argmax(axis=1)  # first maximum: ties -> smaller cell
+    probed = np.argsort(-to_cells, axis=1, kind="stable")[:, :2]
+    cos = unit @ unit.T
+    want = {
+        (ids[q], ids[v]): cos[q, v]
+        for q in range(len(ids))
+        for v in range(len(ids))
+        if v != q and cell[v] in probed[q]
+    }
+    assert got.keys() == want.keys()
+    for key, c in want.items():
+        assert got[key] == pytest.approx(c, abs=1e-12)
 
 
 def test_ivf_kmeans_quantizer_contract(vectors):
@@ -175,7 +189,7 @@ def test_ivf_kmeans_production_recall_gate(spark):
     got = {
         (r.q_id, r.neighbor_id)
         for r in ivf_topk(
-            corpus, queries, nprobe=4, k=10, centroids=cents, assign_via_kernel=True
+            corpus, queries, nprobe=4, k=10, centroids=cents
         ).collect()
     }
     recall = len(truth & got) / len(truth)

@@ -5,24 +5,38 @@ unsalted hot-bucket window in the repo)."""
 from __future__ import annotations
 
 import hashlib
+from collections import defaultdict
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.operators.minhash import MAX_SHINGLE_CHARS
 from deduplicate_spark.operators.skew import bucket_pairs, tag_bucket_stats
-from deduplicate_spark.operators.substring import substring_pairs
+from deduplicate_spark.operators.substring import (
+    _ALLPAIRS_MAX,
+    has_common_substring_ge,
+    substring_pairs,
+    winnow_fingerprints,
+    winnow_width,
+)
 
 
-def test_tag_bucket_stats_salted_equals_window(spark):
+def test_tag_bucket_stats_matches_python_reference(spark):
     rows = [(f"d{i:03d}", (i % 3)) for i in range(30)] + [("solo", 99)]
     df = spark.createDataFrame(rows, "conv_id string, k int")
     salted = tag_bucket_stats(df, "k", salt_buckets=8)
-    window = tag_bucket_stats(df, "k", salt_buckets=0)
     snap = lambda d: {  # noqa: E731
         (r.conv_id, r.k, r.bucket_n, r.bucket_rep) for r in d.collect()
     }
-    assert snap(salted) == snap(window)
+    members = defaultdict(list)
+    for cid, k in rows:
+        members[k].append(cid)
+    expected = {
+        (cid, k, len(m), min(m)) for k, m in members.items() if len(m) > 1 for cid in m
+    }
+    assert snap(salted) == expected
     # collision-only: the singleton bucket never survives
     assert all(n > 1 for _, _, n, _ in snap(salted))
     # no window partition in the salted physical plan (AQE can split joins,
@@ -61,7 +75,7 @@ def test_bucket_pairs_matches_python_reference(spark):
         else:
             expected |= {(m[0], x) for x in m[1:]}
 
-    for salt in (8, 0):
+    for salt in (8, 1):
         out = bucket_pairs(df, "k", allpairs_max=cap, id_col="doc_id", salt_buckets=salt)
         got = [(r.a, r.b) for r in out.collect()]
         assert len(got) == len(set(got))  # no duplicate rows
@@ -85,17 +99,42 @@ def _mega_fp_docs(spark, n):
     return spark.createDataFrame(rows, "conv_id string, doc_text string")
 
 
+def _substring_pairs_reference(rows, config):
+    """Pure-Python restatement of substring_pairs' rule: winnowing
+    fingerprint buckets pair all members up to _ALLPAIRS_MAX, star to the
+    bucket minimum above it; a candidate survives when the two texts share
+    a substring of at least substring_min_len bytes."""
+    t = config.substring_min_len
+    w = winnow_width(t)
+    texts = dict(rows)
+    buckets = defaultdict(list)
+    for cid, text in rows:
+        for fp in winnow_fingerprints(text, t, w, MAX_SHINGLE_CHARS):
+            buckets[int(fp)].append(cid)
+    cand = set()
+    for members in buckets.values():
+        m = sorted(members)
+        if len(m) <= _ALLPAIRS_MAX:
+            cand |= set(combinations(m, 2))
+        else:
+            cand |= {(m[0], x) for x in m[1:]}
+    return {
+        (a, b)
+        for a, b in cand
+        if has_common_substring_ge(texts[a], texts[b], t, w, MAX_SHINGLE_CHARS)
+    }
+
+
 def test_mega_fingerprint_star_edges_no_window_straggler(spark):
     """A fingerprint bucket far above allpairs_max must produce star edges
-    to the bucket min, identically under the salted and window stat paths —
-    the substring-pass mirror of test_mega_band_star_edges_no_blowup."""
+    to the bucket min, equal to a pure-Python restatement of the rule — the
+    substring-pass mirror of test_mega_band_star_edges_no_blowup."""
     n = 2000
     docs = _mega_fp_docs(spark, n).repartition(8)
     cfg_s = DedupConfig(enable_substring_pass=True, band_salt_buckets=16)
-    cfg_w = DedupConfig(enable_substring_pass=True, band_salt_buckets=0)
     pairs_s = {(r.a, r.b) for r in substring_pairs(docs, cfg_s).collect()}
-    pairs_w = {(r.a, r.b) for r in substring_pairs(docs, cfg_w).collect()}
-    assert pairs_s == pairs_w
+    rows = [(r.conv_id, r.doc_text) for r in docs.collect()]
+    assert pairs_s == _substring_pairs_reference(rows, cfg_s)
     # the full-membership hot buckets star every doc to the global min;
     # boundary-window subset buckets may add a few extra (verified) stars
     # to their own reps, but the total stays O(n) — never the n^2/2 clique
@@ -246,31 +285,32 @@ def test_python_kernel_stages_run_one_task_per_slot(spark, turns_df, monkeypatch
     )
 
 
-def test_measured_text_stats_two_phase_bytes(spark):
-    """The byte gates must measure BYTES (VERDICT r5: chars undercount
-    UTF-8 up to 4x — a CJK corpus under the char threshold could dodge the
-    forced-SMJ insurance on text 4x over it). Far from every threshold the
-    cheap chars column decides; inside the [chars, 4*chars] ambiguity band
-    the exact octet_length is aggregated."""
-    from dataclasses import replace
+def test_ngram_gate_measures_utf8_bytes(spark, tmp_path, monkeypatch):
+    """The n-gram query's gates must see BYTES, not chars (VERDICT r5:
+    chars undercount UTF-8 up to 4x — a CJK corpus under the char threshold
+    could dodge the forced-SMJ insurance on text 4x over it). The documents
+    table's own n_chars column counts chars and must not stand in."""
+    from deduplicate_spark.entry_queries import q_dd_ngram_jaccard_pairs
+    from deduplicate_spark.operators import skew
 
-    from deduplicate_spark.operators.skew import measured_text_stats
-
-    cfg = DedupConfig()
     # 3-byte CJK chars: 40 chars -> 120 bytes per row
-    cjk = spark.createDataFrame([("世" * 40,)] * 10, "text string")
-    # thresholds far below chars: decided by the cheap phase, lo is enough
-    tiny = replace(cfg, forced_smj_min_bytes=100, shuffle_partitions=0)
-    n, b = measured_text_stats(cjk, tiny)
-    assert (n, b) == (10, 400)  # lower bound, same decision as true 1200
-    # threshold inside [400, 1600]: exact bytes required and returned
-    mid = replace(cfg, forced_smj_min_bytes=800, shuffle_partitions=0)
-    n, b = measured_text_stats(cjk, mid)
-    assert (n, b) == (10, 1200)  # true UTF-8 bytes -> 1200 > 800 forces SMJ
-    # precomputed chars column is honored in the cheap phase
-    withc = cjk.select("text", F.length("text").alias("n_chars"))
-    n, b = measured_text_stats(withc, mid, chars_col="n_chars")
-    assert (n, b) == (10, 1200)
+    spark.createDataFrame(
+        [(i, "世" * 40, 40) for i in range(10)], "doc_id long, text string, n_chars int"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+
+    class Measured(Exception):
+        pass
+
+    seen = []
+
+    def spy(n_docs, total_bytes, config):
+        seen.append((n_docs, total_bytes))
+        raise Measured
+
+    monkeypatch.setattr(skew, "resolve_gates", spy)
+    with pytest.raises(Measured):
+        q_dd_ngram_jaccard_pairs(spark, str(tmp_path))
+    assert seen == [(10, 1200)]
 
 
 def test_assembled_docs_carry_true_byte_length(spark):

@@ -644,6 +644,33 @@ def _band_rule_reference(buckets, allpairs_max):
     return out
 
 
+def test_exact_stage_takes_the_config_salt_and_join_strategy(spark, state, monkeypatch):
+    """process_batch's exact stage passes the config's band_salt_buckets and
+    forced_smj to exact_star_edges and exact_representatives, as its band
+    stage does to band_pairs."""
+    from deduplicate_spark import pipeline
+
+    calls = []
+
+    def spy(fn):
+        def wrapped(docs, **kw):
+            calls.append((fn.__name__, kw.get("salt_buckets"), kw.get("forced_smj")))
+            return fn(docs, **kw)
+
+        return wrapped
+
+    for name in ("exact_star_edges", "exact_representatives"):
+        monkeypatch.setattr(pipeline, name, spy(getattr(pipeline, name)))
+    turns = spark.createDataFrame(generate_transcripts(n_base=10, seed=5)[0], TRANSCRIPTS_SCHEMA)
+    process_batch(
+        spark, turns, state, DedupConfig(band_salt_buckets=3, forced_smj=False), first_batch=True
+    )
+    assert sorted(calls) == [
+        ("exact_representatives", 3, False),
+        ("exact_star_edges", 3, False),
+    ]
+
+
 def test_band_pairs_matches_python_reference(spark):
     """process_batch's band stage (skew.bucket_pairs over (new, conv_id)
     struct members) against a pure-Python reference, salted and window
@@ -688,7 +715,7 @@ def test_band_pairs_matches_python_reference(spark):
     assert not any(a == b for a, b in want)
 
     cfg = DedupConfig()
-    for salt in (cfg.band_salt_buckets, 0):
+    for salt in (cfg.band_salt_buckets, 1):
         got = band_pairs(members, config=replace(cfg, band_salt_buckets=salt)).collect()
         assert {r.evidence for r in got} == {"lsh"}
         assert {(r.a, r.b) for r in got} == want, salt
