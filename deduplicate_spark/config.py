@@ -82,9 +82,10 @@ class DedupConfig:
     # the noisy hamming estimator puts at 13-14 (measured ~2% of planted
     # J~0.85 pairs). None = hamming only.
     min_jaccard: float | None = 0.7
-    # complete_hash analog (dupe_analysis.py:622-633): when True, near-dup
-    # candidates must ALSO be exact-content-equal to cluster (strict mode),
-    # so only exact groups cluster. Refused together with the substring
+    # complete_hash analog (dupe_analysis.py:622-633): when True, only
+    # exact-content-equal docs cluster (strict mode), so the cascade stops
+    # at the exact stage — run_pipeline builds no near-dup branch and
+    # process_batch adds no near edges. Refused together with the substring
     # pass, which clusters docs that merely share a long substring.
     complete_hash: bool = False
     # beg_hash pass-1 analog (dupe_analysis.py:369-370, 437-439): when True,

@@ -2,16 +2,14 @@
 
 The reference confirms cheap-fingerprint collisions with a more expensive
 hash before declaring duplicates (rev_hash confirms beg_hash groups,
-/root/reference/dupe_analysis.py:367-375; optional full_hash confirmation at
-622-633 = ``complete_hash``). Our analog:
-
-  * LSH candidate pairs are confirmed by SimHash Hamming distance <= t —
-    computed NATIVELY: ``bit_count(simhash_a ^ simhash_b)``, no UDF — or,
-    when ``min_jaccard`` is set, by the MinHash Jaccard estimate within a
-    bounded near-miss band above t.
-  * ``complete_hash=True`` escalates confirmation to exact content equality
-    (exact_sha match), reproducing the reference's strict mode that its
-    test_complete_hash (test_dupe_analysis.py:469-496) pins.
+/root/reference/dupe_analysis.py:367-375). Our analog: LSH candidate pairs
+are confirmed by SimHash Hamming distance <= t — computed NATIVELY:
+``bit_count(simhash_a ^ simhash_b)``, no UDF — or, when ``min_jaccard`` is
+set, by the MinHash Jaccard estimate within a bounded near-miss band above
+t. That is the only confirmation rule. The reference's strict mode (full_hash
+confirmation at 622-633 = ``complete_hash``) confirms exact-content-equal
+groups only, so it never reaches this stage: ``run_pipeline`` and
+``process_batch`` stop at the exact stage under it.
 
 Non-transitivity guard: confirmation before connected components prevents
 LSH false positives from chaining unrelated docs into one cluster.
@@ -70,6 +68,10 @@ def confirm_pairs(
 ) -> DataFrame:
     """Candidate (a, b) -> confirmed (a, b, evidence, hamming).
 
+    ``docs`` is accepted and not read: confirmation needs only the
+    signatures, and the keyword stays because existing callers pass it.
+    Raises ``ValueError`` under ``complete_hash=True``.
+
     ``sim_signatures``: optional narrow (conv_id, simhash) table for the
     Hamming attaches. Checkpoint blocks are row-cached with no column
     pruning, so attaching from the full signatures table re-reads (and
@@ -77,25 +79,12 @@ def confirm_pairs(
     16 bytes/row — callers that checkpoint signatures should pass a
     narrow projection checkpoint here (run_pipeline does)."""
     config = config or DedupConfig()
-    sim_sigs = sim_signatures if sim_signatures is not None else signatures
-
-    if config.complete_hash:
-        # strict mode: duplicates must be exact-content-equal
-        if docs is None:
-            raise ValueError("complete_hash=True requires docs for exact_sha")
-
-        def sha(name: str) -> DataFrame:
-            return maybe_merge_hint(
-                docs.select(F.col("conv_id").alias(name), F.col("exact_sha").alias(f"sha_{name}")),
-                config.forced_smj,
-            )
-
-        return (
-            pairs.join(sha("a"), "a")
-            .join(sha("b"), "b")
-            .filter(F.col("sha_a") == F.col("sha_b"))
-            .select("a", "b", F.lit("exact").alias("evidence"), F.lit(0).alias("hamming"))
+    if config.complete_hash:  # near-dup pairs would silently widen strict mode
+        raise ValueError(
+            "confirm_pairs confirms near-dup candidates; complete_hash=True "
+            "clusters exact-content-equal docs only and has nothing to confirm"
         )
+    sim_sigs = sim_signatures if sim_signatures is not None else signatures
 
     # the simhash-only attach is narrow (see sim_signatures above)
     base = attach_signatures(

@@ -85,17 +85,22 @@ def oracle_dup_pairs(
     config = config or DedupConfig()
     uf = UnionFind()
 
-    # exact groups (G1): hash equality is transitive
+    # exact groups (G1): hash equality is transitive. Content-empty docs
+    # (EMPTY_SHA1) form one group only under empty_cluster, like the engine.
     by_sha = defaultdict(list)
     for conv_id, sha in zip(docs["conv_id"], docs["exact_sha"]):
         by_sha[sha].append(conv_id)
+    if not config.empty_cluster:
+        by_sha.pop(EMPTY_SHA1, None)
     for members in by_sha.values():
         for m in members[1:]:
             uf.union(members[0], m)
+    if config.complete_hash:  # strict mode: exact groups only, as in run_pipeline
+        return _co_cluster_pairs(uf)
 
     # near path on exact-distinct non-empty representatives
     reps = (
-        docs[docs["total_len"] > 0]
+        docs[docs["exact_sha"] != EMPTY_SHA1]
         .sort_values("conv_id")
         .drop_duplicates("exact_sha", keep="first")
     )
@@ -134,10 +139,6 @@ def oracle_dup_pairs(
             if pair in seen:
                 continue
             seen.add(pair)
-            if config.complete_hash:
-                # strict mode confirms exact-content-equal pairs only, and
-                # candidates are exact-distinct representatives
-                continue
             # mirrors operators/simhash.py confirm_pairs: hamming <= bound,
             # OR (min_jaccard set AND hamming within the rescue slack AND
             # est_jaccard >= min_jaccard)
@@ -175,7 +176,11 @@ def oracle_dup_pairs(
                     ):
                         uf.union(members[i], members[j])
 
-    # expand components into pairs
+    return _co_cluster_pairs(uf)
+
+
+def _co_cluster_pairs(uf: UnionFind) -> set[tuple[str, str]]:
+    """Every (a<b) pair of nodes that share a component."""
     comps = defaultdict(list)
     for node in list(uf.parent):
         comps[uf.find(node)].append(node)

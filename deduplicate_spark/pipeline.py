@@ -11,6 +11,9 @@ data the cheap stages could not already resolve.
                                                    (near edges between reps)
     edges = exact ∪ near [∪ substring] ──► connected components ─► resolve
 
+Strict mode (``complete_hash``) stops the cascade at the exact stage: its
+edges are the exact star edges alone.
+
 The three edge sources read nothing but the materialized meta and
 representative tables, so ``run_pipeline`` builds them as concurrent
 branches (``lineage.run_branches``), each ending in a materialized table.
@@ -50,10 +53,8 @@ from deduplicate_spark.lineage import cut_lineage, run_branches
 @dataclass
 class PipelineResult:
     docs: DataFrame
-    exact_edges: DataFrame
-    signatures: DataFrame
-    candidate_edges: DataFrame
-    confirmed_edges: DataFrame
+    # None in strict mode (complete_hash), which builds no signatures
+    signatures: DataFrame | None
     clusters: DataFrame
     actions: DataFrame
     report: DataFrame
@@ -208,6 +209,117 @@ def assert_no_id_collisions(docs: DataFrame, hash_col=None, stats=None) -> None:
         )
 
 
+def _similarity_branches(
+    kmeta: DataFrame, ktext: DataFrame, config: DedupConfig, ckpt, store
+) -> dict:
+    """``run_pipeline``'s near-dup branch, returning ``(signatures,
+    confirmed)``, and its optional substring branch: both read only the
+    exact-distinct, non-empty representatives."""
+    # exact-distinct representatives: argmin over narrow meta; only the
+    # winning ids semi-join the text table (one text pass into the kernel)
+    rep_src = kmeta.filter(F.col("exact_sha") != EMPTY_SHA1)
+    rep_ids = salted_struct_min(
+        rep_src.select("exact_sha", F.col("conv_id").alias("_ord")),
+        "exact_sha",
+        salt_buckets=config.band_salt_buckets,
+    ).select(F.col("_ord").alias("conv_id"))
+    # Eagerness of the signature checkpoint follows the measured
+    # small-corpus gate: on SMALL corpora a lazy cut lets racing AQE
+    # consumers re-run the kernel before the blocks land (measured at
+    # sf0.1: two concurrent 1-task kernel-sized stages), and the eager
+    # barrier costs one trivial job. On BIG corpora the eager cut added
+    # extra materialization passes of GB-sized tables (measured at 6.5M
+    # turns: walls regressed with unconditional eager).
+    kernel_eager = bool(config.kernel_small_corpus)
+    reps_join = ktext.join(
+        maybe_merge_hint(rep_ids, config.forced_smj), "conv_id", "left_semi"
+    )
+    # the reps_text checkpoint exists for REUSE (substring pass, prefix
+    # prefilter, store resumability); otherwise the kernel is its only
+    # consumer, and the semi-join feeds it directly (one fused text pass).
+    # The cut is eager: the substring and near-dup branches both read it,
+    # and a lazy cut would run the semi-join's shuffle stages here anyway
+    # (AQE), deferring only the stage that writes the same blocks.
+    reps_reused = (
+        store is not None or config.enable_substring_pass or config.prefix_prefilter
+    )
+    reps_text = ckpt("reps_text", reps_join, eager=True) if reps_reused else reps_join
+
+    # optional beg_hash cascade stage (reference pass-1 semantics): the
+    # kernel only sees reps that collide on prefix_sha. NOT applied to the
+    # substring pass — substring dups needn't share prefixes.
+    kernel_input = reps_text
+    if config.prefix_prefilter:
+        rep_meta = rep_src.join(
+            maybe_merge_hint(rep_ids, config.forced_smj), "conv_id", "left_semi"
+        )
+        colliding = (
+            rep_meta.groupBy("prefix_sha")
+            .agg(F.count(F.lit(1)).alias("_pn"))
+            .filter(F.col("_pn") > 1)
+            .select("prefix_sha")
+        )
+        kernel_ids = rep_meta.join(colliding, "prefix_sha", "left_semi").select("conv_id")
+        kernel_input = reps_text.join(
+            maybe_merge_hint(kernel_ids, config.forced_smj), "conv_id", "left_semi"
+        )
+
+    # kernel-parallelism floor (measured gate, see skew.measured_small_corpus):
+    # on a small corpus the checkpointed kernel input sits in 1-4 byte-sized
+    # partitions — spread it to one task per slot before the CPU-bound
+    # kernel; the repartition shuffles only the tiny table the gate just
+    # measured. Never applied above the gate (no new exchange at scale,
+    # where AQE already yields >= a partition per slot).
+    if config.kernel_small_corpus:
+        kernel_input = spread_over_slots(kernel_input)
+
+    def near_branch() -> tuple[DataFrame, DataFrame]:
+        # signatures feed three consumers (sig_simhash projection, LSH
+        # bands, rescue attach) — small corpora cut eagerly so the first
+        # two cannot race and run the kernel twice (see kernel_eager above)
+        signatures = ckpt(
+            "signatures", compute_signatures(kernel_input, config), eager=kernel_eager
+        )
+        if store is not None:
+            # no-silent-caps telemetry (VERDICT r4 #8): the LSH bucket
+            # histogram + star-fallback count of every checkpointed run,
+            # one aggregation over the persisted signature blocks
+            from deduplicate_spark.operators.lsh import bucket_stats
+
+            bs = bucket_stats(signatures, config).first()
+            store.metrics.append({
+                "stage": "lsh_bucket_stats",
+                "config_hash": store.config_hash,
+                "input_key": store.input_key,
+                "rows": bs.n_buckets,
+                "reused": False,
+                "extra": {
+                    k: bs[k] for k in ("max_bucket", "n_star_fallback", "est_edges")
+                },
+            })
+        # narrow (conv_id, simhash) projection checkpoint: the Hamming
+        # attaches otherwise re-read and SMJ-sort the full ~1 KB minhash
+        # rows per side (same no-column-pruning-in-checkpoint-blocks
+        # disease as docs_meta)
+        sig_sim = ckpt("sig_simhash", signatures.select("conv_id", "simhash"))
+        cand = candidate_pairs(signatures, config)
+        confirmed = ckpt(
+            "pairs",
+            confirm_pairs(
+                cand, signatures, config=config, sim_signatures=sig_sim
+            ).select("a", "b", "evidence"),
+            eager=True,
+        )
+        return signatures, confirmed
+
+    branches = {"near": near_branch}
+    if config.enable_substring_pass:
+        branches["substring"] = lambda: cut_lineage(
+            substring_pairs(reps_text, config), eager=True
+        )
+    return branches
+
+
 def run_pipeline(
     spark: SparkSession,
     turns: DataFrame,
@@ -223,7 +335,9 @@ def run_pipeline(
     After the corpus stats resolve the gates, the exact, near-dup and
     (optional) substring edge tables are built on concurrent driver
     threads, each ending in a materialized table that CC then unions;
-    every table two branches read is materialized before the fork.
+    every table two branches read is materialized before the fork. Strict
+    mode (``complete_hash``) builds the exact edge table only, and its
+    result carries ``signatures=None``.
 
     ``analyze_only`` mirrors the reference --analyze (deduplicate.py:459-461):
     stop after clusters — the actions/report DataFrames are still returned
@@ -296,76 +410,12 @@ def run_pipeline(
         )
 
     kmeta = kid(meta)
-    ktext = kid(docs.select("conv_id", "doc_text"))
 
     # zero_hash analog (dupe_analysis.py:31,335-340): content-empty docs
     # share EMPTY_SHA1 and cluster together when empty_cluster=True
     # (reference behavior); False leaves them untouched by every stage.
     non_empty = F.col("exact_sha") != EMPTY_SHA1
     exact_src = kmeta if config.empty_cluster else kmeta.filter(non_empty)
-
-    # exact-distinct representatives: argmin over narrow meta; only the
-    # winning ids semi-join the text table (one text pass into the kernel)
-    rep_src = kmeta.filter(non_empty)
-    rep_ids = salted_struct_min(
-        rep_src.select("exact_sha", F.col("conv_id").alias("_ord")),
-        "exact_sha",
-        salt_buckets=config.band_salt_buckets,
-    ).select(F.col("_ord").alias("conv_id"))
-    # Eagerness of the signature checkpoint follows the measured
-    # small-corpus gate: on SMALL corpora a lazy cut lets racing AQE
-    # consumers re-run the kernel before the blocks land (measured at
-    # sf0.1: two concurrent 1-task kernel-sized stages), and the eager
-    # barrier costs one trivial job. On BIG corpora the eager cut added
-    # extra materialization passes of GB-sized tables (measured at 6.5M
-    # turns: walls regressed with unconditional eager).
-    kernel_eager = bool(config.kernel_small_corpus)
-    reps_join = ktext.join(
-        maybe_merge_hint(rep_ids, config.forced_smj), "conv_id", "left_semi"
-    )
-    # the reps_text checkpoint exists for REUSE (substring pass, prefix
-    # prefilter, store resumability). With none of those on, the signature
-    # kernel is its only consumer and the checkpoint is a pure extra
-    # materialization of a text-sized table — feed the semi-join straight
-    # into the kernel so the text attach and the kernel fuse into one pass.
-    # When it is cut, the cut is eager at every scale. With the substring
-    # pass on, the substring and near-dup branches both read it, and a
-    # table two branches read is materialized before they fork, or both
-    # recompute the text semi-join. Otherwise eagerness costs no extra
-    # pass: a lazy cut would run the semi-join's shuffle stages here
-    # anyway (AQE) and defer only the stage that writes the same blocks.
-    reps_reused = (
-        store is not None or config.enable_substring_pass or config.prefix_prefilter
-    )
-    reps_text = ckpt("reps_text", reps_join, eager=True) if reps_reused else reps_join
-
-    # optional beg_hash cascade stage (reference pass-1 semantics): the
-    # kernel only sees reps that collide on prefix_sha. NOT applied to the
-    # substring pass — substring dups needn't share prefixes.
-    kernel_input = reps_text
-    if config.prefix_prefilter:
-        rep_meta = rep_src.join(
-            maybe_merge_hint(rep_ids, config.forced_smj), "conv_id", "left_semi"
-        )
-        colliding = (
-            rep_meta.groupBy("prefix_sha")
-            .agg(F.count(F.lit(1)).alias("_pn"))
-            .filter(F.col("_pn") > 1)
-            .select("prefix_sha")
-        )
-        kernel_ids = rep_meta.join(colliding, "prefix_sha", "left_semi").select("conv_id")
-        kernel_input = reps_text.join(
-            maybe_merge_hint(kernel_ids, config.forced_smj), "conv_id", "left_semi"
-        )
-
-    # kernel-parallelism floor (measured gate, see skew.measured_small_corpus):
-    # on a small corpus the checkpointed kernel input sits in 1-4 byte-sized
-    # partitions — spread it to one task per slot before the CPU-bound
-    # kernel; the repartition shuffles only the tiny table the gate just
-    # measured. Never applied above the gate (no new exchange at scale,
-    # where AQE already yields >= a partition per slot).
-    if config.kernel_small_corpus:
-        kernel_input = spread_over_slots(kernel_input)
 
     def exact_branch() -> DataFrame:
         edges = exact_star_edges(
@@ -375,68 +425,23 @@ def run_pipeline(
         )
         return cut_lineage(edges.select("a", "b", "evidence"), eager=True)
 
-    def near_branch() -> tuple[DataFrame, DataFrame, DataFrame]:
-        # signatures feed three consumers (sig_simhash projection, LSH
-        # bands, rescue attach) — small corpora cut eagerly so the first
-        # two cannot race and run the kernel twice (see kernel_eager above)
-        signatures = ckpt(
-            "signatures", compute_signatures(kernel_input, config), eager=kernel_eager
-        )
-        if store is not None:
-            # no-silent-caps telemetry (VERDICT r4 #8): record the LSH
-            # bucket histogram + star-fallback count in the run's metrics
-            # table on every checkpointed run (previously computed only
-            # when a caller asked). One aggregation over the
-            # already-persisted signature blocks; skipped for store-less
-            # runs.
-            from deduplicate_spark.operators.lsh import bucket_stats
-
-            bs = bucket_stats(signatures, config).first()
-            store.metrics.append(
-                {
-                    "stage": "lsh_bucket_stats",
-                    "config_hash": store.config_hash,
-                    "input_key": store.input_key,
-                    "rows": bs.n_buckets,
-                    "reused": False,
-                    "extra": {
-                        "max_bucket": bs.max_bucket,
-                        "n_star_fallback": bs.n_star_fallback,
-                        "est_edges": bs.est_edges,
-                    },
-                }
-            )
-        # narrow (conv_id, simhash) projection checkpoint: the Hamming
-        # attaches otherwise re-read and SMJ-sort the full ~1 KB minhash
-        # rows per side (same no-column-pruning-in-checkpoint-blocks
-        # disease as docs_meta)
-        sig_sim = ckpt("sig_simhash", signatures.select("conv_id", "simhash"))
-        cand = candidate_pairs(signatures, config)
-        confirmed = ckpt(
-            "pairs",
-            confirm_pairs(
-                cand, signatures, docs=kmeta, config=config, sim_signatures=sig_sim
-            ).select("a", "b", "evidence"),
-            eager=True,
-        )
-        return signatures, cand, confirmed
-
-    # One branch per edge source. No knob and no serial path: each branch
-    # ends in an eager cut, so the union below reads three materialized
-    # tables, and the only shared inputs (meta, reps_text) are already
-    # materialized. The substring branch runs its verify kernel inside its
-    # own cut; an output with no store stage gets a local cut in store mode
-    # too.
-    branches = {"exact": exact_branch, "near": near_branch}
-    if config.enable_substring_pass:
-        branches["substring"] = lambda: cut_lineage(
-            substring_pairs(reps_text, config), eager=True
-        )
+    # One branch per edge source, each ending in an eager cut; the shared
+    # inputs (meta, reps_text) are materialized before the fork. An output
+    # with no store stage gets a local cut in store mode too. Strict mode
+    # (complete_hash, dupe_analysis.py:622-633) clusters exact-content-equal
+    # docs only: near-dup candidates are exact-distinct representatives and
+    # could confirm nothing, so no rep, kernel or band stage is built (and
+    # the config refuses the substring pass with it).
+    branches = {"exact": exact_branch}
+    if not config.complete_hash:
+        ktext = kid(docs.select("conv_id", "doc_text"))
+        branches.update(_similarity_branches(kmeta, ktext, config, ckpt, store))
     built = run_branches(spark, **branches)
-    exact_edges = built["exact"]
-    signatures, cand, confirmed = built["near"]
-
-    edges = exact_edges.unionByName(confirmed)
+    edges = built["exact"]
+    signatures = None
+    if "near" in built:
+        signatures, confirmed = built["near"]
+        edges = edges.unionByName(confirmed)
     if "substring" in built:
         edges = edges.unionByName(built["substring"])
     # no (a, b) dedup exchange here: every source emits a < b pairs, CC's
@@ -465,10 +470,7 @@ def run_pipeline(
 
     return PipelineResult(
         docs=docs,
-        exact_edges=exact_edges,
         signatures=signatures,
-        candidate_edges=cand,
-        confirmed_edges=confirmed,
         clusters=clusters,
         actions=acts,
         report=cluster_report(acts),

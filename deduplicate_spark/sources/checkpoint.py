@@ -8,12 +8,11 @@ fingerprint); a rerun with the same key skips the stage and reads the table
 back (S6), and per-stage lineage + metrics rows make the run auditable and
 resumable mid-pipeline (the north-rule requirement).
 
-Storage: Iceberg when the runtime jar is on the classpath (``format_hint=
-'iceberg'``), else a parquet directory layout with the same table structure
-plus a ``_lineage.json`` manifest — identical semantics, no jar dependency
-(this sandbox has no Iceberg jar; see SURVEY.md §7).
+Storage: a parquet directory per stage plus a ``_lineage.json`` manifest.
+An Iceberg layout waits for the Iceberg runtime jar, which is not on the
+classpath (see SURVEY.md §7).
 
-Layout (parquet fallback):
+Layout:
     <root>/<stage>/data/              parquet table
     <root>/<stage>/_lineage.json      {stage, config_hash, input_key, rows,
                                        wall_sec, partitions, written_at}
@@ -36,8 +35,6 @@ class CheckpointStore:
     root: str
     config_hash: str
     input_key: str = "default"
-    format_hint: str = "parquet"  # 'iceberg' when the runtime jar is present
-    enabled: bool = True
     metrics: list[dict] = field(default_factory=list)
 
     def _stage_dir(self, name: str) -> str:
@@ -71,8 +68,6 @@ class CheckpointStore:
     def stage(self, name: str, df: DataFrame) -> DataFrame:
         """Materialize a stage (or reuse it) and return a DataFrame reading
         from storage — downstream lineage is cut at the checkpoint."""
-        if not self.enabled:
-            return df
         if self.is_complete(name):
             self.metrics.append({"stage": name, "reused": True})
             return self.read(name)
@@ -91,7 +86,7 @@ class CheckpointStore:
             "wall_sec": round(wall, 3),
             "partitions": out.rdd.getNumPartitions(),
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "format": self.format_hint,
+            "format": "parquet",
         }
         os.makedirs(self._stage_dir(name), exist_ok=True)
         with open(self._lineage_path(name), "w") as fh:

@@ -42,9 +42,11 @@ the BATCH, not the accumulated history:
     otherwise). A hot boilerplate bucket therefore costs O(new members) per
     batch. Edges between an old and a new member are written (old, new);
     new x new edges are written (smaller, larger) conv_id.
-  * confirmation (SimHash / min-Jaccard / complete_hash) identical to the
-    batch path; historical signatures are fetched per-endpoint via a
-    broadcast semi-join, never scanned wholesale.
+  * confirmation (SimHash plus the bounded min-Jaccard rescue) identical to
+    the batch path; historical signatures are fetched per-endpoint via a
+    broadcast semi-join, never scanned wholesale. Strict mode
+    (``complete_hash``) adds no near edges, as the batch path builds none;
+    its signatures and band buckets are still written to the state.
 
 Equivalence contract vs a clean batch run: CONNECTIVITY-EQUIVALENT AT THE
 CANDIDATE LEVEL, not structurally identical. Streaming stars large-bucket
@@ -225,6 +227,9 @@ def _collect_mods(df: DataFrame, key: str, n: int) -> list[int]:
     ]
 
 
+_EDGE_SCHEMA = "a string, b string, evidence string"
+
+
 def band_pairs(members: DataFrame, config: DedupConfig) -> DataFrame:
     """members(conv_id, band_hash, new) -> candidate edges (a, b, evidence),
     pairing each touched band bucket through the batch operator
@@ -324,7 +329,7 @@ def process_batch(
     # ---- exact fast path ------------------------------------------------
     exact_new = new_docs if config.empty_cluster else new_docs.filter(non_empty)
     if first_batch:
-        instant_edges = spark.createDataFrame([], "a string, b string, evidence string")
+        instant_edges = spark.createDataFrame([], _EDGE_SCHEMA)
         genuinely_new = new_docs
     else:
         # compact (exact_sha, old_rep) side table — the "existing analysis"
@@ -363,48 +368,49 @@ def process_batch(
     new_sigs = cut_lineage(compute_signatures(reps, config))
     new_buckets = cut_lineage(band_buckets(new_sigs, config).select("conv_id", "band_hash"))
 
-    members = new_buckets.withColumn("new", F.lit(True))
-    if not first_batch:
-        # probe ONLY the buckets this batch touches: partition pruning on
-        # the batch's band-hash mods at planning time, then a broadcast
-        # semi-filter on its distinct band hashes — bytes READ track the
-        # batch, not history. History is never re-banded (the state IS
-        # the banding).
-        new_keys = new_buckets.select("band_hash").distinct()
-        bmods = _collect_mods(new_keys, "band_hash", state.state_partitions)
-        touched_old = prior_state(state.buckets_path, bmods, new_buckets).join(
-            F.broadcast(new_keys), "band_hash"
-        )
-        members = members.unionByName(touched_old.withColumn("new", F.lit(False)))
-    cand = cut_lineage(band_pairs(members, config))
-
-    # confirmation needs signatures (and docs for complete_hash) for the
-    # candidates' endpoints only — fetched via broadcast semi-join, never a
-    # full history scan
-    endpoints = cand.select(F.col("a").alias("conv_id")).unionByName(
-        cand.select(F.col("b").alias("conv_id"))
-    ).distinct()
-    if first_batch:
-        sig_source = new_sigs
-        docs_source = new_docs
+    if config.complete_hash:
+        # strict mode clusters exact groups only, and every candidate would
+        # pair sha-distinct docs: no near edge. The signatures and buckets
+        # are still written, so the state rows match under either mode.
+        confirmed = spark.createDataFrame([], _EDGE_SCHEMA)
     else:
-        # endpoint fetches are partition-pruned the same way (signatures
-        # carry a ~1 KB minhash array per row — scanning all of history
-        # for a per-batch endpoint set is exactly the O(history) I/O this
-        # layout removes)
-        emods = _collect_mods(endpoints, "conv_id", state.state_partitions)
-        old_needed = prior_state(state.signatures_path, emods, new_sigs).join(
-            F.broadcast(endpoints), "conv_id", "left_semi"
-        )
-        sig_source = new_sigs.unionByName(old_needed)
-        docs_source = new_docs.unionByName(
-            prior_state(state.docs_path, emods, new_docs).join(
+        members = new_buckets.withColumn("new", F.lit(True))
+        if not first_batch:
+            # probe ONLY the buckets this batch touches: partition pruning on
+            # the batch's band-hash mods at planning time, then a broadcast
+            # semi-filter on its distinct band hashes — bytes READ track the
+            # batch, not history. History is never re-banded (the state IS
+            # the banding).
+            new_keys = new_buckets.select("band_hash").distinct()
+            bmods = _collect_mods(new_keys, "band_hash", state.state_partitions)
+            touched_old = prior_state(state.buckets_path, bmods, new_buckets).join(
+                F.broadcast(new_keys), "band_hash"
+            )
+            members = members.unionByName(
+                touched_old.withColumn("new", F.lit(False))
+            )
+        cand = cut_lineage(band_pairs(members, config))
+
+        # confirmation needs signatures for the candidates' endpoints only —
+        # fetched via broadcast semi-join, never a full history scan
+        endpoints = cand.select(F.col("a").alias("conv_id")).unionByName(
+            cand.select(F.col("b").alias("conv_id"))
+        ).distinct()
+        if first_batch:
+            sig_source = new_sigs
+        else:
+            # endpoint fetches are partition-pruned the same way (signatures
+            # carry a ~1 KB minhash array per row — scanning all of history
+            # for a per-batch endpoint set is exactly the O(history) I/O this
+            # layout removes)
+            emods = _collect_mods(endpoints, "conv_id", state.state_partitions)
+            old_needed = prior_state(state.signatures_path, emods, new_sigs).join(
                 F.broadcast(endpoints), "conv_id", "left_semi"
             )
+            sig_source = new_sigs.unionByName(old_needed)
+        confirmed = confirm_pairs(cand, sig_source, config=config).select(
+            "a", "b", "evidence"
         )
-    confirmed = confirm_pairs(cand, sig_source, docs=docs_source, config=config).select(
-        "a", "b", "evidence"
-    )
 
     # eager barrier on the full edge set, strictly BEFORE any state append
     # below — preserving read-before-write ordering. Each edge carries its
@@ -441,26 +447,24 @@ def process_batch(
         reset=first_batch,
     )
 
-    state._known_tables.update(
-        {
-            state.docs_path,
-            state.signatures_path,
-            state.buckets_path,
-            state.pairs_path,
-            state.reps_path,
-        }
-    )
-
     by_source = {
         r["source"]: r["count"] for r in all_edges.groupBy("source").count().collect()
     }
-    return {
+    metrics = {
         "batch_docs": new_docs.count(),
         "instant_exact_dupes": by_source.get("instant", 0),
         "new_signatures": new_sigs.count(),
         "new_pairs": by_source.get("near", 0),
         "new_edges_total": sum(by_source.values()),
     }
+    # memoize only tables this batch wrote rows to (reps has rows whenever
+    # signatures do): a zero-row write leaves a dir with no data files,
+    # which reads as no table
+    known = [state.docs_path] if metrics["batch_docs"] else []
+    if metrics["new_signatures"]:
+        known += [state.reps_path, state.signatures_path, state.buckets_path]
+    state._known_tables.update(known)
+    return metrics
 
 
 # what Spark raises for a state dir that is missing, or that exists with
@@ -637,6 +641,8 @@ def current_clusters(spark: SparkSession, state: IncrementalState, config: Dedup
     from deduplicate_spark.operators.components import connected_components
 
     config = config or DedupConfig()
+    if not _table_exists(spark, state.pairs_path):  # no edge written yet
+        return spark.createDataFrame([], "conv_id string, cluster_id string")
     edges = spark.read.parquet(state.pairs_path)
     if "wseq" in edges.columns:
         edges = edges.drop("wseq")

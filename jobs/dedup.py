@@ -13,7 +13,8 @@ Reads the transcripts table (parquet path or, when an Iceberg catalog is
 configured on the cluster, a table identifier), runs the full cascade, and
 writes clusters/, actions/, report/ under --output. With --checkpoint-root
 every stage is materialized + resumable; rerunning with --resume skips
-completed stages (lineage keyed by config hash + input fingerprint).
+completed stages (lineage keyed by config hash + input fingerprint: the
+input files with their sizes and modification times).
 
 The CLI surface mirrors the reference driver
 (/root/reference/deduplicate.py:731-746: --delete/--analyze/--synology) in
@@ -104,6 +105,21 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
+def input_key(spark, turns) -> str:
+    """Checkpoint-store key of the input DATA, not its path: every input
+    file with its size and modification time, read through the Hadoop
+    FileSystem. New data written to the same path (new files, or a file
+    rewritten in place) changes the key, so ``--resume`` never reuses the
+    stages of an earlier corpus."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    h = hashlib.sha1()
+    for name in sorted(turns.inputFiles()):
+        path = jvm.org.apache.hadoop.fs.Path(name)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        h.update(f"{name}\0{st.getLen()}\0{st.getModificationTime()}\n".encode())
+    return h.hexdigest()[:16]
+
+
 def run_stream(spark, args, config) -> None:
     """Streaming mode: the CLI face of streaming/incremental.py. The query
     checkpoint lives under the state root — restarting the job against
@@ -139,19 +155,9 @@ def run_stream(spark, args, config) -> None:
             q.awaitTermination()
     finally:
         q.stop()
-    from deduplicate_spark.streaming.incremental import _table_exists
-
-    metrics = {}
-    if args.stream_buffer_lag is not None and _table_exists(spark, state.pending_path):
-        metrics = flush_buffered(spark, state, config)
-    if not _table_exists(spark, state.pairs_path):
-        # the stream stopped before any micro-batch finished — no state
-        # yet; emit an empty cluster table rather than failing the job
-        spark.createDataFrame([], "conv_id string, cluster_id string").write.mode(
-            "overwrite"
-        ).parquet(f"{args.output}/clusters")
-        print(json.dumps({"mode": "stream", "clusters": 0, "note": "no batches completed"}))
-        return
+    # both are no-ops on a stream stopped before any micro-batch finished:
+    # no pending log to flush, and an empty cluster table
+    metrics = {} if args.stream_buffer_lag is None else flush_buffered(spark, state, config)
     clusters = current_clusters(spark, state, config)
     clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
     print(json.dumps({
@@ -222,13 +228,11 @@ def main(argv: list[str] | None = None) -> None:
     checkpoint_root = args.manual_store or args.checkpoint_root
     resume = args.resume or args.manual_store is not None
     if checkpoint_root:
-        input_key = hashlib.sha1(args.input.encode()).hexdigest()[:16]
         store = CheckpointStore(
             spark=spark,
             root=checkpoint_root,
             config_hash=config.config_hash(),
-            input_key=input_key,
-            enabled=True,
+            input_key=input_key(spark, turns),
         )
         if not resume:
             store.invalidate_all()

@@ -3,6 +3,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import shutil
 from pathlib import Path
 
 import pytest
@@ -120,11 +121,14 @@ def test_resume_equals_clean_run_substring_pass(spark, turns_df, tmp_path):
 
 
 def test_job_without_resume_recomputes_every_stage(spark, tmp_path, monkeypatch):
-    """The job keys its store by the input PATH, so new data at the same
-    path matches the last run's lineage. Without --resume it must forget
-    every stage the pipeline checkpoints and equal a clean run on the new
-    data (a hand-kept list of stage names once left docs_meta, reps_text
-    and sig_simhash to be reused from the previous corpus)."""
+    """New data written to the same input path must never be answered from
+    the last corpus's stages. Without --resume the job forgets every stage
+    the pipeline checkpoints (a hand-kept list of stage names once left
+    docs_meta, reps_text and sig_simhash to be reused from the previous
+    corpus). With --resume the store key, built from the input files'
+    names, sizes and modification times, no longer matches (a key of the
+    path alone once returned corpus A's clusters for corpus B). A --resume
+    rerun on unchanged data reuses every stage."""
     path = Path(__file__).resolve().parents[1] / "jobs" / "dedup.py"
     spec = importlib.util.spec_from_file_location("dedup_job", path)
     job = importlib.util.module_from_spec(spec)
@@ -132,18 +136,38 @@ def test_job_without_resume_recomputes_every_stage(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)  # shared session
     turns_path, root = str(tmp_path / "turns"), str(tmp_path / "ckpt")
 
-    def run_job(seed: int, out: str) -> set:
+    def write_corpus(seed: int) -> None:
         corpus = generate_transcripts(n_base=150, seed=seed)[0]
         spark.createDataFrame(corpus, TRANSCRIPTS_SCHEMA).write.mode("overwrite").parquet(
             turns_path
         )
-        job.main(["--input", turns_path, "--output", out, "--checkpoint-root", root])
+
+    def run_job(out: str, *flags: str) -> set:
+        job.main(["--input", turns_path, "--output", out, "--checkpoint-root", root, *flags])
         return {tuple(r) for r in spark.read.parquet(f"{out}/clusters").collect()}
 
-    run_job(1, str(tmp_path / "out_a"))
-    got = run_job(2, str(tmp_path / "out_b"))
+    write_corpus(1)
+    run_job(str(tmp_path / "out_a"))
+    write_corpus(2)
+    got = run_job(str(tmp_path / "out_b"))
     clean = run_pipeline(spark, spark.read.parquet(turns_path), DedupConfig())
-    assert got == {tuple(r) for r in clean.clusters.collect()}
+    clean_b = {tuple(r) for r in clean.clusters.collect()}
+    assert got == clean_b
+
+    # the store holds corpus A again; --resume after corpus B is written
+    write_corpus(1)
+    run_job(str(tmp_path / "out_a2"))
+    write_corpus(2)
+    assert run_job(str(tmp_path / "out_b2"), "--resume") == clean_b
+
+    # the same files again: --resume reuses every stage
+    shutil.rmtree(f"{root}/_metrics.parquet")
+    assert run_job(str(tmp_path / "out_b3"), "--resume") == clean_b
+    stages = {d for d in os.listdir(root) if os.path.exists(f"{root}/{d}/_lineage.json")}
+    rows = spark.read.parquet(f"{root}/_metrics.parquet").collect()
+    reused = {r.stage: r.reused for r in rows if r.stage in stages}
+    assert {"docs", "signatures", "clusters", "actions"} <= stages
+    assert set(reused) == stages and all(reused.values())
 
 
 def test_store_run_records_bucket_stats(spark, turns_df, tmp_path):

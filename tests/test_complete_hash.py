@@ -67,3 +67,61 @@ def test_oracle_complete_hash_unions_exact_groups_only():
     docs = assemble_docs_pandas(turns)
     assert ("orig", "rot") in oracle_dup_pairs(docs, DedupConfig())
     assert ("orig", "rot") not in oracle_dup_pairs(docs, DedupConfig(complete_hash=True))
+
+
+def test_strict_store_run_writes_exact_stages_only(spark, turns_df, tmp_path):
+    """Strict mode is the exact stage: a store run checkpoints no
+    representative, signature or pair stage, and returns no signatures."""
+    import os
+
+    from deduplicate_spark.sources.checkpoint import CheckpointStore
+
+    cfg = DedupConfig(exclude_roles=("system",), complete_hash=True)
+    root = str(tmp_path / "strict")
+    store = CheckpointStore(spark, root, cfg.config_hash(), "corpus")
+    res = run_pipeline(spark, turns_df, cfg, store=store)
+    assert res.signatures is None
+    assert set(os.listdir(root)) == {"docs", "docs_meta", "clusters", "actions"}
+    assert res.clusters.count() > 0
+
+
+def test_confirm_pairs_refuses_strict_mode(spark):
+    """A direct caller must not get pairs under complete_hash, docs or not."""
+    from deduplicate_spark.operators.simhash import confirm_pairs
+
+    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
+    sigs = spark.createDataFrame([(1, 0), (2, 0)], "conv_id long, simhash long")
+    docs = spark.createDataFrame([(1, "s"), (2, "s")], "conv_id long, exact_sha string")
+    with pytest.raises(ValueError, match="complete_hash"):
+        confirm_pairs(pairs, sigs, docs=docs, config=DedupConfig(complete_hash=True))
+
+
+def test_streaming_strict_equals_batch_strict(spark, corpus, tmp_path):
+    """Streaming strict mode adds exact edges only, and its clusters equal
+    a clean batch strict run on the same corpus."""
+    import zlib
+
+    from deduplicate_spark.schema import TRANSCRIPTS_SCHEMA
+    from deduplicate_spark.streaming.incremental import (
+        IncrementalState,
+        current_clusters,
+        process_batch,
+    )
+
+    turns_pd, _ = corpus
+    cfg = DedupConfig(exclude_roles=("system",), complete_hash=True)
+    state = IncrementalState(
+        docs_path=str(tmp_path / "docs"),
+        signatures_path=str(tmp_path / "sigs"),
+        pairs_path=str(tmp_path / "pairs"),
+        state_partitions=4,
+    )
+    batch_of = turns_pd["conv_id"].map(lambda c: zlib.crc32(c.encode()) % 3)
+    for i in range(3):
+        batch = spark.createDataFrame(turns_pd[batch_of == i], TRANSCRIPTS_SCHEMA)
+        m = process_batch(spark, batch, state, cfg, first_batch=(i == 0))
+        assert m["new_pairs"] == 0
+    streamed = {tuple(r) for r in current_clusters(spark, state, cfg).collect()}
+    batch_run = run_pipeline(spark, spark.createDataFrame(turns_pd, TRANSCRIPTS_SCHEMA), cfg)
+    assert streamed == {tuple(r) for r in batch_run.clusters.collect()}
+    assert streamed
