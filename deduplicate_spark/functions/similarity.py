@@ -13,18 +13,22 @@ Paths:
     in the kernel closure, each corpus batch is scored against all of it
     and only its per-batch top-k reaches the final window. O(N*Q).
   * LSH-bucketed ANN (random hyperplane / SRP) — a scale path: docs and
-    queries hash to sign-pattern buckets; candidates = bucket collisions
-    across any of ``n_tables`` hash tables; exact cosine re-rank of the
-    candidate pairs only (:func:`_pair_cosine`). Tunable recall via
-    (n_tables, n_bits).
+    queries hash to sign-pattern buckets (:func:`_srp_hasher`);
+    candidates = bucket collisions across any of ``n_tables`` hash
+    tables; exact cosine re-rank of the candidate pairs only
+    (:func:`_pair_cosine`). Tunable recall via (n_tables, n_bits).
   * IVF-partitioned ANN — the other scale path: a tiny coarse-centroid
     table partitions the corpus into inverted-file cells; each query probes
     its ``nprobe`` nearest cells and re-ranks exactly only inside them, all
     in one narrow pass over the corpus. Deterministic smallest-id
     quantizer for oracle-able tests; seeded k-means++ over a bounded
     sample for production.
-  * embedding near-duplicate pairs — SRP buckets grouped once, pairs
-    scored by the same pair kernel and filtered on a cosine threshold.
+  * embedding near-duplicate pairs — one exchange and one kernel: SRP
+    rows carrying each vector and its bucket array are repartitioned on
+    (table_id, bucket) and sorted, and one kernel scores each bucket run
+    where it lands. A pair is kept only in the first table where the two
+    bucket arrays agree, so there is no candidate dedup and no vector
+    join; pairs under the cosine threshold are dropped in the kernel.
 
 Malformed vectors follow one rule everywhere: a null vector is dropped
 before hashing or scoring (no bucket, no pair, no neighbour); a vector
@@ -125,15 +129,24 @@ def _foldorder_cosine_matrix(
         return dot / (qnorm[None, :] * vnorm[:, None])
 
 
-def _pair_cosine(
-    pairs: DataFrame, a: str, b: str, dim: int, threshold: float | None = None
-) -> DataFrame:
+def _foldorder_pair_cosine(
+    ma: np.ndarray, mb: np.ndarray, na: np.ndarray, nb: np.ndarray
+) -> np.ndarray:
+    """Cosine of row r of ``ma`` with row r of ``mb``, given their norms
+    ``na`` / ``nb`` (:func:`_foldorder_sq_norms`): the dot product folds
+    over index 0..d-1 left to right, so each value is bit-identical to
+    Spark's fold-expression cosine. A zero vector gives NaN."""
+    dot = np.zeros(ma.shape[0])
+    for i in range(ma.shape[1]):
+        dot += ma[:, i] * mb[:, i]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (na * nb)
+
+
+def _pair_cosine(pairs: DataFrame, a: str, b: str, dim: int) -> DataFrame:
     """(a, b, cosine) for each row of ``pairs`` (a, b, _va, _vb), scored in
     one mapInArrow kernel: both vector columns are read as (n, dim)
-    matrices and dot, |a| and |b| fold over index 0..d-1, so each cosine
-    is bit-identical to Spark's fold-expression cosine. With a
-    ``threshold`` only rows with ``cosine >= threshold`` are emitted; a
-    NaN cosine (zero vector) never passes it."""
+    matrices and scored by :func:`_foldorder_pair_cosine`."""
 
     def kernel(batches):
         for batch in batches:
@@ -142,14 +155,9 @@ def _pair_cosine(
                 batch = batch.filter(pc.and_(pc.is_valid(va), pc.is_valid(vb)))
             batch, ma = _vector_matrix(batch, a, "_va", dim)
             batch, mb = _vector_matrix(batch, b, "_vb", dim)
-            dot = np.zeros(batch.num_rows)
-            for i in range(dim):
-                dot += ma[:, i] * mb[:, i]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / (_foldorder_sq_norms(ma) * _foldorder_sq_norms(mb))
-            if threshold is not None:
-                keep = cos >= threshold
-                batch, cos = batch.filter(keep), cos[keep]
+            cos = _foldorder_pair_cosine(
+                ma, mb, _foldorder_sq_norms(ma), _foldorder_sq_norms(mb)
+            )
             yield pa.RecordBatch.from_arrays(
                 [batch[a], batch[b], pa.array(cos)], names=[a, b, "cosine"]
             )
@@ -301,6 +309,23 @@ def brute_force_topk(
     return _corpus_topk(vectors, id_col, vec_col, (qids, q_type, qmat), k, score)
 
 
+def _srp_hasher(dim: int, n_tables: int, n_bits: int, seed: int):
+    """``buckets(mat)``: the (n, n_tables) int64 SRP bucket keys of an
+    (n, dim) matrix — bit b of table t's key is the sign of the row's
+    projection on hyperplane t * n_bits + b. The hyperplanes are derived
+    from the seed, so every task that calls this hashes alike (no
+    broadcast needed)."""
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((n_tables * n_bits, dim)).astype(np.float64)
+    weights = 1 << np.arange(n_bits, dtype=np.int64)
+
+    def buckets(mat: np.ndarray) -> np.ndarray:
+        signs = (mat @ planes.T) > 0  # (n, n_tables * n_bits)
+        return (signs.reshape(mat.shape[0], n_tables, n_bits) * weights).sum(axis=2)
+
+    return buckets
+
+
 def srp_signatures(
     df: DataFrame,
     dim: int,
@@ -311,23 +336,18 @@ def srp_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """Signed-random-projection bucket keys: one row per (id, table,
-    bucket). Hyperplanes are derived deterministically from the seed inside
-    each task (no broadcast needed). Null vectors get no bucket; a vector
-    whose length is not ``dim`` raises a ValueError naming its id."""
+    bucket), hashed by :func:`_srp_hasher`. Null vectors get no bucket; a
+    vector whose length is not ``dim`` raises a ValueError naming its id."""
 
     def srp_kernel(batches):
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((n_tables * n_bits, dim)).astype(np.float64)
-        weights = (1 << np.arange(n_bits, dtype=np.int64))
+        buckets_of = _srp_hasher(dim, n_tables, n_bits, seed)
         for batch in batches:
             batch, mat = _vector_matrix(batch, id_col, vec_col, dim)
             n = batch.num_rows
-            signs = (mat @ planes.T) > 0  # (batch, n_tables*n_bits)
-            buckets = (signs.reshape(n, n_tables, n_bits) * weights).sum(axis=2)
             yield pa.RecordBatch.from_pydict({
                 "vid": np.repeat(np.asarray(batch[id_col]), n_tables),
                 "table_id": np.tile(np.arange(n_tables, dtype=np.int32), n),
-                "bucket": buckets.ravel(),
+                "bucket": buckets_of(mat).ravel(),
             })
 
     return df.select(F.col(id_col).cast("long").alias(id_col), vec_col).mapInArrow(
@@ -353,7 +373,7 @@ def ann_topk(
     falls with n_bits (finer buckets, fewer candidates). The bucket join
     shuffles on (table_id, bucket) — the A1-style collision prefilter of
     the dedup cascade, reused for vectors. Candidates are scored by the
-    pair kernel (:func:`_pair_cosine`, no threshold) and ranked by the
+    pair kernel (:func:`_pair_cosine`) and ranked by the
     window."""
     v_sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
     q_sig = srp_signatures(queries, dim, n_tables, n_bits, query_id_col, vec_col, seed)
@@ -540,6 +560,26 @@ def ivf_topk(
     return _corpus_topk(vectors, id_col, vec_col, (qids, q_type, qmat), k, score)
 
 
+# member pairs of bucket runs are scored at most this many at a time, so
+# the kernel's pair arrays stay bounded for any bucket size (~20 MB of
+# index, bucket-array and vector copies at d=64, n_tables=8)
+_PAIR_BLOCK = 1 << 14
+
+
+def _run_pair_blocks(run_end: np.ndarray, block: int):
+    """(i, j) index arrays of every pair i < j of rows in the same bucket
+    run, at most ``block`` pairs per yield. ``run_end[i]`` is the index one past
+    the last row of row i's run, so row i pairs with i+1 .. run_end[i]-1.
+    Pairs are numbered row by row and each block is decoded from its
+    numbers, so no array ever covers a whole run's pairs."""
+    later = run_end - np.arange(run_end.shape[0]) - 1
+    first = np.concatenate(([0], np.cumsum(later)))  # row i's first pair number
+    for p0 in range(0, int(first[-1]), block):
+        p = np.arange(p0, min(p0 + block, int(first[-1])))
+        i = np.searchsorted(first, p, side="right") - 1
+        yield i, i + 1 + (p - first[i])
+
+
 def embedding_dup_pairs(
     vectors: DataFrame,
     dim: int,
@@ -553,32 +593,92 @@ def embedding_dup_pairs(
     """Embedding-cosine near-duplicate pairs (a < b, cosine >= threshold) —
     the semantic-dedup edge source, LSH-bucketed so it never goes O(N^2).
 
-    Each vector is hashed once: the SRP rows are grouped by (table_id,
-    bucket), every member of a bucket is paired with the later members of
-    its sorted member list (so a < b), and pairs colliding in several
-    tables are deduplicated. The vectors are attached to the candidates
-    by id and scored by the pair kernel (:func:`_pair_cosine`), which
-    emits only pairs at or above ``threshold``. Null vectors form no
-    pairs; a vector whose length is not ``dim`` raises a ValueError."""
-    sig = srp_signatures(vectors, dim, n_tables, n_bits, id_col, vec_col, seed)
-    members = (
-        sig.groupBy("table_id", "bucket")
-        .agg(F.sort_array(F.collect_list("vid")).alias("m"))
-        .filter(F.size("m") > 1)
-    )
-    cand = (
-        members.select("m", F.posexplode("m").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice("m", F.col("i") + 2, F.size("m") - F.col("i") - 1)
-            ).alias("b"),
+    One exchange, one scoring kernel: each vector is hashed once
+    (:func:`_srp_hasher`) into a row that carries the vector and its
+    whole bucket array, exploded to one row per (table_id, bucket),
+    repartitioned on (table_id, bucket) and sorted within partitions, so
+    every bucket is one contiguous run of rows. The scoring kernel
+    streams the runs — a run cut by an Arrow batch boundary is carried
+    into the next batch — and pairs each run's members block by block
+    (:func:`_run_pair_blocks`). A pair is kept only in the FIRST table
+    where the two bucket arrays agree, so a pair colliding in several
+    tables is emitted once with no dedup exchange; two rows of one id
+    form no pair. Kept pairs are scored by
+    :func:`_foldorder_pair_cosine` and emitted as (min id, max id,
+    cosine) when ``cosine >= threshold``. Memory per task: one Arrow
+    batch plus the open run.
+
+    Null vectors form no pairs; a vector whose length is not ``dim``
+    raises a ValueError naming its id."""
+
+    def srp_kernel(batches):
+        buckets_of = _srp_hasher(dim, n_tables, n_bits, seed)
+        for batch in batches:
+            batch, mat = _vector_matrix(batch, id_col, vec_col, dim)
+            flat = buckets_of(mat).ravel()
+            offsets = np.arange(0, flat.shape[0] + 1, n_tables, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [batch[id_col], pa.ListArray.from_arrays(offsets, flat), batch[vec_col]],
+                names=["vid", "buckets", "vec"],
+            )
+
+    def score_runs(vid, tab, bkt, bks, mat):
+        """Output batches of the pairs of complete bucket runs; rows are
+        sorted by (table_id, bucket, vid), so i < j means vid[i] <= vid[j]."""
+        n = vid.shape[0]
+        starts = np.flatnonzero(
+            np.concatenate(([True], (tab[1:] != tab[:-1]) | (bkt[1:] != bkt[:-1])))
         )
-        .filter(F.col("a") < F.col("b"))  # a repeated id pairs with itself
-        .dropDuplicates(["a", "b"])
+        run_end = np.repeat(np.append(starts[1:], n), np.diff(np.append(starts, n)))
+        norms = _foldorder_sq_norms(mat)
+        for i, j in _run_pair_blocks(run_end, _PAIR_BLOCK):
+            keep = (vid[i] != vid[j]) & ((bks[i] == bks[j]).argmax(axis=1) == tab[i])
+            i, j = i[keep], j[keep]
+            cos = _foldorder_pair_cosine(mat[i], mat[j], norms[i], norms[j])
+            hit = cos >= threshold
+            if hit.any():
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(vid[i[hit]]), pa.array(vid[j[hit]]), pa.array(cos[hit])],
+                    names=["a", "b", "cosine"],
+                )
+
+    def bucket_pair_kernel(batches):
+        carry = None  # columns of the run still open at the last batch's end
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            cols = (
+                np.asarray(batch["vid"]),
+                np.asarray(batch["table_id"]),
+                np.asarray(batch["bucket"]),
+                np.asarray(pc.list_flatten(batch["buckets"])).reshape(-1, n_tables),
+                np.asarray(pc.list_flatten(batch["vec"])).reshape(-1, dim),
+            )
+            if carry is not None:
+                cols = tuple(np.concatenate(c) for c in zip(carry, cols))
+            tab, bkt = cols[1], cols[2]
+            # the rows sharing the last row's bucket are a suffix: the open run
+            cut = int(np.argmax((tab == tab[-1]) & (bkt == bkt[-1])))
+            carry = tuple(c[cut:] for c in cols)
+            if cut:
+                yield from score_runs(*(c[:cut] for c in cols))
+        if carry is not None:
+            yield from score_runs(*carry)
+
+    rows = (
+        vectors.select(
+            F.col(id_col).cast("long").alias(id_col),
+            F.col(vec_col).cast("array<double>").alias(vec_col),
+        )
+        .mapInArrow(srp_kernel, "vid long, buckets array<long>, vec array<double>")
+        .select("vid", "buckets", "vec", F.posexplode("buckets").alias("table_id", "bucket"))
     )
-    v = vectors.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"))
-    pairs = cand.join(
-        v.select(F.col(id_col).alias("a"), F.col("_v").alias("_va")), "a"
-    ).join(v.select(F.col(id_col).alias("b"), F.col("_v").alias("_vb")), "b")
-    return _pair_cosine(pairs, "a", "b", dim, threshold)
+    # one scoring task per slot (DESIGN §4): a Python task's set-up cost
+    # does not shrink with its rows
+    slots = vectors.sparkSession.sparkContext.defaultParallelism
+    return (
+        rows.repartition(slots, "table_id", "bucket")
+        .sortWithinPartitions("table_id", "bucket", "vid")
+        .select("vid", "table_id", "bucket", "buckets", "vec")
+        .mapInArrow(bucket_pair_kernel, "a long, b long, cosine double")
+    )

@@ -6,14 +6,25 @@ Entries: ``run_pipeline``, and ``process_batch`` over two batches followed
 by ``current_clusters``; each under ``complete_hash`` False and True.
 Fixtures: an empty corpus, whitespace-only docs (ASCII and Unicode), two
 identical docs of exactly ``shingle_k`` bytes, and two identical docs of
-``shingle_k - 1`` bytes."""
+``shingle_k - 1`` bytes.
+
+``embedding_dup_pairs`` over an empty input, all-null vectors, a ragged
+vector and one hot bucket of identical vectors: each has a defined result
+or a named error."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
+from deduplicate_spark.functions.similarity import (
+    _PAIR_BLOCK,
+    _run_pair_blocks,
+    embedding_dup_pairs,
+)
 from deduplicate_spark.oracle import assemble_docs_pandas, oracle_dup_pairs
 from deduplicate_spark.pipeline import dup_pairs_from_clusters, run_pipeline
 from deduplicate_spark.schema import TRANSCRIPTS_SCHEMA
@@ -108,3 +119,52 @@ def test_oracle_follows_engine_empty_rule(spark, corpus, empty_cluster):
     found, expected = _pairs(res.clusters), _oracle(turns, cfg)
     assert found == expected
     assert (("ws_ascii_1", "ws_unicode_1") in expected) == empty_cluster
+
+
+EMB_DIM = 16  # sqrt(16) is exact, so identical vectors score exactly 1.0
+
+
+def _vectors(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_embedding_pairs_empty_input(spark):
+    out = embedding_dup_pairs(_vectors(spark, []), dim=EMB_DIM, threshold=-1.0)
+    assert out.schema.simpleString() == "struct<a:bigint,b:bigint,cosine:double>"
+    assert out.collect() == []
+
+
+def test_embedding_pairs_all_null_vectors(spark):
+    nulls = _vectors(spark, [(i, None) for i in range(6)])
+    assert embedding_dup_pairs(nulls, dim=EMB_DIM, threshold=-1.0).collect() == []
+
+
+def test_embedding_pairs_ragged_vector_raises(spark):
+    ragged = _vectors(spark, [(1, [1.0] * EMB_DIM), (2, [1.0] * (EMB_DIM - 1))])
+    with pytest.raises(
+        Exception,
+        match=f"ValueError: vector vec_id=2 has length {EMB_DIM - 1}, expected {EMB_DIM}",
+    ):
+        embedding_dup_pairs(ragged, dim=EMB_DIM).collect()
+
+
+def test_embedding_pairs_hot_bucket(spark):
+    # 2,000 identical vectors share one bucket in every table: the run
+    # spans Arrow batches, and each pair is emitted once, by table 0
+    n = 2000
+    hot = _vectors(spark, [(i, [1.0] * EMB_DIM) for i in range(n)])
+    got = (
+        embedding_dup_pairs(hot, dim=EMB_DIM)
+        .agg(
+            F.count("*").alias("rows"),
+            F.countDistinct("a", "b").alias("pairs"),
+            F.min(F.col("b") - F.col("a")).alias("gap"),
+            F.min("cosine").alias("cos"),
+        )
+        .first()
+    )
+    assert got.rows == got.pairs == n * (n - 1) // 2 == 1_999_000
+    assert got.gap >= 1 and got.cos == 1.0
+    # the run's pairs are made in bounded blocks, never all at once
+    sizes = [len(i) for i, _ in _run_pair_blocks(np.full(n, n), _PAIR_BLOCK)]
+    assert sum(sizes) == 1_999_000 and max(sizes) == _PAIR_BLOCK

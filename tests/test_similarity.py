@@ -259,8 +259,12 @@ def test_srp_paths_have_no_interpreted_cosine(vectors):
     for plan in (dup, ann):
         assert "zip_with" not in plan and "aggregate(" not in plan
         assert "lambdafunction" not in plan.lower()
-    # each vector is hashed once: one SRP kernel node, no self-join
+    # each vector is hashed once: one SRP kernel node. One repartition on
+    # (table_id, bucket) feeds the scoring kernel: no candidate dedup
+    # aggregate, no vector-attach join
     assert dup.count("srp_kernel") == 1
+    assert dup.count("Exchange") == 1
+    assert "Join" not in dup and "Aggregate" not in dup
 
 
 def test_null_vectors_form_no_pairs_or_neighbours(spark, vectors):
@@ -310,3 +314,36 @@ def test_query_collect_is_capped(vectors, monkeypatch):
     with pytest.raises(QuerySetTooLarge):
         ivf_topk(vectors, queries, n_cells=6, nprobe=2, k=2)
     assert brute_force_topk(vectors, queries.limit(4), k=2).count() == 8
+
+
+def test_pair_colliding_in_every_table_is_emitted_once(spark, vectors):
+    twins = spark.createDataFrame(
+        [(7001, [0.5] * DIM), (7002, [0.5] * DIM)], "vec_id long, embedding array<double>"
+    )
+    kw = dict(n_tables=12, n_bits=8)
+    sig = srp_signatures(twins, DIM, **kw).collect()
+    by_table = {}
+    for r in sig:
+        by_table.setdefault(r["table_id"], set()).add(r["bucket"])
+    assert len(by_table) == 12 and all(len(b) == 1 for b in by_table.values())
+    got = [
+        tuple(r)
+        for r in embedding_dup_pairs(vectors.unionByName(twins), dim=DIM, threshold=0.98, **kw)
+        .collect()
+        if r["a"] >= 7000
+    ]
+    assert got == [(7001, 7002, 1.0)]
+
+
+@pytest.mark.parametrize("block", [1, 7, 1 << 14])
+def test_run_pair_blocks_cover_each_run_pair_once(block):
+    # runs of 1, 4, 1 and 6 rows: every pair inside a run once, in bounded blocks
+    sizes = [1, 4, 1, 6]
+    starts = np.cumsum([0] + sizes[:-1])
+    run_end = np.repeat(starts + sizes, sizes)
+    got = []
+    for i, j in similarity._run_pair_blocks(run_end, block):
+        assert len(i) == len(j) <= block
+        got += list(zip(i.tolist(), j.tolist()))
+    want = [(i, j) for s, n in zip(starts, sizes) for i in range(s, s + n) for j in range(i + 1, s + n)]
+    assert got == want
