@@ -7,7 +7,7 @@ transcripts:
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)
       -> stage 0 assemble   (turns -> docs)                 operators/assembly.py
-      -> stage 1 exact      (sha groupBy cascade)           operators/exact.py
+      -> stage 1 exact      (sha groupBy cascade)           pipeline.exact_star_edges
       -> stage 2 minhash    (shingle + MinHash signatures)  operators/minhash.py
       -> stage 3 lsh        (banding -> candidate pairs)    operators/lsh.py
       -> stage 4 confirm    (SimHash hamming / LCS)         operators/simhash.py, operators/substring.py

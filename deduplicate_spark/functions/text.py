@@ -11,80 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# a compact fixed stopword list (language-id + quality heuristics)
-STOPWORDS_EN = (
-    "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
-    "that", "for", "on", "with", "as", "was", "at", "by", "be",
-)
-_STOP_RE = r"\b(" + "|".join(STOPWORDS_EN) + r")\b"
-
-
-def token_count(col: str | Column = "text") -> Column:
-    """Whitespace token count; 0 for empty/blank text."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.when(F.length(F.trim(c)) == 0, F.lit(0))
-        .otherwise(F.size(F.split(F.trim(c), r"\s+")))
-        .cast("long")
-    )
-
-
-def bpe_ish_token_count(col: str | Column = "text") -> Column:
-    """Sub-word-ish token estimate: splits on whitespace AND on
-    letter/digit/punct boundaries (a cheap BPE proxy — counts runs of
-    word chars, digits, and individual punctuation)."""
-    c = F.col(col) if isinstance(col, str) else col
-    # public regexp_extract_all API (PySpark 4) — no private _jc rendering,
-    # works under Spark Connect and for arbitrary column expressions
-    return F.coalesce(
-        F.size(F.regexp_extract_all(c, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), F.lit(0))),
-        F.lit(0),
-    ).cast("long")
-
-
-def stopword_count(col: str | Column = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(F.lower(c), F.lit(_STOP_RE)).cast("long")
-
-
-def stopword_ratio(col: str | Column = "text") -> Column:
-    return F.when(token_count(col) == 0, F.lit(0.0)).otherwise(
-        stopword_count(col) / token_count(col)
-    )
-
-
-def punct_ratio(col: str | Column = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(n_punct / F.length(c))
-
-
-def alpha_ratio(col: str | Column = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_alpha = F.length(F.regexp_replace(c, r"[^a-zA-Z]", ""))
-    return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(n_alpha / F.length(c))
-
-
-def mean_word_len(col: str | Column = "text") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    chars = F.length(F.regexp_replace(F.trim(c), r"\s+", ""))
-    return F.when(token_count(col) == 0, F.lit(0.0)).otherwise(chars / token_count(col))
-
-
-def quality_score(col: str | Column = "text") -> Column:
-    """Composite [0,1] quality heuristic: length, stopword presence,
-    punctuation sanity, alphabetic density. The standard pre-training
-    quality-filter shape (cf. C4/Gopher rules), all native."""
-    c = F.col(col) if isinstance(col, str) else col
-    len_ok = F.least(F.length(c) / F.lit(200.0), F.lit(1.0))  # saturates at 200 chars
-    stop_ok = F.least(stopword_ratio(col) / F.lit(0.2), F.lit(1.0))
-    punct_ok = F.lit(1.0) - F.least(punct_ratio(col) / F.lit(0.5), F.lit(1.0))
-    alpha_ok = alpha_ratio(col)
-    return (len_ok * 0.3 + stop_ok * 0.3 + punct_ok * 0.2 + alpha_ok * 0.2).alias(
-        "quality_score"
-    )
-
-
 # language-ID: n-gram marker heuristic. Real systems use fastText/CLD3 — not
 # in this container; this is the deterministic native-SQL stand-in with the
 # same column contract (text -> lang code).
@@ -94,15 +20,6 @@ _LANG_MARKERS = {
     "de": r"\b(der|die|das|und|ist|nicht)\b",
     "fr": r"\b(le|la|les|des|est|et)\b",
 }
-
-
-def lang_scores(col: str | Column = "text") -> Column:
-    """map<lang, count> of marker-word hits per language."""
-    c = F.col(col) if isinstance(col, str) else col
-    entries = []
-    for lang, pattern in _LANG_MARKERS.items():
-        entries.extend([F.lit(lang), F.regexp_count(F.lower(c), F.lit(pattern))])
-    return F.create_map(*entries)
 
 
 def lang_id(col: str | Column = "text") -> Column:

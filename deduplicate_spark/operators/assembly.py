@@ -27,8 +27,8 @@ from pyspark.sql import functions as F
 from deduplicate_spark.config import DedupConfig, EMPTY_SHA1
 
 PREFIX_CHARS = 1024  # beg_hash window size analog (dupe_analysis.py:19 chunk=1024)
-# joins a conversation's turn texts into its doc (batch assembly, the
-# streaming sessionizer and the oracle)
+# joins a conversation's turn texts into its doc (batch assembly and the
+# oracle)
 TURN_SEPARATOR = "\n"
 
 # every character str.isspace() accepts: the set str.strip() removes, which
@@ -90,16 +90,6 @@ def assemble_docs(turns: DataFrame, config: DedupConfig | None = None) -> DataFr
             F.size("turns").cast("int").alias("n_turns"),
         )
     )
-
-    return doc_hash_keys(assembled)
-
-
-def doc_hash_keys(assembled: DataFrame) -> DataFrame:
-    """(conv_id, doc_text, n_turns) -> + the cascade key columns. Shared by
-    batch assembly and the stateful-streaming sessionizer so both surfaces
-    produce BYTE-IDENTICAL keys for the same conversation (pinned by
-    tests/test_sessionize.py). Stateless projection — valid on a streaming
-    DataFrame."""
     empty = content_empty(F.col("doc_text"))
     return assembled.select(
         "conv_id",
@@ -119,34 +109,3 @@ def doc_hash_keys(assembled: DataFrame) -> DataFrame:
         .otherwise(F.sha1(F.encode(F.col("doc_text"), "UTF-8")))
         .alias("exact_sha"),
     )
-
-
-def empty_conversations(turns: DataFrame, config: DedupConfig | None = None) -> DataFrame:
-    """G6 analog (deduplicate.py:533-537; dupe_analysis.py:636-638): the
-    reference injects empty dirs as deletable objects. Here: conv_ids whose
-    rows are ALL excluded or all content-empty (:func:`content_empty`) —
-    they produce no dedup cluster but must still surface in reports as
-    droppable. Returns (conv_id, reason)."""
-    config = config or DedupConfig()
-    all_ids = turns.select("conv_id").distinct()
-    surviving = apply_excludes(turns, config).select("conv_id").distinct()
-    fully_excluded = all_ids.join(surviving, "conv_id", "left_anti").select(
-        "conv_id", F.lit("all_rows_excluded").alias("reason")
-    )
-    blank = (
-        apply_excludes(turns, config)
-        .groupBy("conv_id")
-        .agg(F.bool_and(content_empty(F.coalesce("text", F.lit("")))).alias("_blank"))
-        .filter("_blank")
-        .select("conv_id", F.lit("all_turns_blank").alias("reason"))
-    )
-    return fully_excluded.unionByName(blank)
-
-
-def debug_dump(docs: DataFrame) -> DataFrame:
-    """S11 analog (dupe_analysis.py:504-530): deterministic ordered dump of
-    the docs table for golden-test support."""
-    return docs.orderBy("conv_id").select(
-        "conv_id", "n_turns", "total_len", "prefix_sha", "exact_sha"
-    )
-

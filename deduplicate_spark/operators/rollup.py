@@ -38,50 +38,6 @@ def prefix_explode(df: DataFrame, id_col: str = "conv_id") -> DataFrame:
     )
 
 
-def dirs_adjacency(docs: DataFrame, id_col: str = "conv_id") -> DataFrame:
-    """F4 FULL analog — the reference's ``dirs`` adjacency table
-    (dirpath, subdir) (/root/reference/dupe_analysis.py:70-74, populated at
-    340-352): one distinct edge per parent-prefix -> child-prefix pair in
-    the conv_id path space, root prefix ''. Derived, not maintained: one
-    prefix explode + distinct replaces the reference's per-mkdir inserts."""
-    exploded = prefix_explode(docs.select(id_col), id_col)
-    parent = F.when(
-        F.col("group_prefix").contains("/"),
-        F.regexp_replace("group_prefix", "/[^/]*$", ""),
-    ).otherwise(F.lit(""))
-    return (
-        exploded.filter(F.col("group_prefix") != "")
-        .select(
-            parent.alias("dirpath"), F.col("group_prefix").alias("subdir")
-        )
-        .distinct()
-    )
-
-
-def dir_info(docs: DataFrame, directory: str, id_col: str = "conv_id") -> DataFrame:
-    """``get_dir_info`` analog (dupe_analysis.py:564-584): the DIRECT
-    children of ``directory`` — conv rows whose parent prefix is exactly it
-    (kind='file') and immediate sub-prefixes (kind='subdir'). One scan +
-    the adjacency edges; no recursive walk."""
-    depth = directory.count("/") + 1 if directory else 0
-    parts = F.split(F.col(id_col), "/")
-    files = (
-        docs.select(id_col)
-        .filter(F.size(parts) == depth + 1)
-        .filter(
-            F.col(id_col).startswith(directory + "/") if directory
-            else ~F.col(id_col).contains("/")
-        )
-        .select(F.col(id_col).alias("path"), F.lit("file").alias("kind"))
-    )
-    subdirs = (
-        dirs_adjacency(docs, id_col)
-        .filter(F.col("dirpath") == directory)
-        .select(F.col("subdir").alias("path"), F.lit("subdir").alias("kind"))
-    )
-    return files.unionByName(subdirs)
-
-
 def group_rollup(actions: DataFrame, docs: DataFrame) -> DataFrame:
     """A3/A4 analog: per-prefix duplicate statistics, all depths at once.
 
@@ -106,20 +62,3 @@ def group_rollup(actions: DataFrame, docs: DataFrame) -> DataFrame:
         ).alias("is_full_dupe"),
     )
 
-
-def write_report_csv(actions: DataFrame, path: str) -> None:
-    """S9 sink (deduplicate.py:691-718): the dupe_list.csv analog —
-    (to_delete, keep_group, keeper, freed_len). Distributed CSV write."""
-    (
-        actions.filter(F.col("action") == "delete")
-        .select(
-            F.col("conv_id").alias("to_delete"),
-            F.col("cluster_id").alias("keep_group"),
-            F.col("canonical_conv_id").alias("keeper"),
-            F.col("freed_len"),
-        )
-        .orderBy("keep_group", "to_delete")
-        .write.mode("overwrite")
-        .option("header", True)
-        .csv(path)
-    )

@@ -2,7 +2,8 @@
 
 The reference memoizes whole analyses in SQLite DBs keyed by
 sha1(sorted dir set) (/root/reference/dupe_analysis.py:38-43, 99-119) and
-reuses overlapping prior work greedily (125-157). The distributed analog:
+reuses overlapping prior work greedily (125-157). The distributed analog
+keeps the first and not the second (one store holds one input's stages):
 each pipeline stage writes a table keyed by (stage name, config hash, input
 fingerprint); a rerun with the same key skips the stage and reads the table
 back (S6), and per-stage lineage + metrics rows make the run auditable and
@@ -153,29 +154,3 @@ class CheckpointStore:
             "append"
         ).parquet(os.path.join(self.root, "_metrics.parquet"))
 
-
-def merge_runs(
-    spark: SparkSession, stores: list[CheckpointStore], stage: str
-) -> DataFrame:
-    """S8 analog (dupe_analysis.py:454-495): merge a stage's output across
-    prior runs — union + first-writer-wins on conv_id, where "first" is the
-    store's position in ``stores`` (earlier wins). Enforced via a priority
-    window, not dropDuplicates (which keeps an arbitrary row on an unordered
-    union). Downstream stages recompute only what the merged data
-    invalidates (their lineage keys change with the new input_key)."""
-    from functools import reduce
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    dfs = [
-        s.read(stage).withColumn("_store_priority", F.lit(i))
-        for i, s in enumerate(stores)
-    ]
-    merged = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
-    w = Window.partitionBy("conv_id").orderBy("_store_priority")
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_store_priority")
-    )

@@ -11,10 +11,11 @@
 
 Reads the transcripts table (parquet path or, when an Iceberg catalog is
 configured on the cluster, a table identifier), runs the full cascade, and
-writes clusters/, actions/, report/ under --output. With --checkpoint-root
-every stage is materialized + resumable; rerunning with --resume skips
-completed stages (lineage keyed by config hash + input fingerprint: the
-input files with their sizes and modification times).
+writes clusters/, actions/, report/ and rollup/ (per conv_id path prefix
+duplicate counts, the reference's whole-directory view) under --output.
+With --checkpoint-root every stage is materialized + resumable; rerunning
+with --resume skips completed stages (lineage keyed by config hash + input
+fingerprint: the input files with their sizes and modification times).
 
 The CLI surface mirrors the reference driver
 (/root/reference/deduplicate.py:731-746: --delete/--analyze/--synology) in
@@ -173,6 +174,7 @@ def main(argv: list[str] | None = None) -> None:
     from pyspark.sql import SparkSession
 
     from deduplicate_spark.config import DedupConfig
+    from deduplicate_spark.operators.rollup import group_rollup
     from deduplicate_spark.pipeline import run_pipeline
     from deduplicate_spark.session import CODEGEN_CONF
     from deduplicate_spark.sources.checkpoint import CheckpointStore
@@ -243,6 +245,9 @@ def main(argv: list[str] | None = None) -> None:
     if not args.analyze:
         result.actions.write.mode("overwrite").parquet(f"{args.output}/actions")
         result.report.write.mode("overwrite").parquet(f"{args.output}/report")
+        group_rollup(result.actions, result.docs).write.mode("overwrite").parquet(
+            f"{args.output}/rollup"
+        )
     wall = time.time() - t0
 
     if store is not None:

@@ -10,19 +10,29 @@ from deduplicate_spark.operators.assembly import apply_excludes, assemble_docs
 
 def test_turn_order_restored(spark):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
-    the BASELINE invariant. Turns arrive shuffled; doc must be in-order."""
+    the BASELINE invariant. Turns arrive shuffled; doc must be in-order.
+    A null turn text joins as "", and at one turn_idx a null text sorts
+    before a string (array_sort's struct order)."""
     rows = [
         ("c1", 2, "user", "third", "", None),
         ("c1", 0, "user", "first", "", None),
         ("c1", 1, "assistant", "second", "", None),
+        ("c2", 0, "user", None, "", None),
+        ("c2", 1, "user", "tail", "", None),
+        ("c3", 0, "user", "alpha", "", None),
+        ("c3", 0, "user", None, "", None),
+        ("c3", 1, "user", "tail", "", None),
     ]
     turns = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     ).repartition(3)
-    docs = assemble_docs(turns).collect()
-    assert docs[0]["doc_text"] == "first\nsecond\nthird"
-    assert docs[0]["n_turns"] == 3
-    assert docs[0]["total_len"] == len("first\nsecond\nthird")
+    docs = {r["conv_id"]: r for r in assemble_docs(turns).collect()}
+    assert docs["c1"]["doc_text"] == "first\nsecond\nthird"
+    assert docs["c1"]["n_turns"] == 3
+    assert docs["c1"]["total_len"] == len("first\nsecond\nthird")
+    assert docs["c2"]["doc_text"] == "\ntail"
+    assert docs["c3"]["doc_text"] == "\nalpha\ntail"
+    assert docs["c3"]["n_turns"] == 3
 
 
 def test_exact_sha_matches_python_sha1(spark):
@@ -111,36 +121,6 @@ def test_assembly_single_shuffle(spark):
     )
     plan = assemble_docs(turns)._jdf.queryExecution().executedPlan().toString()
     assert plan.lower().count("exchange") <= 1
-
-
-def test_empty_conversations(spark):
-    from deduplicate_spark.operators.assembly import empty_conversations
-
-    turns = spark.createDataFrame(
-        [
-            ("keep", 0, "user", "real text", "", None),
-            ("excl", 0, "system", "only excluded rows", "", None),
-            ("blank", 0, "user", "   ", "", None),
-            ("blank", 1, "user", "", "", None),
-        ],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    from deduplicate_spark.config import DedupConfig
-
-    cfg = DedupConfig(exclude_roles=("system",))
-    got = {(r["conv_id"], r["reason"]) for r in empty_conversations(turns, cfg).collect()}
-    assert got == {("excl", "all_rows_excluded"), ("blank", "all_turns_blank")}
-
-
-def test_debug_dump_ordered(spark):
-    from deduplicate_spark.operators.assembly import assemble_docs, debug_dump
-
-    turns = spark.createDataFrame(
-        [("b", 0, "user", "bb", "", None), ("a", 0, "user", "aa", "", None)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    rows = debug_dump(assemble_docs(turns)).collect()
-    assert [r["conv_id"] for r in rows] == ["a", "b"]
 
 
 def test_bucketed_input_assembly_needs_no_exchange(spark, tmp_path):

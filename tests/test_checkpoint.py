@@ -12,9 +12,10 @@ from pyspark.sql import functions as F
 
 from deduplicate_spark.config import DedupConfig
 from deduplicate_spark.datagen import generate_transcripts
+from deduplicate_spark.operators.rollup import group_rollup
 from deduplicate_spark.pipeline import run_pipeline
 from deduplicate_spark.schema import TRANSCRIPTS_SCHEMA
-from deduplicate_spark.sources.checkpoint import CheckpointStore, merge_runs
+from deduplicate_spark.sources.checkpoint import CheckpointStore
 
 
 @pytest.fixture()
@@ -153,6 +154,10 @@ def test_job_without_resume_recomputes_every_stage(spark, tmp_path, monkeypatch)
     clean = run_pipeline(spark, spark.read.parquet(turns_path), DedupConfig())
     clean_b = {tuple(r) for r in clean.clusters.collect()}
     assert got == clean_b
+    # the whole-directory view: per-prefix rollup of the same run
+    rollup = {tuple(r) for r in spark.read.parquet(str(tmp_path / "out_b" / "rollup")).collect()}
+    assert rollup == {tuple(r) for r in group_rollup(clean.actions, clean.docs).collect()}
+    assert rollup
 
     # the store holds corpus A again; --resume after corpus B is written
     write_corpus(1)
@@ -190,126 +195,6 @@ def test_store_run_records_bucket_stats(spark, turns_df, tmp_path):
     row = mt.filter("stage = 'lsh_bucket_stats'").first()
     assert row is not None
     assert json.loads(row.extra)["n_star_fallback"] is not None
-
-
-def test_merge_runs_first_writer_wins(spark, tmp_path):
-    s1 = CheckpointStore(spark, str(tmp_path / "r1"), "cfg", "in1")
-    s2 = CheckpointStore(spark, str(tmp_path / "r2"), "cfg", "in2")
-    s1.stage("docs", spark.createDataFrame([("a", 1), ("b", 1)], "conv_id string, v int"))
-    s2.stage("docs", spark.createDataFrame([("b", 2), ("c", 2)], "conv_id string, v int"))
-    merged = merge_runs(spark, [s1, s2], "docs")
-    assert merged.count() == 3
-    assert merged.select("conv_id").distinct().count() == 3
-
-
-def test_reuse_planner(spark, tmp_path):
-    """S7 analog: second request over {b1, b2, b3} reuses b1/b2 stage
-    outputs and computes only b3."""
-    from deduplicate_spark.sources.reuse import plan_and_load
-
-    root = str(tmp_path / "batches")
-
-    def compute(df):
-        return df.withColumn("doubled", F.col("v") * 2)
-
-    b1 = spark.createDataFrame([("a", 1)], "conv_id string, v int")
-    b2 = spark.createDataFrame([("b", 2)], "conv_id string, v int")
-    out1, plan1 = plan_and_load(spark, root, "cfg", "docs", {"b1": b1, "b2": b2}, compute)
-    assert plan1.computed == ["b1", "b2"] and plan1.reused == []
-    assert out1.count() == 2
-
-    b3 = spark.createDataFrame([("c", 3)], "conv_id string, v int")
-    out2, plan2 = plan_and_load(
-        spark, root, "cfg", "docs", {"b1": None, "b2": None, "b3": b3}, compute
-    )
-    assert plan2.reused == ["b1", "b2"]
-    assert plan2.computed == ["b3"]
-    assert out2.count() == 3
-    assert {r["doubled"] for r in out2.collect()} == {2, 4, 6}
-
-
-def test_subset_reuse_planner_greedy_combination_search(spark, tmp_path):
-    """Full S7 analog (dupe_analysis.py:125-157): a request over {A,B,C}
-    finds the prior {A,B} combined store via the largest-first combination
-    sweep, computes only C, and saves the merged result under the full-set
-    key so the third request is a pure load."""
-    from pyspark.sql import functions as F
-
-    from deduplicate_spark.sources.reuse import plan_and_load_subsets
-
-    root = str(tmp_path / "subset_reuse")
-    mk = lambda pfx, n: spark.createDataFrame(  # noqa: E731
-        [(f"{pfx}/{i}", len(pfx) * 10 + i) for i in range(n)],
-        "conv_id string, total_len int",
-    )
-    batches2 = {"A": mk("A", 3), "B": mk("B", 4)}
-    computed_log = []
-
-    def compute(df):
-        computed_log.append(1)
-        return df.withColumn("stage_col", F.lit("v1"))
-
-    out1, plan1 = plan_and_load_subsets(spark, root, "cfg", "docs", batches2, compute)
-    assert sorted(plan1.computed) == ["A", "B"] and out1.count() == 7
-    assert len(computed_log) == 2
-
-    # request a superset: {A,B} must be found AS A SET (one combined store),
-    # only C computed
-    batches3 = {"A": None, "B": None, "C": mk("C", 5)}
-    out2, plan2 = plan_and_load_subsets(spark, root, "cfg", "docs", batches3, compute)
-    assert plan2.reused == ["A+B"]
-    assert plan2.computed == ["C"]
-    assert len(computed_log) == 3
-    assert out2.count() == 12
-
-    # identical request again: pure full-set load, zero compute
-    out3, plan3 = plan_and_load_subsets(spark, root, "cfg", "docs", batches3, compute)
-    assert plan3.reused == ["A+B+C"] and plan3.computed == []
-    assert len(computed_log) == 3
-    assert out3.count() == 12
-    assert {r.conv_id for r in out3.collect()} == {r.conv_id for r in out2.collect()}
-
-
-def test_subset_reuse_rescans_at_same_size(spark, tmp_path):
-    """ADVICE r3: prior {A,B} and {C,D} stores must BOTH be reused for a
-    {A,B,C,D} request — the sweep re-scans at the same size after a hit
-    instead of decrementing (deliberate deviation from the reference loop,
-    which would recompute C and D)."""
-    from pyspark.sql import functions as F
-
-    from deduplicate_spark.sources.reuse import plan_and_load_subsets
-
-    root = str(tmp_path / "subset_rescan")
-    mk = lambda pfx, n: spark.createDataFrame(  # noqa: E731
-        [(f"{pfx}/{i}", len(pfx) * 10 + i) for i in range(n)],
-        "conv_id string, total_len int",
-    )
-    computed_log = []
-
-    def compute(df):
-        computed_log.append(1)
-        return df.withColumn("stage_col", F.lit("v1"))
-
-    plan_and_load_subsets(
-        spark, root, "cfg", "docs", {"A": mk("A", 2), "B": mk("B", 3)}, compute
-    )
-    plan_and_load_subsets(
-        spark, root, "cfg", "docs", {"C": mk("C", 4), "D": mk("D", 5)}, compute
-    )
-    assert len(computed_log) == 4
-
-    out, plan = plan_and_load_subsets(
-        spark,
-        root,
-        "cfg",
-        "docs",
-        {"A": None, "B": None, "C": None, "D": None},
-        compute,
-    )
-    assert sorted(plan.reused) == ["A+B", "C+D"]
-    assert plan.computed == []
-    assert len(computed_log) == 4  # nothing recomputed
-    assert out.count() == 14
 
 
 def test_config_hash_ignores_physical_knobs():

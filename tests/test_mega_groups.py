@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from deduplicate_spark.operators.exact import exact_clusters
 from deduplicate_spark.operators.resolve import elect_canonical
 from deduplicate_spark.operators.skew import salted_struct_min
 from deduplicate_spark.pipeline import (
@@ -79,23 +78,6 @@ def test_exact_star_edges_mega_group(spark):
     assert got.n == N_MEGA - 1  # star to the min member, linear not clique
     sample = salted.filter(F.col("b") == "c0099999").collect()
     assert [(r.a, r.b) for r in sample] == [("c0000000", "c0099999")]
-
-
-def test_exact_clusters_mega_group(spark):
-    docs = _mega_docs(spark)
-    salted = exact_clusters(docs, salt_buckets=16)
-    _assert_skew_safe(salted)
-    # the hot group is one cluster named by its minimum id; solos drop out
-    expected = spark.range(N_MEGA).select(
-        F.format_string("c%07d", F.col("id")).alias("conv_id"),
-        F.lit("c0000000").alias("cluster_id"),
-    )
-    snap = lambda d: d.agg(  # noqa: E731
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("conv_id", "cluster_id")).alias("h"),
-    ).first()
-    assert snap(salted) == snap(expected)
-    assert snap(salted).n == N_MEGA
 
 
 def test_exact_representatives_mega_group(spark):

@@ -1,10 +1,6 @@
 from __future__ import annotations
 
-import glob
-
-from pyspark.sql import functions as F
-
-from deduplicate_spark.operators.rollup import group_rollup, prefix_explode, write_report_csv
+from deduplicate_spark.operators.rollup import group_rollup, prefix_explode
 
 
 def test_prefix_explode(spark):
@@ -56,34 +52,3 @@ def test_group_rollup(spark):
     assert rows["s2/sub"]["n_members"] == 1
     # full-dupe flag: a prefix whose every member is clustered
     assert rows["s2"]["is_full_dupe"] is False
-
-
-def test_write_report_csv(spark, tmp_path):
-    docs, actions = _fixture(spark)
-    out = str(tmp_path / "report_csv")
-    write_report_csv(actions, out)
-    files = glob.glob(f"{out}/*.csv")
-    assert files
-    content = "".join(open(f).read() for f in files)
-    assert "to_delete" in content
-    assert "s2/a" in content
-
-
-def test_dirs_adjacency_and_dir_info(spark):
-    """F4 full analog: the (dirpath, subdir) adjacency table and the
-    get_dir_info direct-children query (dupe_analysis.py:70-74, 564-584)."""
-    from deduplicate_spark.operators.rollup import dir_info, dirs_adjacency
-
-    docs = spark.createDataFrame(
-        [("a/x/1",), ("a/x/2",), ("a/y/3",), ("b/4",), ("root5",)],
-        "conv_id string",
-    )
-    edges = {(r.dirpath, r.subdir) for r in dirs_adjacency(docs).collect()}
-    assert edges == {("", "a"), ("", "b"), ("a", "a/x"), ("a", "a/y")}
-
-    info_a = {(r.path, r.kind) for r in dir_info(docs, "a").collect()}
-    assert info_a == {("a/x", "subdir"), ("a/y", "subdir")}
-    info_ax = {(r.path, r.kind) for r in dir_info(docs, "a/x").collect()}
-    assert info_ax == {("a/x/1", "file"), ("a/x/2", "file")}
-    info_root = {(r.path, r.kind) for r in dir_info(docs, "").collect()}
-    assert info_root == {("root5", "file"), ("a", "subdir"), ("b", "subdir")}

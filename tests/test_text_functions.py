@@ -1,49 +1,10 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from deduplicate_spark.functions import text as TX
 
 
 def _df(spark, rows):
     return spark.createDataFrame([(r,) for r in rows], "text string")
-
-
-def test_token_count(spark):
-    df = _df(spark, ["one two three", "", "   ", "single"])
-    got = [r[0] for r in df.select(TX.token_count("text")).collect()]
-    assert got == [3, 0, 0, 1]
-
-
-def test_bpe_ish_token_count(spark):
-    df = _df(spark, ["hello, world! x2", ""])
-    got = [r[0] for r in df.select(TX.bpe_ish_token_count("text")).collect()]
-    # hello , world ! x 2 -> 6
-    assert got[0] == 6
-    assert got[1] == 0
-
-
-def test_stopword_and_ratios(spark):
-    df = _df(spark, ["the cat sat on the mat"])
-    row = df.select(
-        TX.stopword_count("text").alias("sc"),
-        F.round(TX.stopword_ratio("text"), 4).alias("sr"),
-        F.round(TX.punct_ratio("text"), 4).alias("pr"),
-        F.round(TX.alpha_ratio("text"), 4).alias("ar"),
-    ).collect()[0]
-    assert row["sc"] == 3  # the, on, the
-    assert abs(row["sr"] - 3 / 6) < 1e-9
-    assert row["pr"] == 0.0
-    assert row["ar"] > 0.7
-
-
-def test_quality_score_ordering(spark):
-    good = "the quick brown fox jumps over a lazy dog and runs to the hill " * 4
-    bad = "@@@ ### !!! $$$ %%% ^^^"
-    df = _df(spark, [good, bad])
-    scores = [r[0] for r in df.select(TX.quality_score("text")).collect()]
-    assert scores[0] > scores[1]
-    assert 0.0 <= scores[1] <= scores[0] <= 1.0
 
 
 def test_lang_id(spark):
